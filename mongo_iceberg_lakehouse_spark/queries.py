@@ -60,9 +60,7 @@ def register(name: str, oracle: str | None, doc: str = ""):
     return deco
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    tune(spark)
-    return load_table(spark, sf_dir, name)
+_t = load_table
 
 
 # ---------------------------------------------------------------------------

@@ -39,24 +39,20 @@ import shutil
 from pyspark.sql import SparkSession
 
 from .snapshots import (
+    _data_dir,
     _manifest_dir,
-    _resolve_path,
+    _version_paths,
     commit_version,
-    read_snapshot,
     snapshot_versions,
 )
+from .tables import _parquet_files, read_parquet
 
 
 def _dir_stats(path: str) -> tuple[int, int]:
     """(parquet file count, total bytes) of a version directory — pure
     filesystem stat."""
-    n = total = 0
-    for root, _dirs, files in os.walk(path):
-        for fn in files:
-            if fn.endswith(".parquet"):
-                n += 1
-                total += os.path.getsize(os.path.join(root, fn))
-    return n, total
+    files = _parquet_files(path) if os.path.isdir(path) else []
+    return len(files), sum(os.path.getsize(f) for f in files)
 
 
 def compact_snapshot(
@@ -74,19 +70,20 @@ def compact_snapshot(
     snapshot outgrows it — the sf100 orders snapshot is ~2 GiB). Returns
     the maintenance facts: files/bytes before and after, the new version
     number."""
-    versions = snapshot_versions(spark, base, table)
-    if not versions:
+    paths = _version_paths(base, table)
+    if not paths:
         raise ValueError(f"no committed snapshots for {table!r}")
-    src_version = versions[-1] if version is None else version
-    src_path = _resolve_path(spark, base, table, src_version)
+    src_version = max(paths) if version is None else version
+    if src_version not in paths:
+        raise ValueError(f"version {src_version} has no manifest for {table!r}")
+    src_path = paths[src_version]
     files_before, bytes_before = _dir_stats(src_path)
     if target_bytes is None:
         target_bytes = max(1, bytes_before)
     n_files = max(1, -(-bytes_before // max(1, target_bytes)))  # ceil
-    df = read_snapshot(spark, base, table, src_version).coalesce(int(n_files))
-    from .snapshots import _data_dir
+    df = read_parquet(spark, src_path).coalesce(int(n_files))
 
-    new_version = versions[-1] + 1
+    new_version = max(paths) + 1
     staged = _data_dir(base, table, new_version)
     df.write.mode("errorifexists").parquet(staged)
     commit_version(spark, base, table, new_version, staged)
@@ -110,13 +107,13 @@ def expire_snapshots(
     were expired and which remain."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    versions = snapshot_versions(spark, base, table)
+    # resolve data paths BEFORE touching manifests
+    paths = _version_paths(base, table)
+    versions = sorted(paths)
     expired = versions[:-keep_last]
     if not expired:
         return {"expired": [], "remaining": versions, "bytes_reclaimed": 0}
     expired_set = set(expired)
-    # resolve data paths BEFORE touching manifests
-    paths = {v: _resolve_path(spark, base, table, v) for v in expired}
     mdir = _manifest_dir(base, table)
     import pyarrow.parquet as pq
 
@@ -168,12 +165,7 @@ def remove_orphan_files(
     import time
 
     tdir = os.path.join(base, table)
-    referenced = set()
-    for v in snapshot_versions(spark, base, table):
-        try:
-            referenced.add(os.path.normpath(_resolve_path(spark, base, table, v)))
-        except ValueError:
-            pass
+    referenced = {os.path.normpath(p) for p in _version_paths(base, table).values()}
     removed = 0
     reclaimed = 0
     now = time.time()

@@ -23,10 +23,12 @@ without the Iceberg runtime jar:
 With the Iceberg jar present, ``sources/connectors.py`` swaps in real
 ``VERSION AS OF`` reads; the API here is shaped to match.
 
-Scale notes: version directories are plain partition-pruned parquet reads;
-manifests are tiny single-row files, so listing versions scans KBs, not the
-data. Writers never mutate existing files => concurrent readers at any
-version are consistent without locks.
+Scale notes: version directories are plain partition-pruned parquet reads
+whose inferred schema is cached (``tables.read_parquet``). Manifests are
+tiny single-row files read on the driver with pyarrow, so listing versions
+or resolving a path reads KBs and launches no Spark job (a Spark read of
+``_manifests/`` cost 2 jobs per call). Writers never mutate existing files
+=> concurrent readers at any version are consistent without locks.
 """
 
 from __future__ import annotations
@@ -35,6 +37,8 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .tables import read_parquet
 
 
 def _manifest_dir(base: str, table: str) -> str:
@@ -48,29 +52,52 @@ def _data_dir(base: str, table: str, version: int) -> str:
     return os.path.join(base, table, f"v={version}-{uuid.uuid4().hex[:12]}")
 
 
-def _manifest_rows(spark: SparkSession, base: str, table: str) -> list:
+def _manifest_rows(base: str, table: str) -> list[tuple[int, str]]:
+    """Every committed (version, path) row, read on the driver from the
+    manifest footers and pages (KBs, no Spark job). Spark's ``_SUCCESS``,
+    ``.crc`` and ``_temporary`` entries are skipped, as Spark's own reader
+    skips them; a missing directory means no versions."""
+    import pyarrow.parquet as pq
+
+    mdir = _manifest_dir(base, table)
     try:
-        return spark.read.parquet(_manifest_dir(base, table)).collect()
-    except Exception:
+        names = sorted(os.listdir(mdir))
+    except OSError:
         return []
+    rows = []
+    for fn in names:
+        if fn.startswith(("_", ".")) or not fn.endswith(".parquet"):
+            continue
+        try:
+            t = pq.read_table(os.path.join(mdir, fn), columns=["version", "path"])
+        except FileNotFoundError:
+            continue  # expired by a concurrent expire_snapshots
+        rows += zip(t["version"].to_pylist(), t["path"].to_pylist())
+    return rows
+
+
+def _version_paths(base: str, table: str) -> dict[int, str]:
+    """version -> data path, from one manifest read. If racing writers
+    committed the same version, the smallest path wins, deterministically."""
+    paths: dict[int, str] = {}
+    for version, path in _manifest_rows(base, table):
+        v = int(version)
+        if v not in paths or path < paths[v]:
+            paths[v] = path
+    return paths
 
 
 def snapshot_versions(spark: SparkSession, base: str, table: str) -> list[int]:
     """Committed versions, ascending (empty if the table doesn't exist)."""
-    return sorted({int(r["version"]) for r in _manifest_rows(spark, base, table)})
+    return sorted(_version_paths(base, table))
 
 
 def _resolve_path(spark: SparkSession, base: str, table: str, version: int) -> str:
-    """The data path a committed version's manifest names (min-path wins on
-    a duplicate-version race, deterministically)."""
-    paths = [
-        r["path"]
-        for r in _manifest_rows(spark, base, table)
-        if int(r["version"]) == version
-    ]
-    if not paths:
+    """The data path a committed version's manifest names."""
+    path = _version_paths(base, table).get(version)
+    if path is None:
         raise ValueError(f"version {version} has no manifest for {table!r}")
-    return min(paths)
+    return path
 
 
 def commit_version(
@@ -100,11 +127,11 @@ def read_snapshot(
     spark: SparkSession, base: str, table: str, version: int | None = None
 ) -> DataFrame:
     """Time-travel read: ``version`` (or the latest committed one)."""
-    versions = snapshot_versions(spark, base, table)
-    if not versions:
+    paths = _version_paths(base, table)
+    if not paths:
         raise ValueError(f"no committed snapshots for {table!r} under {base!r}")
     if version is None:
-        version = versions[-1]
-    if version not in versions:
-        raise ValueError(f"version {version} not in {versions} for {table!r}")
-    return spark.read.parquet(_resolve_path(spark, base, table, version))
+        version = max(paths)
+    if version not in paths:
+        raise ValueError(f"version {version} not in {sorted(paths)} for {table!r}")
+    return read_parquet(spark, paths[version])

@@ -8,6 +8,10 @@ rejects outright ([PARQUET_TYPE_ILLEGAL]); we read nanos as a long
 (``spark.sql.legacy.parquet.nanosAsLong``) and truncate to microseconds,
 matching DuckDB's ``CAST(ts AS TIMESTAMP)`` truncation — this keeps the
 correctness oracle bit-identical on timestamp values.
+
+Every table read goes through ``read_parquet``, which infers a file's
+schema (a Spark job) once and reuses it while the file and the inference
+confs are unchanged, so building a query over known tables runs no job.
 """
 
 from __future__ import annotations
@@ -16,12 +20,24 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 
 from ..session import tune
 
 # (sf_dir, table) -> exact row count, from parquet footer metadata.
 _ROWCOUNT_CACHE: dict[tuple[str, str], int] = {}
+
+# abspath -> (inference key, inferred schema); see read_parquet.
+_SCHEMA_CACHE: dict[str, tuple[tuple, StructType]] = {}
+_SCHEMA_CACHE_MAX = 1024
+
+# Session confs that change what parquet schema inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.caseSensitive",
+)
 
 # sf_dirs whose statistics have already sized this process's shuffle
 # partitions (autosize is only-raise, so one pass per dir suffices).
@@ -51,10 +67,62 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    return _read_events(spark, sf_dir)
+
+
+def _read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``load_events`` for a session whose confs are already tuned."""
+    df = read_parquet(spark, f"{sf_dir}/events.parquet")
     if isinstance(df.schema["ts"].dataType, LongType):
         # `ts div 1000` truncates ns -> us exactly like DuckDB's CAST
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df
+
+
+def _parquet_files(path: str) -> list[str]:
+    """The parquet data files of a single file or a Spark-written
+    directory of part files."""
+    if not os.path.isdir(path):
+        return [path]
+    return [
+        os.path.join(root, fn)
+        for root, _dirs, files in os.walk(path)
+        for fn in files
+        if fn.endswith(".parquet")
+    ]
+
+
+def _content_signature(path: str) -> int | None:
+    """Hash of the sizes and mtimes of ``path``'s parquet files; None when
+    ``path`` is not on the local filesystem (URIs, globs)."""
+    try:
+        stats = [(f, os.stat(f)) for f in _parquet_files(path)]
+    except OSError:
+        return None
+    return hash(tuple((f, st.st_size, st.st_mtime_ns) for f, st in sorted(stats)))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job on
+    repeat reads.
+
+    Inference reads a footer through a Spark job. Its result is cached per
+    path, keyed by the files' sizes and mtimes and by the confs that change
+    inference, so a rewritten file or a flipped conf infers afresh. Only
+    the ``StructType`` is cached, never a DataFrame: each call builds a
+    fresh relation with fresh exprIds, so self-joins stay unambiguous."""
+    sig = _content_signature(path)
+    if sig is None:
+        return spark.read.parquet(path)
+    key = (sig, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    apath = os.path.abspath(path)
+    hit = _SCHEMA_CACHE.get(apath)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if len(_SCHEMA_CACHE) >= _SCHEMA_CACHE_MAX:
+        _SCHEMA_CACHE.clear()  # snapshot stores mint a path per version
+    _SCHEMA_CACHE[apath] = (key, df.schema)
     return df
 
 
@@ -72,17 +140,9 @@ def table_rowcount(sf_dir: str, name: str) -> int:
         import pyarrow.parquet as pq
 
         path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.isdir(path):
-            total = 0
-            for root, _dirs, files in os.walk(path):
-                for fn in files:
-                    if fn.endswith(".parquet"):
-                        total += pq.ParquetFile(
-                            os.path.join(root, fn)
-                        ).metadata.num_rows
-        else:
-            total = pq.ParquetFile(path).metadata.num_rows
-        _ROWCOUNT_CACHE[key] = total
+        _ROWCOUNT_CACHE[key] = sum(
+            pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(path)
+        )
     return _ROWCOUNT_CACHE[key]
 
 
@@ -92,15 +152,8 @@ def table_bytes(sf_dir: str, name: str) -> int:
     Spark job. At cluster scale the same statistic comes from the table
     format's manifest (Iceberg ``total-files-size``)."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):
-        total = 0
-        for root, _dirs, files in os.walk(path):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    total += os.path.getsize(os.path.join(root, fn))
-        return total
     try:
-        return os.path.getsize(path)
+        return sum(os.path.getsize(f) for f in _parquet_files(path))
     except OSError:
         return 0
 
@@ -141,8 +194,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     tune(spark)
     autosize_shuffle_partitions(spark, sf_dir)
     if name == "events":
-        return load_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        return _read_events(spark, sf_dir)
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def load_tables(

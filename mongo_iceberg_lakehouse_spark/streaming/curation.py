@@ -27,9 +27,10 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the documents fixture (schema probed via the
     batch reader — streaming requires a declared schema)."""
     from ..session import tune
+    from ..sources.tables import read_parquet
 
     tune(spark)
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = read_parquet(spark, f"{sf_dir}/documents.parquet").schema
     return (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -169,9 +170,10 @@ def read_embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the embeddings fixture (schema probed via
     the batch reader — streaming requires a declared schema)."""
     from ..session import tune
+    from ..sources.tables import read_parquet
 
     tune(spark)
-    schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
+    schema = read_parquet(spark, f"{sf_dir}/embeddings.parquet").schema
     return (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "embeddings.parquet")

@@ -71,12 +71,11 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``spark.sql.session.timeZone=UTC`` would shift window boundaries and
     hour extraction relative to the oracle."""
     from ..session import tune
+    from ..sources.tables import read_parquet
 
     tune(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     # Probe the footer via the batch reader: streaming needs a declared schema.
-    ts_type = spark.read.parquet(f"{sf_dir}/events.parquet").schema["ts"].dataType
+    ts_type = read_parquet(spark, f"{sf_dir}/events.parquet").schema["ts"].dataType
     raw = (
         spark.readStream.schema(_events_raw_schema(ts_type))
         .option("pathGlobFilter", "events.parquet")

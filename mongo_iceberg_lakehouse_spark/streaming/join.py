@@ -161,11 +161,13 @@ def run_stream_static_segment_counts(
     """
     from pyspark.sql.functions import broadcast
 
+    from ..sources.tables import read_parquet
+
     for q in spark.streams.active:
         if q.name == query_name:
             q.stop()
     events = read_events_stream(spark, sf_dir)
-    customers = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+    customers = read_parquet(spark, f"{sf_dir}/customer.parquet").select(
         "c_custkey", "c_mktsegment"
     )
     enriched = events.join(

@@ -63,9 +63,10 @@ def run_gold_report_to_jdbc(spark, sf_dir: str) -> "object":
         derby_shutdown,
         read_jdbc,
     )
+    from ..sources.tables import read_parquet
 
     orders_path = f"{sf_dir}/orders.parquet"
-    schema = spark.read.parquet(orders_path).schema
+    schema = read_parquet(spark, orders_path).schema
     # file-source streams take a DIRECTORY; glob down to the one fixture
     # file (same pattern as events.read_events_stream)
     stream = (
@@ -82,7 +83,7 @@ def run_gold_report_to_jdbc(spark, sf_dir: str) -> "object":
     if not derby_embedded_available(spark):  # pragma: no cover
         # jar-less fallback: same values through the batch plan
         return (
-            spark.read.parquet(orders_path)
+            read_parquet(spark, orders_path)
             .groupBy("o_orderstatus")
             .agg(
                 F.count(F.lit(1)).alias("n_orders"),

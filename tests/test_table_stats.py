@@ -39,9 +39,10 @@ def test_table_rowcount_is_cached(spark):
 
 def test_sizing_runs_no_count_job(spark, monkeypatch):
     # The precise pin: building each auto-sized query plan must never
-    # call DataFrame.count() (the old sizing job). Parquet schema
-    # inference and the IVF's bounded centroid-sample collect are the
-    # only legitimate build-time actions and neither goes through count.
+    # call DataFrame.count() (the old sizing job). The IVF's bounded
+    # centroid-sample collect is a legitimate build-time action and does
+    # not go through count; parquet schema inference is a build-time job
+    # only on a table's first read (sources.tables.read_parquet caches it).
     from pyspark.sql import DataFrame
 
     def boom(self):
