@@ -22,35 +22,13 @@ functions + shuffles on bounded keys:
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.expr import let_
-
-
-def _ckpt_grams() -> bool:
-    """r11 re-adjudication of the r5 'recompute beats store' decision for
-    the shingle-pipeline family (jaccard_join / jaccard_cross_best_match /
-    containment_join). The r10 verdict (item 3) asked whether the r5 loss
-    was an artifact of EAGER-storing wide gram arrays; this arm stores the
-    slim hashed (id, gram-long-array) rows with a LAZY localCheckpoint
-    instead (materialized by the query's own action, no extra job),
-    cutting 2-3 executions of tokenize+shingle+xxhash plus one
-    freq-join+collect_list aggregation per action.
-
-    Measured (interleaved same-session A/Bs, min-of-reps): the cut LOSES
-    again — sf1 cross-corpus 4.36 s recompute vs 5.26 s stored, sf1
-    containment 5.08 vs 6.88, sf0.1 containment 2.44 vs 3.07, exact-pairs
-    a wash at both scales. Recompute is a narrow codegen map pipelined
-    into each consumer; the checkpoint inserts a materialization barrier
-    and pays serialize+reread of the gram arrays, which exceeds the saved
-    hashing at every measured decade. Default therefore stays OFF
-    (recompute); the env gate remains for the next decade's re-test
-    (SPARK_GRAFT_JACCARD_CKPT=1)."""
-    return os.environ.get("SPARK_GRAFT_JACCARD_CKPT", "0") == "1"
+from ..session import spread
 
 
 def window_dedup(
@@ -254,10 +232,7 @@ def _pair_value_join(
         joined = src.join(F.broadcast(sides), src[id_col] == sides["id"]).select(
             "id_a", "id_b", "side", F.col(text_col).alias("__v")
         )
-        if os.environ.get("SPARK_GRAFT_PAIR_HASHPART", "1") != "0":
-            joined = joined.repartition(par, "id_a", "id_b")
-        else:  # pre-r11 round-robin arm (A/B baseline)
-            joined = joined.repartition(par)
+        joined = joined.repartition(par, "id_a", "id_b")
         for step in value_steps:
             joined = joined.select(
                 "id_a", "id_b", "side", step(F.col("__v")).alias("__v")
@@ -270,9 +245,9 @@ def _pair_value_join(
                 F.when(F.col("side") == "b", F.col("__v")), ignorenulls=True
             ).alias("val_b"),
         )
-    tbl = src.select(F.col(id_col).alias("id"), F.col(text_col).alias("__v"))
-    if tbl.rdd.getNumPartitions() < par:
-        tbl = tbl.repartition(par)
+    tbl = spread(
+        src.select(F.col(id_col).alias("id"), F.col(text_col).alias("__v"))
+    )
     for step in value_steps:
         tbl = tbl.select("id", step(F.col("__v")).alias("__v"))
     return cand.join(
@@ -368,7 +343,6 @@ def minhash_lsh_pairs(
     bands: int = 16,
     shingle_n: int = 3,
     jaccard_threshold: float = 0.8,
-    verify_broadcast: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b, exact shingle-Jaccard >= threshold).
 
@@ -379,15 +353,12 @@ def minhash_lsh_pairs(
     exact-Jaccard verification computes DISTINCT shingles only for documents
     that appear in a candidate pair. No cross join at any stage.
 
-    Verify stage (``verify_broadcast=True``, the default): the candidate id
-    set is broadcast into ONE semi-join scan of the corpus, shingles are
-    hashed for just those documents, and the two sides of each pair meet in
-    a groupBy over ~2x|candidates| rows — the corpus text is scanned once
-    and full shingle arrays never shuffle. The broadcast is bounded by the
-    candidate volume (itself bounded by the ``max_bucket`` degenerate-band
-    guard); at extreme near-dup rates where candidate ids outgrow a
-    broadcast, pass ``verify_broadcast=False`` to fall back to plain
-    shuffle joins of the pair list against the corpus.
+    Verify stage: the candidate id set is broadcast into ONE semi-join scan
+    of the corpus, shingles are hashed for just those documents, and the
+    two sides of each pair meet in a groupBy over ~2x|candidates| rows —
+    the corpus text is scanned once and full shingle arrays never shuffle.
+    The broadcast is bounded by the candidate volume (itself bounded by the
+    ``max_bucket`` degenerate-band guard).
     """
     # CPU-bound signature stage: spread across all cores even when the source
     # is a single small file (one input split). The shuffle moves only raw
@@ -398,8 +369,7 @@ def minhash_lsh_pairs(
     # shuffle would be pure overhead there)
     src = df
     par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
+    df = spread(df)
     base = (
         df.select(
             F.col(id_col).alias("id"),
@@ -438,7 +408,6 @@ def minhash_lsh_pairs(
         cand,
         [lambda t: hashed_shingles(t, shingle_n)],
         par,
-        use_broadcast=verify_broadcast,
     )
     return (
         pairs.withColumn("jaccard", jac)
@@ -542,8 +511,7 @@ def simhash_pairs(
     """
     src = df
     par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
+    df = spread(df)
     tok = token_hashes_portable if portable_hash else token_hashes
     base = df.select(
         F.col(id_col).alias("id"),
@@ -756,6 +724,107 @@ def ngram_jaccard_pairs(
     )
 
 
+def _rarest_first_grams(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_n: int,
+    threshold: float,
+    eval_pred: Column | None = None,
+) -> tuple[DataFrame, DataFrame, Column]:
+    """Shared front half of the prefix-filtered set-similarity joins
+    (All-Pairs, Bayardo et al. WWW'07; PPJoin, Xiao et al. WWW'08) behind
+    ``containment_join``, ``jaccard_join`` and ``jaccard_cross_best_match``.
+
+    Returns ``(base, ordered, prefix_len)``:
+
+    - ``base``: ``(__id, [__ev,] __tk)`` — each document's DISTINCT hashed
+      word-n-gram shingles (xxhash64 over ``shingle_n`` consecutive token
+      hashes), documents shorter than ``shingle_n`` words dropped;
+    - ``ordered``: ``(__id, [__ev,] __srt)`` — the same shingles sorted by
+      ascending global document frequency, ties by hash (rarest first);
+    - ``prefix_len``: ``|X| - ceil(t|X|) + 1`` over ``__srt``, the prefix
+      that must hold the first shared shingle of any pair reaching ``t``.
+
+    ``eval_pred`` (optional) is carried through both frames as the boolean
+    ``__ev`` side tag. Candidate generation and verification stay with the
+    callers: their predicates and outputs differ.
+    """
+    # CPU-bound shingling: spread across cores even when the source is one
+    # input split.
+    df = spread(df)
+    ev = [] if eval_pred is None else ["__ev"]
+    # NOTE: split on a literal single space, NOT _tokenize — the oracle
+    # (and the reference's notion of a "word") is a raw space split with
+    # empties removed, no lowercasing.
+    #
+    # __th MUST be its own projection: the gram lambda references it
+    # shingle_n+1 times, and inlining would re-run tokenize+hash per
+    # reference per element — O(L^2) per document (same CollapseProject
+    # discipline as ``shingle_hashes``; a non-cheap multi-referenced alias
+    # is kept materialized, so downstream F.get reads a bound array).
+    words = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
+    # Short-doc guard as a PRE-filter on the word count, not a post-filter
+    # on size(__tk): filtering the computed gram column gets pushed below
+    # the projection by Catalyst, which INLINES the whole gram expression
+    # into the predicate and evaluates it twice per row (measured 5.5 s ->
+    # 0.23 s for this stage at sf0.1). "size(words) >= n" is equivalent to
+    # "grams non-empty" and keeps the guard a cheap scalar predicate.
+    hashed = df.filter(F.size(words) >= shingle_n).select(
+        F.col(id_col).alias("__id"),
+        *[eval_pred.alias(c) for c in ev],
+        F.transform(words, lambda t: F.xxhash64(t)).alias("__th"),
+    )
+    th = F.col("__th")
+    mk = lambda i: F.xxhash64(  # noqa: E731
+        *[F.get(th, i + j) for j in range(shingle_n)]
+    )
+    grams = F.array_distinct(
+        F.transform(F.sequence(F.lit(0), F.size(th) - shingle_n), mk)
+    )
+    base = hashed.select("__id", *ev, grams.alias("__tk"))
+    # base feeds three or four consumers (toks below + both verify sides)
+    # and Spark does NOT dedupe multi-consumer subtrees (0 ReusedExchange
+    # in the executed plan — PERF_NOTES §7). Recompute still beats store:
+    # the r5 A/B measured an EAGER store of the gram arrays slower (7.8 vs
+    # 7.0 s at sf1), and the r11 re-run with a LAZY checkpoint of the slim
+    # hashed rows lost again at both decades (sf1 containment 5.08 vs
+    # 6.88 s; OPTIMIZATION_r11.md item 3). Recompute is a narrow codegen
+    # map pipelined into each consumer; a checkpoint adds a
+    # materialization barrier plus serialize+reread of the gram arrays.
+    #
+    # explode_outer, NOT explode: plain explode makes InferFiltersFromGenerate
+    # add "size(__tk) > 0 AND isnotnull(__tk)", which alias-substitutes the
+    # ENTIRE gram pipeline into a Filter below the projection — the array is
+    # then computed twice per row, once with the token hashes re-inlined
+    # O(L^2) (measured 5.6 s -> 0.76 s for this stage at sf0.1). The
+    # pre-filter already guarantees every row has >= 1 gram, so outer
+    # semantics are identical.
+    toks = base.select("__id", *ev, F.explode_outer("__tk").alias("__tok"))
+    # document frequency over EVERY row (both sides, for the cross-corpus
+    # join): the rarest-first prefix order must be one global order or the
+    # shared-prefix-shingle guarantee fails
+    freq = toks.groupBy("__tok").agg(F.count(F.lit(1)).alias("__df"))
+    # rarest-first order per doc: sort (df, tok) structs, keep the tok
+    ordered = (
+        toks.join(freq, "__tok")
+        .groupBy("__id")
+        .agg(
+            *[F.first(c).alias(c) for c in ev],
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("__df", "__tok"))),
+                lambda s: s["__tok"],
+            ).alias("__srt"),
+        )
+    )
+    prefix_len = (
+        F.size("__srt")
+        - F.ceil(F.lit(threshold) * F.size("__srt")).cast("int")
+        + 1
+    )
+    return base, ordered, prefix_len
+
+
 def containment_join(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -789,83 +858,8 @@ def containment_join(
     necessary condition for containment) prunes candidates before the
     distinct shuffle.
     """
-    # CPU-bound shingling: spread across cores even when the source is one
-    # input split (same idiom as minhash_lsh_pairs; at real scale the source
-    # has many splits and this is a near-no-op redistribution).
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
-    # NOTE: split on a literal single space, NOT _tokenize — the oracle
-    # (and the reference's notion of a "word") is a raw space split with
-    # empties removed, no lowercasing.
-    #
-    # __th MUST be its own projection: the gram lambda references it
-    # shingle_n+1 times, and inlining would re-run tokenize+hash per
-    # reference per element — O(L^2) per document (same CollapseProject
-    # discipline as ``shingle_hashes``; a non-cheap multi-referenced alias
-    # is kept materialized, so downstream F.get reads a bound array).
-    words = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    # Short-doc guard as a PRE-filter on the word count, not a post-filter
-    # on size(__tk): filtering the computed gram column gets pushed below
-    # the projection by Catalyst, which INLINES the whole gram expression
-    # into the predicate and evaluates it twice per row (measured 5.5 s ->
-    # 0.23 s for this stage at sf0.1). "size(words) >= n" is equivalent to
-    # "grams non-empty" and keeps the guard a cheap scalar predicate.
-    hashed = df.filter(F.size(words) >= shingle_n).select(
-        F.col(id_col).alias("__id"),
-        F.transform(words, lambda t: F.xxhash64(t)).alias("__th"),
-    )
-    th = F.col("__th")
-    mk = lambda i: F.xxhash64(  # noqa: E731
-        *[F.get(th, i + j) for j in range(shingle_n)]
-    )
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.size(th) - shingle_n), mk
-        )
-    )
-    base = hashed.select("__id", grams.alias("__tk"))
-    # base feeds three consumers (toks below + both verify sides) and
-    # Spark does NOT dedupe multi-consumer subtrees (0 ReusedExchange in
-    # the executed plan — PERF_NOTES §7). Recompute still beats store: the
-    # r5 A/B measured an EAGER store of the gram arrays slower (7.8 vs
-    # 7.0 s at sf1) and the r11 re-run with a LAZY checkpoint of the slim
-    # hashed rows lost again at both decades (sf1 5.08 vs 6.88 s — see
-    # _ckpt_grams), so the cut stays off by default.
-    if _ckpt_grams():
-        base = base.localCheckpoint(eager=False)
-    # explode_outer, NOT explode: plain explode makes InferFiltersFromGenerate
-    # add "size(__tk) > 0 AND isnotnull(__tk)", which alias-substitutes the
-    # ENTIRE gram pipeline into a Filter below the projection — the array is
-    # then computed twice per row, once with the token hashes re-inlined
-    # O(L^2) (measured 5.6 s -> 0.76 s for this stage at sf0.1). The
-    # pre-filter already guarantees every row has >= 1 gram, so outer
-    # semantics are identical.
-    toks = base.select(
-        "__id",
-        F.size("__tk").alias("__sz"),
-        F.explode_outer("__tk").alias("__tok"),
-    )
-    freq = toks.groupBy("__tok").agg(F.count(F.lit(1)).alias("__df"))
-    # rarest-first order per doc: sort (df, tok) structs, keep the tok
-    ordered = (
-        toks.join(freq, "__tok")
-        .groupBy("__id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("__df", "__tok"))),
-                lambda s: s["__tok"],
-            ).alias("__srt")
-        )
-    )
-    if _ckpt_grams():
-        # ordered feeds both candidate sides — one materialization instead
-        # of two executions of the df-join + collect_list aggregation.
-        ordered = ordered.localCheckpoint(eager=False)
-    prefix_len = (
-        F.size("__srt")
-        - F.ceil(F.lit(threshold) * F.size("__srt")).cast("int")
-        + 1
+    base, ordered, prefix_len = _rarest_first_grams(
+        df, id_col, text_col, shingle_n, threshold
     )
     # Both candidate sides come from `ordered` and carry the token's
     # POSITION in the doc's rarest-first order, enabling the PPJoin
@@ -940,55 +934,12 @@ def jaccard_join(
     full-index. Additional prunes before the distinct: length ratio
     (t|A| <= |B| <= |A|/t) and the positional bound
     1 + min(|A|-1-pa, |B|-1-pb) >= ceil(t(|A|+|B|)/(1+t)). Exact
-    verification via array_intersect on candidates only. Same hashed
-    shingles / let_-bound / explode_outer machinery as containment_join
-    (see those comments); oracle is the full quadratic join.
+    verification via array_intersect on candidates only. Shingling and
+    the global order come from ``_rarest_first_grams``; oracle is the full
+    quadratic join.
     """
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
-    words = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    hashed = df.filter(F.size(words) >= shingle_n).select(
-        F.col(id_col).alias("__id"),
-        F.transform(words, lambda t: F.xxhash64(t)).alias("__th"),
-    )
-    th = F.col("__th")
-    mk = lambda i: F.xxhash64(  # noqa: E731
-        *[F.get(th, i + j) for j in range(shingle_n)]
-    )
-    grams = F.array_distinct(
-        F.transform(F.sequence(F.lit(0), F.size(th) - shingle_n), mk)
-    )
-    base = hashed.select("__id", grams.alias("__tk"))
-    # multi-consumer subtree (toks + both verify sides); the r5 eager-store
-    # A/B said recompute, and the r11 lazy-checkpoint re-run confirmed it
-    # at both decades — see _ckpt_grams and the containment_join comment.
-    if _ckpt_grams():
-        base = base.localCheckpoint(eager=False)
-    toks = base.select(
-        "__id",
-        F.size("__tk").alias("__sz"),
-        F.explode_outer("__tk").alias("__tok"),
-    )
-    freq = toks.groupBy("__tok").agg(F.count(F.lit(1)).alias("__df"))
-    ordered = (
-        toks.join(freq, "__tok")
-        .groupBy("__id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("__df", "__tok"))),
-                lambda s: s["__tok"],
-            ).alias("__srt")
-        )
-    )
-    if _ckpt_grams():
-        # ordered feeds both prefix sides — one materialization instead of
-        # two executions of the df-join + collect_list aggregation.
-        ordered = ordered.localCheckpoint(eager=False)
-    prefix_len = (
-        F.size("__srt")
-        - F.ceil(F.lit(threshold) * F.size("__srt")).cast("int")
-        + 1
+    base, ordered, prefix_len = _rarest_first_grams(
+        df, id_col, text_col, shingle_n, threshold
     )
 
     def side(idn: str, szn: str, pn: str) -> DataFrame:
@@ -1081,10 +1032,8 @@ def span_scrub(
     containment_join).
     """
     # CPU-bound span building: spread across cores even when the source is
-    # one input split (same idiom as minhash_lsh_pairs / containment_join)
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
+    # one input split
+    df = spread(df)
     ws = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
 
     def _spans(w):
@@ -1208,57 +1157,8 @@ def jaccard_cross_best_match(
     so the value and the argmax tiebreak (max jaccard, then min match_id)
     are engine-portable bit-for-bit.
     """
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
-    words = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    hashed = df.filter(F.size(words) >= shingle_n).select(
-        F.col(id_col).alias("__id"),
-        eval_pred.alias("__ev"),
-        F.transform(words, lambda t: F.xxhash64(t)).alias("__th"),
-    )
-    th = F.col("__th")
-    mk = lambda i: F.xxhash64(  # noqa: E731
-        *[F.get(th, i + j) for j in range(shingle_n)]
-    )
-    grams = F.array_distinct(
-        F.transform(F.sequence(F.lit(0), F.size(th) - shingle_n), mk)
-    )
-    base = hashed.select("__id", "__ev", grams.alias("__tk"))
-    if _ckpt_grams():
-        # Lazy checkpoint of the slim (id, ev, gram-hash array) rows: base
-        # feeds FOUR consumers (freq, the ordered join, and both verify
-        # sides). Default off — the r11 A/B measured recompute faster at
-        # both decades (see _ckpt_grams).
-        base = base.localCheckpoint(eager=False)
-    toks = base.select(
-        "__id",
-        "__ev",
-        F.size("__tk").alias("__sz"),
-        F.explode_outer("__tk").alias("__tok"),
-    )
-    # document frequency over BOTH sides: the rarest-first prefix order must
-    # be one global order or the shared-prefix-shingle guarantee fails
-    freq = toks.groupBy("__tok").agg(F.count(F.lit(1)).alias("__df"))
-    ordered = (
-        toks.join(freq, "__tok")
-        .groupBy("__id")
-        .agg(
-            F.first("__ev").alias("__ev"),
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("__df", "__tok"))),
-                lambda s: s["__tok"],
-            ).alias("__srt"),
-        )
-    )
-    if _ckpt_grams():
-        # ordered feeds both prefix sides — one materialization instead of
-        # two executions of the df-join + collect_list aggregation.
-        ordered = ordered.localCheckpoint(eager=False)
-    prefix_len = (
-        F.size("__srt")
-        - F.ceil(F.lit(threshold) * F.size("__srt")).cast("int")
-        + 1
+    base, ordered, prefix_len = _rarest_first_grams(
+        df, id_col, text_col, shingle_n, threshold, eval_pred
     )
 
     def side(ev: bool, idn: str, szn: str, pn: str) -> DataFrame:

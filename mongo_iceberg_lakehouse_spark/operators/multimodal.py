@@ -32,21 +32,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import spread
+
 FEATURE_SCHEMA = (
     "doc_id bigint, modality string, n_bytes bigint, byte_sum bigint, "
     "head_hex string"
 )
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition a CPU-bound codec stage to the session parallelism: a
-    small parquet source arrives as 1-2 input splits, which would pin the
-    whole Python codec pipeline to 1-2 cores (PERF_NOTES §8 — conditional:
-    only when below parallelism)."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        return df.repartition(par)
-    return df
 
 
 def attach_payload(
@@ -431,7 +422,7 @@ def synth_png_image(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 rows.append((i, png_encode(px)))
             yield pd.DataFrame(rows, columns=["doc_id", "payload"])
 
-    return _spread(df.select(id_col)).mapInPandas(
+    return spread(df.select(id_col)).mapInPandas(
         batches, schema="doc_id bigint, payload binary"
     )
 
@@ -554,7 +545,7 @@ def synth_wav_audio(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 rows.append((i, hdr + data))
             yield pd.DataFrame(rows, columns=["doc_id", "payload"])
 
-    return _spread(df.select(id_col)).mapInPandas(
+    return spread(df.select(id_col)).mapInPandas(
         batches, schema="doc_id bigint, payload binary"
     )
 
@@ -778,9 +769,10 @@ def image_text_alignment_filter(
     # CPU-bound fold below: spread across all cores even when the doc
     # source is 1-2 input splits (the broadcast caption-image join keeps
     # the scan's partitioning, so at sf0.1/sf1 the ENTIRE token fold ran
-    # on 1-2 cores — observed 136% CPU on a 32-core box, r11). Same idiom
-    # and same guard as minhash_lsh_pairs/containment_join: at real scale
-    # the source has many splits and this is a no-op.
+    # on 1-2 cores — observed 136% CPU on a 32-core box, r11). The guard
+    # probes the doc source but repartitions the joined pairs, so it is
+    # not ``spread``; at real scale the source has many splits and this is
+    # a no-op.
     par = docs.sparkSession.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
         pairs = pairs.repartition(par)
@@ -792,86 +784,39 @@ def image_text_alignment_filter(
         F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long") % n_buckets
         + 1
     ).cast("int")
-    import os
-
-    # r11 fold A/B (verdict item 4, executed): the factored
-    # dotb[b]=dot(w[b],codes) form below does O(buckets*dim + tokens) ops
-    # per row vs the tvec form's O(tokens*dim) — but these captions are
-    # SHORT (tokens ~ buckets), so the factored form does MORE work and
-    # measured slower at both decades with the fold properly spread
-    # across cores: sf0.1 0.822 vs 0.881 s, sf1 1.726 vs 2.006 s
-    # (interleaved min-of-reps). The tvec fold stays the default; the
-    # factored arm is kept env-gated for corpora with long captions
-    # (tokens >> buckets), where its asymptotics win.
-    if os.environ.get("SPARK_GRAFT_ALIGN_FOLD", "legacy") == "legacy":
-        # default shape: per TOKEN, zip_with over all `dim` lanes — the
-        # caption fold allocates a dim-array per token and does
-        # O(tokens x dim) interpreted HOF ops per row.
-        z = z.withColumn(
-            "__tvec",
-            F.aggregate(
-                F.col("__ws"),
-                F.array_repeat(F.lit(0).cast("bigint"), dim),
-                lambda acc, t: F.zip_with(
-                    acc,
-                    F.element_at(wtab, bucket(t)),
-                    lambda a, x: a + x,
-                ),
+    # Per TOKEN, zip_with over all `dim` lanes: O(tokens x dim) HOF ops per
+    # row. The factored dotb[b]=dot(w[b],codes) form (O(buckets*dim +
+    # tokens)) measured slower at both decades because these captions are
+    # short (tokens ~ buckets): sf0.1 0.822 vs 0.881 s, sf1 1.726 vs
+    # 2.006 s (OPTIMIZATION_r11.md item 4).
+    z = z.withColumn(
+        "__tvec",
+        F.aggregate(
+            F.col("__ws"),
+            F.array_repeat(F.lit(0).cast("bigint"), dim),
+            lambda acc, t: F.zip_with(
+                acc,
+                F.element_at(wtab, bucket(t)),
+                lambda a, x: a + x,
             ),
-        )
-        # materialize the fold once, then reference by name — two inline
-        # uses (value + keep test) would re-evaluate the whole token fold
-        # per row if CollapseProject duplicated it (the
-        # hashed_linear_classifier pattern)
-        z = z.withColumn(
-            "score_micros",
-            F.aggregate(
-                F.zip_with(
-                    F.col("__tvec"),
-                    F.col("codes"),
-                    lambda a, c: a * c.cast("bigint"),
-                ),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
+        ),
+    )
+    # materialize the fold once, then reference by name — two inline
+    # uses (value + keep test) would re-evaluate the whole token fold
+    # per row if CollapseProject duplicated it (the
+    # hashed_linear_classifier pattern)
+    z = z.withColumn(
+        "score_micros",
+        F.aggregate(
+            F.zip_with(
+                F.col("__tvec"),
+                F.col("codes"),
+                lambda a, c: a * c.cast("bigint"),
             ),
-        )
-    else:
-        # r11 factored fold: score = sum_t dot(w[bucket(t)], codes)
-        #                          = sum_t dotb[bucket(t)]
-        # where dotb[b] = dot(w[b], codes) is computed ONCE per row
-        # (n_buckets x dim integer ops) and the token fold then costs ONE
-        # scalar add per token — O(buckets*dim + tokens) instead of
-        # O(tokens*dim) interpreted ops, and no per-token dim-array
-        # allocation. Pure BIGINT addition is associative/commutative, so
-        # the regrouped sum is bit-identical to the tvec-then-dot form
-        # (verified against the unchanged SQL oracle, which still computes
-        # the tvec form). dotb MUST be let_-bound: a withColumn alias
-        # referenced once gets re-inlined by CollapseProject into the
-        # per-token lambda — measured 67 s/rep (tokens x buckets x dim)
-        # vs sub-second bound.
-        from ..functions.expr import let_
-
-        dotb_expr = F.transform(
-            wtab,
-            lambda row: F.aggregate(
-                F.zip_with(
-                    row, F.col("codes"), lambda a, c: a * c.cast("bigint")
-                ),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            ),
-        )
-        z = z.withColumn(
-            "score_micros",
-            let_(
-                dotb_expr,
-                lambda dotb: F.aggregate(
-                    F.col("__ws"),
-                    F.lit(0).cast("bigint"),
-                    lambda acc, t: acc + F.element_at(dotb, bucket(t)),
-                ),
-            ),
-        )
+            F.lit(0).cast("bigint"),
+            lambda acc, x: acc + x,
+        ),
+    )
     return z.select(
         F.col(id_col),
         F.size("__ws").cast("bigint").alias("n_tokens"),

@@ -14,6 +14,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import spread
+
 
 def hash_split_column(
     id_col: Column | str,
@@ -195,10 +197,8 @@ def dsir_importance(
     every shuffle key is bounded (bucket ids) or the doc id.
     """
     # CPU-bound feature hashing: spread across cores even when the source
-    # is one input split (same idiom as the dedup operators)
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
+    # is one input split
+    df = spread(df)
     ws = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
 
     def _feats(w):

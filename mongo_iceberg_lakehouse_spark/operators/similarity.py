@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity, l2_norm
+from ..session import spread
 
 
 def ann_topk_bruteforce(
@@ -93,9 +94,7 @@ def cosine_neardup_pairs(
     # STREAM side's partition count, and a small parquet corpus arrives as
     # 1-2 input splits — leaving 30 of 32 cores idle on an O(n^2) compute.
     # Spread the stream side across the session's parallelism first.
-    par = embeddings.sparkSession.sparkContext.defaultParallelism
-    if normed.rdd.getNumPartitions() < par:
-        normed = normed.repartition(par)
+    normed = spread(normed)
     a = normed.select(
         F.col("__id").alias("id_a"), F.col("__v").alias("__va"),
         F.col("__n").alias("__na"),
@@ -1141,12 +1140,8 @@ def semdedup_prune(
     # CPU-bound assignment (n x k integer dot products): spread across all
     # cores even when the source is one small parquet split — without this
     # the whole stage runs on the file's 1-2 input partitions while the
-    # rest of the machine idles (profiled 28 s -> ~3 s at the sf1 decade;
-    # same idiom as minhash_lsh_pairs / containment_join). At real scale
-    # the source has many splits and this is a near-no-op redistribution.
-    par = embeddings.sparkSession.sparkContext.defaultParallelism
-    if embeddings.rdd.getNumPartitions() < par:
-        embeddings = embeddings.repartition(par)
+    # rest of the machine idles (profiled 28 s -> ~3 s at the sf1 decade).
+    embeddings = spread(embeddings)
     z = quantize_int8(embeddings, id_col=id_col, vec_col=vec_col)
     z = z.select(
         F.col(id_col).alias("__id"),
@@ -1354,9 +1349,7 @@ def embedding_outlier_filter(
 
     Returns (id, group, dist2, keep).
     """
-    par = embeddings.sparkSession.sparkContext.defaultParallelism
-    if embeddings.rdd.getNumPartitions() < par:
-        embeddings = embeddings.repartition(par)
+    embeddings = spread(embeddings)
     z = (
         quantize_int8(embeddings, id_col=id_col, vec_col=vec_col)
         .select(
@@ -1449,9 +1442,7 @@ def cluster_balanced_sample(
 
     Returns (id, cluster_id, sample_rank) — the kept rows only.
     """
-    par = embeddings.sparkSession.sparkContext.defaultParallelism
-    if embeddings.rdd.getNumPartitions() < par:
-        embeddings = embeddings.repartition(par)
+    embeddings = spread(embeddings)
     z = quantize_int8(embeddings, id_col=id_col, vec_col=vec_col).select(
         F.col(id_col).alias("__id"),
         F.col("codes").alias("__codes"),
@@ -1542,9 +1533,7 @@ def embedding_drift_by_cohort(
     # (Streaming frames have no .rdd and micro-batches set their own
     # parallelism — the operator runs unchanged on a stream without it.)
     if not embeddings.isStreaming:
-        par = embeddings.sparkSession.sparkContext.defaultParallelism
-        if embeddings.rdd.getNumPartitions() < par:
-            embeddings = embeddings.repartition(par)
+        embeddings = spread(embeddings)
     z = quantize_int8(embeddings, id_col=id_col, vec_col=vec_col).select(
         cohort.alias("__a"), F.col("codes").alias("__codes")
     )
@@ -1647,9 +1636,7 @@ def hard_negative_topk(
     Returns (query_id, neighbor_id, rank, qdot, n2) — qdot/n2 are the
     exact integers behind the ranking, so the output is float-free.
     """
-    par = embeddings.sparkSession.sparkContext.defaultParallelism
-    if embeddings.rdd.getNumPartitions() < par:
-        embeddings = embeddings.repartition(par)
+    embeddings = spread(embeddings)
     z = (
         quantize_int8(embeddings, id_col=id_col, vec_col=vec_col)
         .select(

@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.expr import let_
+from ..session import spread
 
 # Tiny per-language stopword lists for the n-gram/stopword-vote language-ID
 # heuristic. Order = deterministic tiebreak priority.
@@ -625,13 +626,10 @@ def bigram_lift_topk_hashed(
     ``False`` above the safe bound: the hints disappear and AQE picks
     broadcast only when the runtime sizes actually fit.
     """
-    par = df.sparkSession.sparkContext.defaultParallelism
-
     def maybe_bcast(d: DataFrame) -> DataFrame:
         return F.broadcast(d) if broadcast_hints else d
 
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
+    df = spread(df)
     # NOT checkpointed: materializing the tokenized corpus would write
     # ~corpus-size token arrays to block storage (tens of GB at sf100 on
     # one box); re-scanning parquet + re-splitting per pass is a few
@@ -739,9 +737,7 @@ def bigram_lift_topk(
     # CPU-bound tokenize+explode inherits the parquet split count
     # (PERF_NOTES #8): a small-file corpus would run the heavy stage on
     # 1-2 cores. Measured at sf1: 4.5 s -> 1.6 s with the spread.
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
+    df = spread(df)
     counts = (
         df.select(
             F.explode_outer(
@@ -839,10 +835,8 @@ def repetition_signals(
     zero fractions.
     """
     # CPU-bound narrow fold: spread across cores even when the source is
-    # one input split (same idiom as bigram_lift_topk)
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
+    # one input split
+    df = spread(df)
 
     def build(w: Column) -> Column:
         bg = F.array_sort(word_ngrams(w, 2))
@@ -976,9 +970,7 @@ def vocab_oov_stats(
     Returns (id, n_tokens, n_oov, oov_rate_micros); zero-token docs get
     all zeros.
     """
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
+    df = spread(df)
     dt = (
         df.select(
             F.col(id_col).alias("__id"),

@@ -17,9 +17,9 @@ only the plan changes — which is what the test asserts.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
+
+from ..session import scoped_conf
 
 BLOOM_CONFS = {
     # force a shuffle join: a broadcast join already prunes via the
@@ -34,25 +34,10 @@ BLOOM_CONFS = {
 }
 
 
-@contextmanager
 def bloom_join_confs(spark: SparkSession):
     """Temporarily apply the bloom-injection confs, restoring prior values
     (the engine session keeps broadcast joins on for everything else)."""
-    old = {}
-    for k, v in BLOOM_CONFS.items():
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    return scoped_conf(spark, BLOOM_CONFS)
 
 
 def executed_plan(df: DataFrame) -> str:

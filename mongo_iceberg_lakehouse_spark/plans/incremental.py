@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
+
 
 def silver_watermark(spark: SparkSession, silver_table: str) -> object | None:
     """Greatest fully-processed day, or None if silver doesn't exist yet."""
@@ -51,12 +53,17 @@ def refresh_silver_incremental(
     if n_days == 0:
         return 0
     out = transform(fresh)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    if spark.catalog.tableExists(silver_table):
-        # insertInto is position-based; match the table's column order (the
-        # partition column migrates to the end on the initial saveAsTable)
-        out = out.select(*spark.table(silver_table).columns)
-        out.write.mode("overwrite").insertInto(silver_table)
-    else:
-        out.write.mode("overwrite").partitionBy("day").saveAsTable(silver_table)
+    with scoped_conf(
+        spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    ):
+        if spark.catalog.tableExists(silver_table):
+            # insertInto is position-based; match the table's column order
+            # (the partition column migrates to the end on the initial
+            # saveAsTable)
+            out = out.select(*spark.table(silver_table).columns)
+            out.write.mode("overwrite").insertInto(silver_table)
+        else:
+            out.write.mode("overwrite").partitionBy("day").saveAsTable(
+                silver_table
+            )
     return n_days

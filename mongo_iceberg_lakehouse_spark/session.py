@@ -20,8 +20,9 @@
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Settable on a live session (spark.conf.set) — applied defensively by every
 # query entry point because the driver may hand us its own SparkSession.
@@ -68,8 +69,38 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def default_parallelism(spark: SparkSession) -> int:
-    return spark.sparkContext.defaultParallelism
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Apply runtime ``confs`` for the duration of the block, then restore
+    each key's prior value (or unset it if it had none), so a caller-owned
+    session leaves the block as it entered."""
+    old = {}
+    for k, v in confs.items():
+        try:
+            old[k] = spark.conf.get(k)
+        except Exception:
+            old[k] = None
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Repartition a CPU-bound stage to the session parallelism when its
+    input has fewer partitions: a small parquet source arrives as 1-2
+    input splits, which would pin the whole stage to 1-2 cores
+    (PERF_NOTES §8). At real scale the source has many splits and this is
+    a no-op."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < par:
+        return df.repartition(par)
+    return df
 
 
 def get_spark(

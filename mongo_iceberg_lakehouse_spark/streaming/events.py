@@ -14,8 +14,6 @@ aggregation shuffles on (window, event_type) — a bounded-cardinality key.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -26,7 +24,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-@contextmanager
+from ..session import scoped_conf
+
+
 def state_partitions(spark: SparkSession, n: int = 8):
     """Scope ``spark.sql.shuffle.partitions`` down around an ephemeral
     availableNow materialization.
@@ -40,12 +40,7 @@ def state_partitions(spark: SparkSession, n: int = 8):
     production stream would instead size this to sustained throughput
     (state partition count cannot change after the checkpoint exists).
     """
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    return scoped_conf(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 
 def _events_raw_schema(ts_type) -> StructType:

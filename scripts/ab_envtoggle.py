@@ -5,6 +5,11 @@ SparkSession so host drift hits both arms equally (PERF_NOTES §12), with
 checkpoint blocks dropped between every run. Arms differ only in the env
 var value, read by the operator at query-construction time.
 
+An env-gated arm exists only while its A/B runs: the change that adds the
+gate deletes the losing arm (and the env read) before it merges, and
+records the numbers in its notes. Committed operators read no environment
+(tests/test_operator_config.py).
+
 Usage:
   python scripts/ab_envtoggle.py VAR=off_val:on_val [--sf-dir D] [--reps N] q1,q2,...
 

@@ -68,6 +68,8 @@ def test_no_generate_filter_reinline_in_neardup_plans(spark):
     hash-free)."""
     for name in (
         "dedup_containment_pairs",
+        "dedup_jaccard_exact_pairs",
+        "dedup_cross_corpus_jaccard",
         "dedup_minhash_lsh",
         "dedup_simhash",
     ):

@@ -55,3 +55,32 @@ def test_incremental_refresh_matches_full(spark):
     assert refresh_silver_incremental(
         spark, "inc_test.events_bronze", "inc_test.events_silver", _transform
     ) == 0
+
+
+def test_incremental_refresh_restores_overwrite_mode(spark):
+    # the dynamic-overwrite conf is scoped to the refresh's own write: a
+    # caller-owned session must come back with the mode it handed in, on
+    # both the initial saveAsTable and the later insertInto path
+    key = "spark.sql.sources.partitionOverwriteMode"
+    create_namespace(spark, "inc_conf")
+    bronze = spark.createDataFrame(
+        [(1, 2.0, "2024-01-01"), (2, 3.0, "2024-01-02")],
+        "event_id long, value double, day string",
+    ).withColumn("day", F.col("day").cast("date"))
+    save_table_replace(bronze, "inc_conf.bronze", partition_by=["day"])
+    spark.conf.set(key, "static")
+    try:
+        refresh_silver_incremental(
+            spark, "inc_conf.bronze", "inc_conf.silver", _transform
+        )
+        assert spark.conf.get(key) == "static"
+        later = bronze.withColumn("day", F.date_add("day", 2))
+        save_table_replace(
+            bronze.unionByName(later), "inc_conf.bronze", partition_by=["day"]
+        )
+        assert refresh_silver_incremental(
+            spark, "inc_conf.bronze", "inc_conf.silver", _transform
+        ) == 2
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.unset(key)

@@ -3,11 +3,9 @@
 1. Iterative graph loops release their loop-local caches before return
    (VERDICT r10 item 7 / ADVICE r10): only the per-run localCheckpoint
    blocks may remain pinned; the persisted edge/node frames must not.
-2. The alignment filter's two fold arms (legacy tvec fold, factored
-   dotb fold) are bit-identical — BIGINT regrouping, no FP residual.
-3. _pair_value_join's broadcast path reunites on the SAME exchange it
+2. _pair_value_join's broadcast path reunites on the SAME exchange it
    spreads on (hash(id_a,id_b), not round-robin + second shuffle).
-4. The ann/maintenance parity booleans compute inside the returned plan
+3. The ann/maintenance parity booleans compute inside the returned plan
    (not as construction-time literals from eager exceptAll counts).
 """
 
@@ -21,9 +19,6 @@ from mongo_iceberg_lakehouse_spark.operators.graph import (
     bfs_levels,
     label_propagation,
     pagerank,
-)
-from mongo_iceberg_lakehouse_spark.operators.multimodal import (
-    image_text_alignment_filter,
 )
 
 
@@ -63,36 +58,6 @@ def test_graph_loops_release_caches(spark, edges):
     bfs_levels(edges, seeds, max_hops=4, checkpoint_every=2).count()
     assert _n_persistent(spark) <= 3  # mid dist/frontier + final, no e
     _clear(spark)
-
-
-def test_alignment_fold_arms_identical(spark, monkeypatch):
-    docs = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta epsilon zeta"),
-            (2, "one two three"),
-            (3, ""),
-            (4, None),
-            (5, "alpha alpha alpha alpha alpha alpha alpha alpha"),
-        ],
-        "doc_id long, text string",
-    )
-    emb = spark.createDataFrame(
-        [
-            (i, [((i * 37 + j * 11) % 100 - 50) / 10.0 for j in range(64)])
-            for i in range(1, 6)
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    out = {}
-    for arm in ("legacy", "factored"):
-        monkeypatch.setenv("SPARK_GRAFT_ALIGN_FOLD", arm)
-        out[arm] = sorted(
-            image_text_alignment_filter(docs, emb).collect(),
-            key=lambda r: r["doc_id"],
-        )
-    # pure BIGINT arithmetic regrouped: sum_j(sum_t w[b_t][j] * c_j) ==
-    # sum_t(sum_j w[b_t][j] * c_j) exactly, row for row
-    assert out["legacy"] == out["factored"]
 
 
 def test_pair_value_join_reunites_on_spread_exchange(spark):
