@@ -52,35 +52,6 @@ from mongo_iceberg_lakehouse_spark.session import get_spark
 ANCHOR = "tpch_q1_pricing_summary"
 ANCHOR_BASELINE_SEC = 0.51
 
-# The original round-1 set: BASELINE.md's within-2x budget is stated against
-# the sum over these 23 (later rounds grew the suite, so raw totals across
-# rounds are not comparable — subtotal_r1_shared is).
-R1_SHARED = [
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "tpch_q6_forecast_revenue",
-    "tpch_q12_shipmode",
-    "join_broadcast_region_revenue",
-    "join_customer_orders",
-    "asof_join_purchase_view",
-    "agg_rollup",
-    "window_dedup_latest",
-    "window_running_sum",
-    "session_window_counts",
-    "pivot_event_values",
-    "explode_word_counts",
-    "scalar_json_extract",
-    "dedup_exact_hash",
-    "dedup_minhash_lsh",
-    "text_quality_scores",
-    "ann_topk_blocked",
-    "embedding_neardup_blocked",
-    "join_interval_events",
-    "text_tfidf_top_terms",
-    "scd2_customer_priority",
-    "ann_topk_int8",
-]
-
 HEADLINE = [
     "tpch_q1_pricing_summary",
     "tpch_q3_shipping_priority",
@@ -166,10 +137,15 @@ HEADLINE = [
     "dq_orders_report",
 ]
 
+# The original round-1 set: BASELINE.md's within-2x budget is stated against
+# the sum over these 23 (later rounds grew the suite, so raw totals across
+# rounds are not comparable — subtotal_r1_shared is).
+R1_SHARED = HEADLINE[:23]
+
 
 def _drop_checkpoint_blocks(spark) -> None:
     """Unpersist every lingering RDD block between queries (ported from
-    scripts/scaling_curve.py, round-8 per VERDICT r7 #4). Several operators
+    the scaling-curve harness, round-8 per VERDICT r7 #4). Several operators
     lazily localCheckpoint multi-consumer subtrees; over a 45-query session
     those blocks pile up in the block manager and the resulting memory
     pressure inflates LATER queries' timings — the round-7 bench showed
@@ -214,12 +190,15 @@ def _rss_peak_mb() -> float | None:
         return None
 
 
-def _time_anchor(spark, sf_dir: str) -> float:
-    """Min-of-3 re-time of the drift anchor (same methodology as the timed
-    loop) — used for the mid-suite and suite-end session-health checks."""
-    fn = REGISTRY[ANCHOR].fn
+def time_noop(spark, fn, sf_dir: str, reps: int = 3) -> float:
+    """Min-of-``reps`` wall time of ``fn(spark, sf_dir)`` fully materialized
+    through the noop sink. Min-of-3: ±15% scheduler noise on sub-second
+    queries reads as a regression under single-shot timing. Blocks are
+    dropped after EVERY rep (r11): each rep builds its own fresh checkpoint
+    blocks, so releasing the previous rep's costs the next rep nothing and
+    keeps the minimum off pinned-block pressure."""
     best = float("inf")
-    for _ in range(3):
+    for _ in range(reps):
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
         best = min(best, time.perf_counter() - t0)
@@ -236,36 +215,23 @@ def main() -> None:
     # Warm-up pass: run every headline query once untimed so codegen/JIT
     # compilation (a fixed, per-JVM cost of ~10s on the heavy HOF pipelines)
     # doesn't pollute the steady-state throughput numbers.
+    # r11: blocks are dropped after EVERY warm-up query (not once after the
+    # loop) so the warm-up's peak resident footprint no longer grows with
+    # every suite addition — the r10 verdict's leading session-poison suspect.
     for name in HEADLINE:
-        REGISTRY[name].fn(spark, sf_dir).write.mode("overwrite").format(
-            "noop"
-        ).save()
-        # r11: drop after EVERY warm-up query (not once after the loop) so
-        # the warm-up's peak resident footprint no longer grows with every
-        # suite addition — the r10 verdict's leading session-poison suspect.
-        _drop_checkpoint_blocks(spark)
+        time_noop(spark, REGISTRY[name].fn, sf_dir, reps=1)
 
     timings: dict[str, float] = {}
     anchor_mid: float | None = None
     mid_idx = len(HEADLINE) // 2
+    anchor_fn = REGISTRY[ANCHOR].fn
     for qi, name in enumerate(HEADLINE):
-        fn = REGISTRY[name].fn
-        best = float("inf")
-        for _ in range(3):  # min-of-3: ±15% scheduler noise on sub-second
-            # queries read as regressions under single-shot timing
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
-            # r11: drop between reps too — each rep builds its own fresh
-            # checkpoint blocks, so releasing the previous rep's costs the
-            # next rep nothing and keeps min-of-3 off pinned-block pressure.
-            _drop_checkpoint_blocks(spark)
-        timings[name] = round(best, 3)
+        timings[name] = time_noop(spark, REGISTRY[name].fn, sf_dir)
         print(f"# {name}: {timings[name]}s", file=sys.stderr, flush=True)
         if qi + 1 == mid_idx:
-            anchor_mid = _time_anchor(spark, sf_dir)
+            anchor_mid = time_noop(spark, anchor_fn, sf_dir)
             print(f"# anchor_mid: {anchor_mid}s", file=sys.stderr, flush=True)
-    anchor_end = _time_anchor(spark, sf_dir)
+    anchor_end = time_noop(spark, anchor_fn, sf_dir)
     print(f"# anchor_end: {anchor_end}s", file=sys.stderr, flush=True)
 
     total = round(sum(timings.values()), 3)

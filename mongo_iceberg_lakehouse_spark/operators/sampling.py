@@ -186,7 +186,7 @@ def dsir_importance(
         landing *within an ulp of a micro-unit boundary* could then flip
         one dictionary entry between engines. Downstream arithmetic is
         exact either way; cross-engine bit-stability holds only while no
-        bucket sits on such a knife edge (the repo's knife_edge_sweep
+        bucket sits on such a knife edge (``scripts/run.py --stress``
         checks the shipped fixtures; guaranteed bit-stability would need a
         log-free formulation, e.g. comparing scaled integer ratios).
 

@@ -15,10 +15,12 @@ Usage: python scripts/broadcast_sweep.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -99,7 +101,7 @@ def main() -> None:
         "and why dims that outgrow the threshold should be bucketed instead "
         "(see tests/test_plans.py bucketed co-located join).",
     ]
-    with open("docs/BROADCAST_SWEEP.md", "w") as fh:
+    with open(os.path.join(REPO, "docs", "BROADCAST_SWEEP.md"), "w") as fh:
         fh.write("\n".join(lines) + "\n")
     print(f"wrote docs/BROADCAST_SWEEP.md: {results}")
     spark.stop()

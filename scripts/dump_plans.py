@@ -7,9 +7,11 @@ Usage: python scripts/dump_plans.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, ".")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bench import HEADLINE  # noqa: E402
 from mongo_iceberg_lakehouse_spark.queries import REGISTRY  # noqa: E402
@@ -124,7 +126,7 @@ def main() -> None:
         f"Default (broadcast, no bloom):\n\n```\n{default_plan.strip()}\n```\n\n"
         f"With injection confs (shuffle join + bloom):\n\n```\n{bloom_plan.strip()}\n```\n"
     )
-    with open("docs/PLANS.md", "w") as fh:
+    with open(os.path.join(REPO, "docs", "PLANS.md"), "w") as fh:
         fh.write("\n".join(out))
     print(f"wrote docs/PLANS.md with {len(out) - 4} plans")
     spark.stop()

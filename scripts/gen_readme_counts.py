@@ -14,15 +14,17 @@ Usage: python scripts/gen_readme_counts.py [--check]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from mongo_iceberg_lakehouse_spark.queries import REGISTRY  # noqa: E402
 
-README = "/root/repo/README.md"
-ROADMAP = "/root/repo/docs/ROADMAP.md"
+README = os.path.join(REPO, "README.md")
+ROADMAP = os.path.join(REPO, "docs", "ROADMAP.md")
 PATTERN = re.compile(r"\d+ named queries \(\d+ DuckDB-oracle-checked\)")
 # ROADMAP is a NON-chronological session log: plain "Registry: N/M" bullets
 # are point-in-time history and stay as written. The single "Final

@@ -39,6 +39,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SRC = "/root/testdata/sf0.1"
 
 
@@ -223,7 +224,9 @@ def gen_tpch(out_dir: str) -> dict[str, int]:
 
 def main() -> int:
     global SRC
-    out_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scale/sf1"
+    out_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
+        REPO, ".scale", "sf1"
+    )
     if len(sys.argv) > 2:
         SRC = sys.argv[2]
     seed = int(sys.argv[3]) if len(sys.argv) > 3 else 7

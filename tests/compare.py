@@ -6,6 +6,10 @@ from __future__ import annotations
 import datetime as _dt
 import math
 
+import duckdb
+
+from mongo_iceberg_lakehouse_spark.sources.tables import FIXTURE_TABLES
+
 _FLOAT_SIG = ".6g"  # doubles normalized to 6 significant digits
 
 
@@ -143,3 +147,14 @@ def compare_spark_duckdb(spark_df, duck_con, oracle_sql: str) -> tuple[bool, str
     return compare_rows_duckdb(
         spark_df.columns, _collect_tuples(spark_df), duck_con, oracle_sql
     )
+
+
+def duck_views(sf_dir: str, tables=FIXTURE_TABLES):
+    """A fresh DuckDB connection with one ``read_parquet`` view per table of
+    the scale dir — the oracles' view of the fixture."""
+    con = duckdb.connect()
+    for t in tables:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con

@@ -296,13 +296,12 @@ def test_ffd_oversized_bin_rejects_zero_token_docs(spark):
     assert len(over) == 1 and over[0]["n_docs"] == 1
 
 
-def test_scaling_curve_validates_only_names(monkeypatch, capsys):
-    # ADVICE r5 item 5: SCALING_ONLY typos must fail fast with the names,
-    # not KeyError mid-sweep.
-    import scripts.scaling_curve as sc
+def test_scaling_curve_validates_only_names(capsys):
+    # ADVICE r5 item 5: --only typos must fail fast with the names (exit 2,
+    # before any Spark session starts), not KeyError mid-sweep.
+    from scripts import run
 
-    monkeypatch.setenv("SCALING_ONLY", "tpch_q1_pricing_summary,nope_q")
-    rc = sc.main()
+    rc = run.main(["--time", "--only", "tpch_q1_pricing_summary,nope_q"])
     assert rc == 2
     assert "nope_q" in capsys.readouterr().out
 

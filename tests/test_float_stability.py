@@ -17,23 +17,17 @@ integer cents) beyond the original attribution_linear.
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
-from mongo_iceberg_lakehouse_spark.sources.tables import FIXTURE_TABLES
-from scripts import float_stress
-from scripts.knife_edge_sweep import sweep
+from scripts.run import stress, sweep
 
+from .compare import duck_views
 from .conftest import SF_SMOKE
 
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_SMOKE}/{t}.parquet')"
-        )
+    con = duck_views(SF_SMOKE)
     yield con
     con.close()
 
@@ -41,10 +35,9 @@ def duck():
 def test_no_order_dependent_knife_edges(spark, duck):
     flagged = sorted({n for n, _, _ in sweep(SF_SMOKE) if not n.startswith("<")})
     # the sweep must at least run; an empty flag list is a clean pass
-    float_stress.SF_DIR = SF_SMOKE
     bad = []
     for name in flagged:
-        verdict, msg = float_stress.stress(spark, duck, name)
+        verdict, msg = stress(spark, duck, name, SF_SMOKE)
         if verdict != "SAFE":
             bad.append((name, verdict, msg))
     assert not bad, f"order-dependent boundary floats: {bad}"

@@ -6,13 +6,11 @@ run and return a stable schema.
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
 from mongo_iceberg_lakehouse_spark.queries import REGISTRY
-from mongo_iceberg_lakehouse_spark.sources.tables import FIXTURE_TABLES
 
-from .compare import assert_scalar_schema, compare_spark_duckdb
+from .compare import assert_scalar_schema, compare_spark_duckdb, duck_views
 from .conftest import SF_SMOKE
 
 ORACLE_NAMES = sorted(n for n, q in REGISTRY.items() if q.oracle is not None)
@@ -21,11 +19,7 @@ ROWS_ONLY_NAMES = sorted(n for n, q in REGISTRY.items() if q.oracle is None)
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_SMOKE}/{t}.parquet')"
-        )
+    con = duck_views(SF_SMOKE)
     yield con
     con.close()
 

@@ -5,20 +5,21 @@
 
     python -m pytest -m scale tests/test_scale_gates.py -q
 
-They share the exact code paths of the CLI scripts, so there is one
+They share the exact code paths of scripts/run.py, so there is one
 implementation to trust.
 """
 
 from __future__ import annotations
 
 import os
-import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo/scripts")
+from scripts import run
 
-SF1_DIR = "/root/repo/.scale/sf1"
+from .compare import duck_views
+
+SF1_DIR = os.path.join(run.SCALE_DIR, "sf1")
 
 
 @pytest.mark.scale
@@ -28,26 +29,14 @@ def test_knife_edge_stress_sf001(spark):
     oracle floats are only a defect if ALSO order-dependent, so every
     sweep candidate is stressed under three shuffle-partition settings
     and compared at .17g against DuckDB."""
-    import duckdb
-
-    from knife_edge_sweep import sweep
-
-    from scripts import float_stress
-
-    sf_dir = "/root/testdata/sf0.01"
-    flagged = sorted({n for n, _, _ in sweep(sf_dir) if not n.startswith("<")})
-    con = duckdb.connect()
-    from mongo_iceberg_lakehouse_spark.sources.tables import FIXTURE_TABLES
-
-    for t in FIXTURE_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    float_stress.SF_DIR = sf_dir
+    sf_dir = f"{run.TESTDATA}/sf0.01"
+    flagged = sorted(
+        {n for n, _, _ in run.sweep(sf_dir) if not n.startswith("<")}
+    )
+    con = duck_views(sf_dir)
     bad = []
     for name in flagged:
-        verdict, msg = float_stress.stress(spark, con, name)
+        verdict, msg = run.stress(spark, con, name, sf_dir)
         if verdict != "SAFE":
             bad.append((name, verdict, msg))
     con.close()
@@ -55,14 +44,14 @@ def test_knife_edge_stress_sf001(spark):
 
 
 @pytest.mark.scale
-def test_sf1_gate_all_green_zero_skips(spark):
+def test_probe_check_sf1_all_green_zero_skips(spark):
     if not os.path.isdir(SF1_DIR):
         pytest.skip(
             f"{SF1_DIR} missing - run scripts/gen_scale_data.py first"
         )
-    from sf1_gate import run_gate
-
-    fails, skips, total = run_gate(SF1_DIR, timeout=600, spark=spark)
+    fails, skips, total = run.check(
+        SF1_DIR, sorted(run.REGISTRY), probes=True, timeout=600, spark=spark
+    )
     assert total > 0
     assert fails == 0, f"{fails} sf1 oracle mismatches"
     assert skips == 0, f"{skips} watchdog skips (probes should prevent all)"

@@ -39,7 +39,6 @@ Round-10 additions:
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -51,7 +50,8 @@ from mongo_iceberg_lakehouse_spark.queries import (
     _anchor_doc,
     _anchor_key,
 )
-from tests.compare import compare_spark_duckdb
+from mongo_iceberg_lakehouse_spark.sources.tables import FIXTURE_TABLES
+from tests.compare import compare_spark_duckdb, duck_views
 
 SF = "/root/testdata/sf0.001"
 NEW_PROBES = (
@@ -64,15 +64,7 @@ NEW_PROBES = (
 
 @pytest.fixture(scope="module")
 def duck():
-    con = duckdb.connect()
-    for t in (
-        "region nation customer supplier part orders lineitem "
-        "events documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF}/{t}.parquet')"
-        )
+    con = duck_views(SF)
     yield con
     con.close()
 
@@ -287,11 +279,6 @@ import os  # noqa: E402
 import pyarrow as pa  # noqa: E402
 import pyarrow.parquet as pq  # noqa: E402
 
-_ALL_TABLES = (
-    "region nation customer supplier part orders lineitem "
-    "events documents embeddings"
-).split()
-
 # md5('168') and md5('363') start with '00' — verified anchored keys
 _ANCHORED_KEYS = [168, 363]
 
@@ -314,22 +301,12 @@ def _edge_fixture(tmp_path_factory, table: str, edit_col: str):
     dirs = {}
     for label, rows in (("at", n - 1), ("above", n)):
         d = tmp_path_factory.mktemp(f"edge_{table}_{label}")
-        for t in _ALL_TABLES:
+        for t in FIXTURE_TABLES:
             if t != table:
                 os.symlink(f"{SF}/{t}.parquet", d / f"{t}.parquet")
         pq.write_table(src.slice(0, rows), d / f"{table}.parquet")
         dirs[label] = str(d)
     return n - 1, dirs
-
-
-def _edge_duck(sf_dir: str):
-    con = duckdb.connect()
-    for t in _ALL_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con
 
 
 @pytest.mark.parametrize(
@@ -354,7 +331,7 @@ def test_knife_edge_orders_dispatch(
     probe_at = SCALE_PROBES[name].fn(spark, at)
     full_at = REGISTRY[name].fn(spark, at)
     assert probe_at.count() == full_at.count()
-    con = _edge_duck(at)
+    con = duck_views(at)
     ok, msg = compare_spark_duckdb(probe_at, con, oracle)
     con.close()
     assert ok, f"{name} at-threshold: {msg}"
@@ -369,7 +346,7 @@ def test_knife_edge_orders_dispatch(
     )
     anchored = full_ab.filter(_anchor_key(engine_anchor_col)).count()
     assert n_probe == anchored
-    con = _edge_duck(above)
+    con = duck_views(above)
     ok, msg = compare_spark_duckdb(probe_ab, con, oracle)
     con.close()
     assert ok, f"{name} above-threshold: {msg}"
@@ -391,7 +368,7 @@ def test_knife_edge_embeddings_dispatch(spark, monkeypatch, tmp_path_factory):
     probe_at = Qmod._probe_semdedup(spark, at)
     arms = {r["arm"] for r in probe_at.select("arm").distinct().collect()}
     assert arms == {"full"}
-    con = _edge_duck(at)
+    con = duck_views(at)
     ok, msg = compare_spark_duckdb(probe_at, con, oracle)
     con.close()
     assert ok, f"semdedup at-threshold: {msg}"
@@ -404,7 +381,7 @@ def test_knife_edge_embeddings_dispatch(spark, monkeypatch, tmp_path_factory):
     }
     assert "full" not in counts
     assert counts.get("assign", 0) > 0 and counts.get("subset", 0) > 0
-    con = _edge_duck(above)
+    con = duck_views(above)
     ok, msg = compare_spark_duckdb(probe_ab, con, oracle)
     con.close()
     assert ok, f"semdedup above-threshold: {msg}"
@@ -425,7 +402,7 @@ def test_knife_edge_documents_dispatch(spark, monkeypatch, tmp_path_factory):
     at = dirs["at"]
     probe_at = SCALE_PROBES[name].fn(spark, at)
     assert probe_at.count() == REGISTRY[name].fn(spark, at).count()
-    con = _edge_duck(at)
+    con = duck_views(at)
     ok, msg = compare_spark_duckdb(probe_at, con, oracle)
     con.close()
     assert ok, f"{name} at-threshold: {msg}"
@@ -436,7 +413,7 @@ def test_knife_edge_documents_dispatch(spark, monkeypatch, tmp_path_factory):
     n_probe, n_full = probe_ab.count(), full_ab.count()
     assert 0 < n_probe < n_full
     assert n_probe == full_ab.filter(_anchor_doc("doc_id")).count()
-    con = _edge_duck(above)
+    con = duck_views(above)
     ok, msg = compare_spark_duckdb(probe_ab, con, oracle)
     con.close()
     assert ok, f"{name} above-threshold: {msg}"
