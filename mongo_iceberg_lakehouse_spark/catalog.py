@@ -11,10 +11,11 @@ Reference parity (SURVEY.md §2.1):
       (reference: spark_jobs/query_iceberg.ipynb:116,139)
 
 The reference replaces tables wholesale each run (snapshot-replace, no
-incremental MERGE). With Iceberg jars on the classpath, ``save_table_replace``
-uses the atomic DataFrameWriterV2 ``createOrReplace``; otherwise it falls back
-to ``saveAsTable(mode="overwrite")`` against the built-in catalog (weaker
-atomicity, same semantics — SURVEY.md §7 "what's hard" item 5).
+incremental MERGE) with the DataFrameWriterV2 ``createOrReplace``, which
+needs an Iceberg catalog. ``save_table_replace`` writes with
+``saveAsTable(mode="overwrite")`` against the built-in session catalog
+instead (weaker atomicity, same semantics — SURVEY.md §7 "what's hard"
+item 5).
 
 Scale note: lake tables should be partitioned on their natural time key so
 partition pruning kicks in at 100 TB — pass ``partition_by`` (the reference
@@ -48,21 +49,9 @@ def save_table_replace(
     df: DataFrame,
     ident: str,
     partition_by: Sequence[str] | None = None,
-    use_v2: bool = False,
 ) -> None:
-    """Create-or-replace ``ident`` with ``df`` (snapshot-replace semantics).
-
-    ``use_v2=True`` selects the DataFrameWriterV2 path (atomic with catalogs
-    like Iceberg); the default V1 path works on the built-in session catalog.
-    """
-    if use_v2:
-        writer = df.writeTo(ident)
-        if partition_by:
-            from pyspark.sql import functions as F
-
-            writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
-        writer.createOrReplace()
-        return
+    """Create-or-replace ``ident`` with ``df`` (snapshot-replace semantics)
+    on the built-in session catalog."""
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)

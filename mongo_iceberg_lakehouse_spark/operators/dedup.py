@@ -14,8 +14,10 @@ functions + shuffles on bounded keys:
   The candidate join is an equi-join on (band_id, band_hash), so at 100 TB it
   is an ordinary shuffle join on a high-cardinality key — no cross join ever
   materializes. Band count trades recall vs candidate volume.
-- SimHash: 64-bit signature via sign-aggregated token-hash bits; candidates
-  via banded signature chunks (hamming-adjacent docs collide on some chunk).
+- SimHash: 60-bit signature via sign-aggregated md5-prefix token-hash bits;
+  candidates via banded signature chunks (hamming-adjacent docs collide on
+  some chunk).
+- Survivors: pairs -> ``graph.connected_components`` -> one row per cluster.
 - Exact: groupBy on content (or sha2(content)) keeping the minimum id —
   deterministic, map-side-combinable.
 """
@@ -29,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.expr import let_
 from ..session import spread
+from .graph import connected_components
 
 
 def window_dedup(
@@ -416,26 +419,20 @@ def minhash_lsh_pairs(
     )
 
 
-def token_hashes(text: Column) -> Column:
-    """One xxhash64 pass over the tokens. Materialize in its own projection
-    before ``simhash_signature_packed`` (same CollapseProject reasoning as
-    ``shingle_hashes``)."""
-    return F.transform(_tokenize(text), lambda t: F.xxhash64(t))
-
-
 def token_hashes_portable(text: Column) -> Column:
     """60-bit md5-prefix token hashes (conv(substr(md5(t),1,15),16,10)) —
     bit-identical in any engine that has md5, which is what lets the
-    SimHash registry query carry a FULL DuckDB oracle (same upgrade path
-    as ``text.winnow_fingerprints(portable_hash=True)``). Engine-internal
-    callers keep :func:`token_hashes` (xxhash64 is cheaper)."""
+    SimHash registry query carry a FULL DuckDB oracle (the same hash as
+    ``text.winnow_fingerprints``). Materialize in its own projection before
+    ``simhash_signature_packed`` (same CollapseProject reasoning as
+    ``shingle_hashes``)."""
     return F.transform(
         _tokenize(text),
         lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("long"),
     )
 
 
-def simhash_signature_packed(hashes: Column, bits: int = 64) -> Column:
+def simhash_signature_packed(hashes: Column, bits: int) -> Column:
     """SimHash signature PACKED into one BIGINT: bit b is set iff at least
     half the token hashes have bit b set (majority-sign rule, deterministic
     ``2*cnt >= n`` tie convention).
@@ -479,10 +476,9 @@ def simhash_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    bits: int = 64,
-    chunks: int = 8,
+    bits: int = 60,
+    chunks: int = 6,
     max_hamming: int = 3,
-    portable_hash: bool = False,
 ) -> DataFrame:
     """Near-dup pairs by SimHash: band the signature into ``chunks`` pieces,
     candidates collide on >=1 piece (guaranteed to catch hamming distance
@@ -502,20 +498,18 @@ def simhash_pairs(
     degenerate-bucket guard never binds below ``max_bucket`` documents
     per band value.)
 
-    ``portable_hash=True`` swaps xxhash64 token hashes for the 60-bit
-    md5-prefix integer (:func:`token_hashes_portable`) so the ENTIRE
-    pipeline — tokenize, hash, majority-sign signature, hamming — is
-    engine-reproducible; the registry query uses it to carry a full
-    DuckDB oracle. Default stays xxhash64 (cheaper) for engine-internal
-    use.
+    Token hashes are the 60-bit md5-prefix integers of
+    :func:`token_hashes_portable`, so the ENTIRE pipeline — tokenize, hash,
+    majority-sign signature, hamming — is engine-reproducible and the
+    registry query carries a full DuckDB oracle. ``bits`` defaults to the
+    hash width: signature bits above it would always be zero.
     """
     src = df
     par = df.sparkSession.sparkContext.defaultParallelism
     df = spread(df)
-    tok = token_hashes_portable if portable_hash else token_hashes
     base = df.select(
         F.col(id_col).alias("id"),
-        tok(F.col(text_col)).alias("__th"),
+        token_hashes_portable(F.col(text_col)).alias("__th"),
     ).select("id", simhash_signature_packed(F.col("__th"), bits).alias("sig"))
     per = bits // chunks
     # (id, chunk, chunk-hash) only; signatures join back onto the deduped
@@ -547,7 +541,7 @@ def simhash_pairs(
         id_col,
         text_col,
         cand,
-        [tok, lambda th: simhash_signature_packed(th, bits)],
+        [token_hashes_portable, lambda th: simhash_signature_packed(th, bits)],
         par,
         use_broadcast=False,
     )
@@ -571,82 +565,6 @@ def simhash_pairs(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    max_iterations: int = 20,
-) -> DataFrame:
-    """Connected components over a pair (edge) list -> (id, component) with
-    component = min id reachable. The grouping step a production dedup needs
-    between near-dup PAIRS and per-cluster SURVIVORS.
-
-    Algorithm: iterative min-label propagation with pointer jumping. Each
-    round every node adopts (1) the smallest label among its neighbors and
-    (2) the label OF its current label-node (path halving) — the combination
-    converges in O(log diameter) rounds, not O(diameter). Each round is two
-    joins + one aggregation, all distributed; the driver only orchestrates
-    the loop and checks a scalar convergence count, so the pattern scales to
-    graphs that never fit one machine.
-    """
-    edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-        .distinct()
-    )
-    # materialize once: the edge list is re-joined every iteration, and its
-    # upstream (e.g. a full MinHash pipeline) must not re-execute per round
-    edges = edges.localCheckpoint(eager=True)
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
-    )
-    for _ in range(max_iterations):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        stepped = (
-            labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-                ).alias("component"),
-            )
-        )
-        # pointer jumping: comp <- min(comp, label(comp)) — halves label paths
-        jump = stepped.select(
-            F.col("id").alias("__jid"), F.col("component").alias("__jcomp")
-        )
-        new_labels = (
-            stepped.join(jump, stepped.component == jump.__jid, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("__jcomp"), F.col("component")),
-                ).alias("component"),
-            )
-        )
-        # lazy: the convergence count below is the round's ONE action and
-        # materializes the checkpoint as a side effect (eager ran a second
-        # separate job per round); lineage is cut either way
-        new_labels = new_labels.localCheckpoint(eager=False)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), on="id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
-
-
 def dedup_survivors(
     df: DataFrame,
     pairs: DataFrame,
@@ -658,8 +576,8 @@ def dedup_survivors(
     # reserved-name aliases: a caller whose id_col is literally "id" must
     # not have its column swallowed by drop-by-name (which removes ALL
     # occurrences of a name after a join)
-    comp = connected_components(pairs).select(
-        F.col("id").alias("__cc_id"), F.col("component").alias("__cc_comp")
+    comp = connected_components(pairs, src="id_a", dst="id_b").select(
+        F.col("node").alias("__cc_id"), F.col("component").alias("__cc_comp")
     )
     tagged = df.join(comp, df[id_col] == comp["__cc_id"], "left")
     return (
@@ -683,8 +601,8 @@ def dedup_survivors_by_quality(
     on. One ranking window per component after the components join."""
     # reserved-name aliases (see dedup_survivors): drop-by-name after the
     # join must never match the caller's own id column
-    comp = connected_components(pairs).select(
-        F.col("id").alias("__cc_id"), F.col("component").alias("__cc_comp")
+    comp = connected_components(pairs, src="id_a", dst="id_b").select(
+        F.col("node").alias("__cc_id"), F.col("component").alias("__cc_comp")
     )
     tagged = df.join(comp, df[id_col] == comp["__cc_id"], "left").drop("__cc_id")
     # unpaired rows form singleton clusters keyed by their own id
@@ -698,29 +616,6 @@ def dedup_survivors_by_quality(
         clustered.withColumn("__rk", F.row_number().over(w))
         .filter(F.col("__rk") == 1)
         .drop("__cc_comp", "__cluster", "__rk")
-    )
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    jaccard_threshold: float = 0.8,
-    num_hashes: int = 64,
-    bands: int = 32,
-) -> DataFrame:
-    """Exact n-gram Jaccard pairs, using aggressive LSH banding (high recall)
-    for candidate generation then exact verification — the scalable form of
-    the all-pairs n-gram Jaccard join."""
-    return minhash_lsh_pairs(
-        df,
-        id_col,
-        text_col,
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_n=shingle_n,
-        jaccard_threshold=jaccard_threshold,
     )
 
 

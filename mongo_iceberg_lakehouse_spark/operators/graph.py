@@ -2,9 +2,10 @@
 
 The reference engine has no graph operators; this covers the
 *iterative-algorithm* class the charter's training-data pipeline needs —
-link-analysis quality weights for web corpora (PageRank), alongside the
-transitive-closure dedup clustering in ``operators/dedup.py::
-connected_components``.
+link-analysis quality weights for web corpora (PageRank), community
+detection, BFS distance, and the transitive-closure clustering
+(:func:`connected_components`) that ``operators/dedup.py``'s survivor
+selection runs on its near-dup pairs.
 
 Scale posture (the part naive DataFrame loops get wrong):
 
@@ -12,9 +13,9 @@ Scale posture (the part naive DataFrame loops get wrong):
   the logical plan; after k iterations a naive loop hands Catalyst an
   O(2^k)-node tree (the rank DataFrame appears under both sides of the
   next join) and every action recomputes all prior iterations.
-  ``localCheckpoint`` every ``checkpoint_every`` iterations materializes
+  ``localCheckpoint`` every ``CHECKPOINT_EVERY`` iterations materializes
   the ranks and cuts the plan back to a leaf — plan size and recompute
-  cost stay O(checkpoint_every).
+  cost stay O(CHECKPOINT_EVERY).
 - **One shuffle per iteration.** Contributions are keyed by ``dst``; the
   join of ranks onto edges reuses the edge cache (edges + out-degrees are
   computed once and persisted, not re-derived per iteration).
@@ -32,6 +33,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Rounds between lineage cuts in the fixed-round loops below.
+CHECKPOINT_EVERY = 2
 
 
 def _symmetric_edges(
@@ -79,7 +83,6 @@ def pagerank(
     *,
     iterations: int = 5,
     damping: float = 0.85,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Fixed-iteration PageRank over an edge list.
 
@@ -139,8 +142,8 @@ def pagerank(
                 ).alias("pr"),
             )
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            # Truncate lineage: plan stays O(checkpoint_every) deep.
+        if (i + 1) % CHECKPOINT_EVERY == 0 and i + 1 < iterations:
+            # Truncate lineage: plan stays O(CHECKPOINT_EVERY) deep.
             ranks = ranks.localCheckpoint(eager=True)
     # Eager-checkpoint the final ranks so the loop-local caches can be
     # released before return (r11 opt round, memory hygiene — guide §5): a
@@ -213,7 +216,6 @@ def label_propagation(
     edges: DataFrame,
     *,
     iterations: int = 4,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Synchronous label propagation (community detection) over the
     undirected graph, fixed ``iterations`` rounds. Returns
@@ -229,7 +231,7 @@ def label_propagation(
     per-node top-1 window over the per-(node,label) partial counts — the
     count aggregation is map-side combined, so hub nodes ship one row per
     distinct neighbor label, not one per neighbor edge.
-    ``localCheckpoint`` every ``checkpoint_every`` rounds truncates the
+    ``localCheckpoint`` every ``CHECKPOINT_EVERY`` rounds truncates the
     growing self-referential plan exactly as in :func:`pagerank`.
     """
     nbr = _symmetric_edges(edges, part_key="dst")
@@ -258,7 +260,7 @@ def label_propagation(
                 "label", F.struct((-F.col("cnt")).alias("nc"), F.col("label"))
             ).alias("label")
         )
-        if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
+        if (i + 1) % CHECKPOINT_EVERY == 0 and i + 1 < iterations:
             labels = labels.localCheckpoint(eager=True)
     # Final eager checkpoint + unpersist: same memory hygiene as pagerank
     # (the r10 advice item — connected_components already released sym;
@@ -340,7 +342,6 @@ def bfs_levels(
     seeds: DataFrame,
     *,
     max_hops: int = 4,
-    checkpoint_every: int = 2,
 ) -> DataFrame:
     """Breadth-first hop distance from a seed set over the DIRECTED edge
     list, capped at ``max_hops``. Returns ``(node, dist)`` for every node
@@ -374,7 +375,7 @@ def bfs_levels(
         )
         dist = dist.unionByName(new)
         frontier = new.select("node")
-        if checkpoint_every and i % checkpoint_every == 0 and i < max_hops:
+        if i % CHECKPOINT_EVERY == 0 and i < max_hops:
             dist = dist.localCheckpoint(eager=True)
             frontier = frontier.localCheckpoint(eager=True)
     # Same memory hygiene as pagerank/label_propagation: materialize the

@@ -81,12 +81,12 @@ def _fake_features(payload: bytes) -> tuple[int, int, str]:
     return len(payload), sum(payload) % (2**31), payload[:4].hex()
 
 
-def extract_features(df: DataFrame, use_codec: bool = False) -> DataFrame:
-    """Arrow-batched feature extraction over multimodal rows.
+def extract_features(df: DataFrame) -> DataFrame:
+    """Arrow-batched feature extraction over multimodal rows: byte-level
+    stand-in features (:func:`_fake_features`) per payload, no decode.
 
     Input rows must carry (doc_id, payload, meta). Output drops the payload
-    (see module scale notes). With ``use_codec`` the stubbed real decoder is
-    invoked (raises until codecs exist).
+    (see module scale notes). Real decoding is :func:`decode_payload`.
     """
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -96,8 +96,6 @@ def extract_features(df: DataFrame, use_codec: bool = False) -> DataFrame:
                 pdf["doc_id"], pdf["payload"], pdf["meta"]
             ):
                 modality = meta["modality"] if isinstance(meta, dict) else meta.modality
-                if use_codec:
-                    decode_payload(bytes(payload), str(modality))
                 n_bytes, byte_sum, head_hex = _fake_features(bytes(payload))
                 rows.append((int(doc_id), str(modality), n_bytes, byte_sum, head_hex))
             yield pd.DataFrame(

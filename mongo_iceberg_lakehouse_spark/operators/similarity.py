@@ -1095,48 +1095,12 @@ def maxsim_multivector(
     )
 
 
-def semdedup_prune(
-    embeddings: DataFrame,
-    k: int = 8,
-    threshold_num: int = 2,
-    threshold_den: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    checkpoint_assignment: bool = True,
+def _semdedup_assign(
+    embeddings: DataFrame, k: int, id_col: str, vec_col: str
 ) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023): cluster the corpus embeddings, then drop
-    near-duplicates WITHIN each cluster — the clustering turns the all-pairs
-    cosine problem into per-cluster quadratic work, the same trick the paper
-    uses to run on LAION-scale corpora.
-
-    Spark-first formulation, exact and engine-portable:
-
-    - Vectors are int8-quantized first (``quantize_int8``), so every dot
-      product and norm is an exact 64-bit integer — no float-sum ordering
-      anywhere, which is what makes the oracle byte-stable.
-    - Centroids are content-addressed: the ``k`` vectors with the smallest
-      ``md5(id)`` (a deterministic, layout-independent sample — the same
-      idiom as operators/sampling.py). TakeOrderedAndProject, then broadcast.
-      At 100 TB you would raise ``k`` so ``n/k`` stays bounded (the paper
-      uses ~100k clusters for 5B docs) or swap in ``kmeans_centroids``;
-      either way the join shape below is unchanged.
-    - Assignment is argmax cosine vs the broadcast centroids: cos is compared
-      via the sign bucket + ``q^2/|c|^2`` (monotone in cos for fixed vector
-      norm; single IEEE division of exact integers, so both engines order
-      identically), ties to the lowest centroid id.
-    - In-cluster near-dup pairs: equi-join on cluster id, ``id_a < id_b``,
-      ``cos >= num/den`` decided in EXACT integer arithmetic:
-      ``d >= 0 AND d^2 * den^2 >= num^2 * |a|^2 * |b|^2`` (all BIGINT;
-      64-dim int8 keeps every term < 2^50).
-    - Survivor rule: a vector is dropped iff some SMALLER id in its cluster
-      is a near-dup — deterministic greedy-by-id, one anti-joinable set.
-
-    Scale posture: one broadcast pass for assignment (narrow map), one
-    shuffle on cluster id for the pair join. Per-cluster work is
-    ``(n/k)^2`` — pick ``k ~ n / 10k`` to bound it; no stage is all-pairs.
-
-    Returns (id, cluster_id, keep).
-    """
+    """SemDeDup's assignment step (see :func:`semdedup_prune`): every
+    vector's argmax-cosine centroid among the ``k`` content-addressed ones.
+    Returns (__id, __cid, __codes, __n2)."""
     # CPU-bound assignment (n x k integer dot products): spread across all
     # cores even when the source is one small parquet split — without this
     # the whole stage runs on the file's 1-2 input partitions while the
@@ -1182,7 +1146,7 @@ def semdedup_prune(
     # sort. (An all-HOF fold over a literal centroid array was tried and
     # is ~15x SLOWER: interpreted lambda evaluation per (vector,
     # centroid) element loses to the codegen'd join projection.)
-    assigned = scored.groupBy("__id").agg(
+    return scored.groupBy("__id").agg(
         F.max_by(
             F.struct("__cid", "__codes", "__n2"),
             F.struct(F.col("__score"), (-F.col("__cid")).alias("__nc")),
@@ -1193,13 +1157,57 @@ def semdedup_prune(
         F.col("__best.__codes").alias("__codes"),
         F.col("__best.__n2").alias("__n2"),
     )
+
+
+def semdedup_prune(
+    embeddings: DataFrame,
+    k: int = 8,
+    threshold_num: int = 2,
+    threshold_den: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """SemDeDup (Abbas et al. 2023): cluster the corpus embeddings, then drop
+    near-duplicates WITHIN each cluster — the clustering turns the all-pairs
+    cosine problem into per-cluster quadratic work, the same trick the paper
+    uses to run on LAION-scale corpora.
+
+    Spark-first formulation, exact and engine-portable:
+
+    - Vectors are int8-quantized first (``quantize_int8``), so every dot
+      product and norm is an exact 64-bit integer — no float-sum ordering
+      anywhere, which is what makes the oracle byte-stable.
+    - Centroids are content-addressed: the ``k`` vectors with the smallest
+      ``md5(id)`` (a deterministic, layout-independent sample — the same
+      idiom as operators/sampling.py). TakeOrderedAndProject, then broadcast.
+      At 100 TB you would raise ``k`` so ``n/k`` stays bounded (the paper
+      uses ~100k clusters for 5B docs) or swap in ``kmeans_centroids``;
+      either way the join shape below is unchanged.
+    - Assignment is argmax cosine vs the broadcast centroids: cos is compared
+      via the sign bucket + ``q^2/|c|^2`` (monotone in cos for fixed vector
+      norm; single IEEE division of exact integers, so both engines order
+      identically), ties to the lowest centroid id.
+    - In-cluster near-dup pairs: equi-join on cluster id, ``id_a < id_b``,
+      ``cos >= num/den`` decided in EXACT integer arithmetic:
+      ``d >= 0 AND d^2 * den^2 >= num^2 * |a|^2 * |b|^2`` (all BIGINT;
+      64-dim int8 keeps every term < 2^50).
+    - Survivor rule: a vector is dropped iff some SMALLER id in its cluster
+      is a near-dup — deterministic greedy-by-id, one anti-joinable set.
+
+    Scale posture: one broadcast pass for assignment (narrow map), one
+    shuffle on cluster id for the pair join. Per-cluster work is
+    ``(n/k)^2`` — pick ``k ~ n / 10k`` to bound it; no stage is all-pairs.
+
+    Returns (id, cluster_id, keep).
+    """
     # `assigned` feeds three consumers (both pair-join sides + the final
     # keep join); without a cut Catalyst re-executes the full n x k
     # assignment three times per action (measured: 3x the dot-product
     # cost at sf1). Lazy local checkpoint = compute once, serve all
     # three subtrees — same bounded-state story as the graph operators.
-    if checkpoint_assignment:
-        assigned = assigned.localCheckpoint(eager=False)
+    assigned = _semdedup_assign(embeddings, k, id_col, vec_col).localCheckpoint(
+        eager=False
+    )
     a = assigned.select(
         "__cid",
         F.col("__id").alias("__a_id"),

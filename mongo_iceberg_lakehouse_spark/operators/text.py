@@ -147,7 +147,6 @@ def winnow_fingerprints(
     text_col: str = "text",
     kgram: int = 5,
     window: int = 4,
-    portable_hash: bool = False,
 ) -> DataFrame:
     """Winnowing (rolling-hash) fingerprints: hash every k-gram shingle, keep
     the minimum hash of each sliding window — the classic local fingerprint
@@ -157,21 +156,17 @@ def winnow_fingerprints(
     shingle hashes via transform+hash, window minima via transform over a
     sequence of window start indices + array_min(slice(...)).
 
-    ``portable_hash=True`` swaps xxhash64 for a 60-bit md5-prefix integer
+    Gram hashes are 60-bit md5-prefix integers
     (conv(substr(md5(gram),1,15),16,10)) — the scheme is hash-agnostic,
     and the md5 form is reproducible in any engine, which is what lets
     the registry query carry a FULL DuckDB oracle instead of a rows-only
-    check. Default stays xxhash64 (cheaper) for engine-internal use.
+    check.
     """
     # bind the token array once (let_): the shingle lambda slices it per
     # k-gram, and an unbound reference would re-tokenize per shingle —
     # O(L^2) per document
-    if portable_hash:
-        def _gram_hash(g: Column) -> Column:
-            return F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")
-    else:
-        def _gram_hash(g: Column) -> Column:
-            return F.xxhash64(g)
+    def _gram_hash(g: Column) -> Column:
+        return F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("long")
 
     def _hashes(tk: Column) -> Column:
         n_sh = F.greatest(F.size(tk) - (kgram - 1), F.lit(0))
@@ -201,7 +196,7 @@ def winnow_fingerprints(
     # size()>0 filter would evaluate the whole rolling-min pipeline twice
     # per row; the post-filter on the GENERATED attribute is cheap and
     # restores drop-empty semantics (fingerprints are never legitimately
-    # null: array_min over xxhash64 values)
+    # null: array_min over md5-prefix values)
     return (
         df2.select(F.col(id_col), F.explode_outer(mins).alias("fingerprint"))
         .filter(F.col("fingerprint").isNotNull())
@@ -702,7 +697,6 @@ def bigram_lift_topk(
     text_col: str = "text",
     min_count: int = 5,
     k: int = 20,
-    single_scan: bool = True,
 ) -> DataFrame:
     """Corpus-level collocation extraction: top-k word bigrams by lift
     (the PMI exponent) ``P(ab) / (P(a)P(b)) = c_ab * N / (c_a * c_b)``,
@@ -753,10 +747,8 @@ def bigram_lift_topk(
     # full corpus scans (no ReuseExchange once the subtrees differ — the
     # pushdown-specialization corollary of PERF_NOTES #7). The lazy local
     # checkpoint pins the vocab-sized count table: ONE scan + tokenize
-    # serves all branches. ``single_scan=False`` keeps the re-scan form
-    # for A/B measurement.
-    if single_scan:
-        counts = counts.localCheckpoint(eager=False)
+    # serves all branches.
+    counts = counts.localCheckpoint(eager=False)
     uni = counts.filter(F.col("n") == 1).select("g", "c").withColumnRenamed("g", "w")
     n_total = uni.agg(F.sum("c").alias("n_total"))
     bg = (

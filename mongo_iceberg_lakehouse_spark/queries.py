@@ -2012,8 +2012,7 @@ def dedup_minhash_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     return D.simhash_pairs(
-        d, "doc_id", "text", bits=60, chunks=6, max_hamming=5,
-        portable_hash=True,
+        d, "doc_id", "text", bits=60, chunks=6, max_hamming=5
     )
 
 
@@ -2022,17 +2021,17 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     None,
     doc="Word-bigram Jaccard near-dup pairs with LSH candidate generation + "
     "exact verification. Rows-only check; the candidate machinery is "
-    "minhash_lsh_pairs itself (ngram_jaccard_pairs delegates), so its "
-    "recall is pinned by dedup_minhash_recall_contract.",
+    "minhash_lsh_pairs itself, so its recall is pinned by "
+    "dedup_minhash_recall_contract.",
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     # r=3 rows/band: 2-row bands collide on ~everything in this high-overlap
     # synthetic corpus (candidate blowup); 3-row bands keep recall ~0.9 at
     # j>=0.5 while cutting baseline collisions by ~10x
-    return D.ngram_jaccard_pairs(
-        d, "doc_id", "text", shingle_n=2, jaccard_threshold=0.25,
-        num_hashes=48, bands=16,
+    return D.minhash_lsh_pairs(
+        d, "doc_id", "text", num_hashes=48, bands=16, shingle_n=2,
+        jaccard_threshold=0.25,
     )
 
 
@@ -2173,12 +2172,12 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc). Uses the md5-prefix portable hash so the ENTIRE pipeline — "
     "tokenize, gram, hash, rolling min, distinct — is value-checked by a "
     "full DuckDB oracle (upgraded from rows-only; the scheme is "
-    "hash-agnostic, engine-internal callers keep xxhash64). "
+    "hash-agnostic). "
     "operators/text.py::winnow_fingerprints.",
 )
 def text_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
-    return T.winnow_fingerprints(d, portable_hash=True)
+    return T.winnow_fingerprints(d)
 
 
 @register(
@@ -5002,11 +5001,35 @@ def segment_token_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pagerank_handoff_oracle(iterations: int = 5) -> str:
-    """Unrolled fixed-iteration PageRank (DuckDB recursive CTEs forbid
-    aggregation over the recursive reference, so each iteration is its own
-    CTE — generated, not hand-written)."""
-    sql = """
+def _handoff_edges(o: DataFrame, c: DataFrame) -> DataFrame:
+    """The customer 'handoff' graph: an edge u->v when v's order
+    immediately follows u's within the same nation OR the same market
+    segment (lag over two orderings, union). Self-loops and duplicate
+    edges are left to the graph operators. SQL twin:
+    ``_HANDOFF_EDGES_CTE``."""
+    j = o.join(c, o["o_custkey"] == c["c_custkey"]).select(
+        "o_orderkey", "o_orderdate", "o_custkey", "c_nationkey", "c_mktsegment"
+    )
+    w_nat = Window.partitionBy("c_nationkey").orderBy("o_orderdate", "o_orderkey")
+    w_seg = Window.partitionBy("c_mktsegment").orderBy("o_orderdate", "o_orderkey")
+    return (
+        j.select(
+            F.lag("o_custkey").over(w_nat).alias("src"),
+            F.col("o_custkey").alias("dst"),
+        )
+        .unionByName(
+            j.select(
+                F.lag("o_custkey").over(w_seg).alias("src"),
+                F.col("o_custkey").alias("dst"),
+            )
+        )
+        .where(F.col("src").isNotNull())
+    )
+
+
+# DuckDB twin of _handoff_edges (distinct, self-loops dropped): the `j` and
+# `edges` CTEs every handoff-graph oracle opens with.
+_HANDOFF_EDGES_CTE = """
     WITH j AS (
       SELECT o_orderkey, o_orderdate, o_custkey, c_nationkey, c_mktsegment
       FROM orders JOIN customer ON o_custkey = c_custkey
@@ -5021,7 +5044,14 @@ def _pagerank_handoff_oracle(iterations: int = 5) -> str:
                  ORDER BY o_orderdate, o_orderkey) AS src,
                o_custkey AS dst FROM j
       ) WHERE src IS NOT NULL AND src <> dst
-    ),
+    )"""
+
+
+def _pagerank_handoff_oracle(iterations: int = 5) -> str:
+    """Unrolled fixed-iteration PageRank (DuckDB recursive CTEs forbid
+    aggregation over the recursive reference, so each iteration is its own
+    CTE — generated, not hand-written)."""
+    sql = _HANDOFF_EDGES_CTE + """,
     nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
     nn AS (SELECT count(*) AS cnt FROM nodes),
     outdeg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
@@ -5060,25 +5090,8 @@ def pagerank_customer_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
-    j = o.join(c, o["o_custkey"] == c["c_custkey"]).select(
-        "o_orderkey", "o_orderdate", "o_custkey", "c_nationkey", "c_mktsegment"
-    )
-    w_nat = Window.partitionBy("c_nationkey").orderBy("o_orderdate", "o_orderkey")
-    w_seg = Window.partitionBy("c_mktsegment").orderBy("o_orderdate", "o_orderkey")
-    edges = (
-        j.select(
-            F.lag("o_custkey").over(w_nat).alias("src"),
-            F.col("o_custkey").alias("dst"),
-        )
-        .unionByName(
-            j.select(
-                F.lag("o_custkey").over(w_seg).alias("src"),
-                F.col("o_custkey").alias("dst"),
-            )
-        )
-        .where(F.col("src").isNotNull())
-    )
-    ranks = pagerank(edges, iterations=5, damping=0.85, checkpoint_every=2)
+    edges = _handoff_edges(o, c)
+    ranks = pagerank(edges, iterations=5, damping=0.85)
     return ranks.select(F.col("node").alias("custkey"), "pr")
 
 
@@ -5387,24 +5400,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
-    j = o.join(c, o["o_custkey"] == c["c_custkey"]).select(
-        "o_orderkey", "o_orderdate", "o_custkey", "c_nationkey", "c_mktsegment"
-    )
-    w_nat = Window.partitionBy("c_nationkey").orderBy("o_orderdate", "o_orderkey")
-    w_seg = Window.partitionBy("c_mktsegment").orderBy("o_orderdate", "o_orderkey")
-    edges = (
-        j.select(
-            F.lag("o_custkey").over(w_nat).alias("src"),
-            F.col("o_custkey").alias("dst"),
-        )
-        .unionByName(
-            j.select(
-                F.lag("o_custkey").over(w_seg).alias("src"),
-                F.col("o_custkey").alias("dst"),
-            )
-        )
-        .where(F.col("src").isNotNull())
-    )
+    edges = _handoff_edges(o, c)
     return triangle_count(edges)
 
 
@@ -5828,22 +5824,7 @@ def _label_propagation_oracle(iterations: int = 4) -> str:
     """Unrolled synchronous label propagation (same generated-CTE posture
     as _pagerank_handoff_oracle — DuckDB recursive CTEs forbid the
     aggregate-over-recursive-reference each round needs)."""
-    sql = """
-    WITH j AS (
-      SELECT o_orderkey, o_orderdate, o_custkey, c_nationkey, c_mktsegment
-      FROM orders JOIN customer ON o_custkey = c_custkey
-    ),
-    edges AS (
-      SELECT DISTINCT src, dst FROM (
-        SELECT lag(o_custkey) OVER (PARTITION BY c_nationkey
-                 ORDER BY o_orderdate, o_orderkey) AS src,
-               o_custkey AS dst FROM j
-        UNION ALL
-        SELECT lag(o_custkey) OVER (PARTITION BY c_mktsegment
-                 ORDER BY o_orderdate, o_orderkey) AS src,
-               o_custkey AS dst FROM j
-      ) WHERE src IS NOT NULL AND src <> dst
-    ),
+    sql = _HANDOFF_EDGES_CTE + """,
     nbr AS (SELECT src, dst FROM edges UNION SELECT dst, src FROM edges),
     l0 AS (SELECT DISTINCT src AS node, src AS label FROM nbr)
     """
@@ -5879,25 +5860,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
-    j = o.join(c, o["o_custkey"] == c["c_custkey"]).select(
-        "o_orderkey", "o_orderdate", "o_custkey", "c_nationkey", "c_mktsegment"
-    )
-    w_nat = Window.partitionBy("c_nationkey").orderBy("o_orderdate", "o_orderkey")
-    w_seg = Window.partitionBy("c_mktsegment").orderBy("o_orderdate", "o_orderkey")
-    edges = (
-        j.select(
-            F.lag("o_custkey").over(w_nat).alias("src"),
-            F.col("o_custkey").alias("dst"),
-        )
-        .unionByName(
-            j.select(
-                F.lag("o_custkey").over(w_seg).alias("src"),
-                F.col("o_custkey").alias("dst"),
-            )
-        )
-        .where(F.col("src").isNotNull())
-    )
-    out = label_propagation(edges, iterations=4, checkpoint_every=2)
+    edges = _handoff_edges(o, c)
+    out = label_propagation(edges, iterations=4)
     return out.select(F.col("node").alias("custkey"), "community")
 
 
@@ -6204,22 +6168,7 @@ def _bfs_oracle(max_hops: int = 4) -> str:
     """Unrolled frontier BFS (generated CTEs, same posture as the other
     iterative oracles — DuckDB recursive CTEs can't express the
     visited-set anti-join per round)."""
-    sql = """
-    WITH j AS (
-      SELECT o_orderkey, o_orderdate, o_custkey, c_nationkey, c_mktsegment
-      FROM orders JOIN customer ON o_custkey = c_custkey
-    ),
-    edges AS (
-      SELECT DISTINCT src, dst FROM (
-        SELECT lag(o_custkey) OVER (PARTITION BY c_nationkey
-                 ORDER BY o_orderdate, o_orderkey) AS src,
-               o_custkey AS dst FROM j
-        UNION ALL
-        SELECT lag(o_custkey) OVER (PARTITION BY c_mktsegment
-                 ORDER BY o_orderdate, o_orderkey) AS src,
-               o_custkey AS dst FROM j
-      ) WHERE src IS NOT NULL AND src <> dst
-    ),
+    sql = _HANDOFF_EDGES_CTE + """,
     r0 AS (SELECT DISTINCT c_custkey AS node, 0 AS dist
            FROM customer WHERE c_nationkey = 0),
     f0 AS (SELECT node FROM r0)
@@ -6253,26 +6202,9 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = _t(spark, sf_dir, "orders")
     c = _t(spark, sf_dir, "customer")
-    j = o.join(c, o["o_custkey"] == c["c_custkey"]).select(
-        "o_orderkey", "o_orderdate", "o_custkey", "c_nationkey", "c_mktsegment"
-    )
-    w_nat = Window.partitionBy("c_nationkey").orderBy("o_orderdate", "o_orderkey")
-    w_seg = Window.partitionBy("c_mktsegment").orderBy("o_orderdate", "o_orderkey")
-    edges = (
-        j.select(
-            F.lag("o_custkey").over(w_nat).alias("src"),
-            F.col("o_custkey").alias("dst"),
-        )
-        .unionByName(
-            j.select(
-                F.lag("o_custkey").over(w_seg).alias("src"),
-                F.col("o_custkey").alias("dst"),
-            )
-        )
-        .where(F.col("src").isNotNull())
-    )
+    edges = _handoff_edges(o, c)
     seeds = c.filter(F.col("c_nationkey") == 0).select("c_custkey")
-    out = bfs_levels(edges, seeds, max_hops=4, checkpoint_every=2)
+    out = bfs_levels(edges, seeds, max_hops=4)
     return out.select(F.col("node").alias("custkey"), "dist")
 
 

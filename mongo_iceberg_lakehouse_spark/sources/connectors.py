@@ -126,10 +126,8 @@ def iceberg_runtime_available(spark: SparkSession) -> bool:
 
     Probed by resolving Iceberg's SparkCatalog class through the JVM's
     context classloader (the loader Spark uses for `--jars` /
-    `spark.jars.packages` additions). Callers use this to auto-select the
-    atomic DataFrameWriterV2 ``createOrReplace`` path
-    (catalog.save_table_replace(use_v2=True)) when a future image ships the
-    jar, without configuration changes.
+    `spark.jars.packages` additions). The connector tests use it to skip
+    Iceberg-only cases; the package has no Iceberg write path.
     """
     return jvm_class_available(spark, "org.apache.iceberg.spark.SparkCatalog")
 

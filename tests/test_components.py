@@ -2,10 +2,13 @@
 
 from __future__ import annotations
 
-from mongo_iceberg_lakehouse_spark.operators.dedup import (
-    connected_components,
-    dedup_survivors,
-)
+from mongo_iceberg_lakehouse_spark.operators.dedup import dedup_survivors
+from mongo_iceberg_lakehouse_spark.operators.graph import connected_components
+
+
+def _components(pairs):
+    out = connected_components(pairs, src="id_a", dst="id_b").collect()
+    return {r.node: r.component for r in out}
 
 
 def test_connected_components_chain_and_clique(spark):
@@ -14,7 +17,7 @@ def test_connected_components_chain_and_clique(spark):
         [(1, 2), (2, 3), (3, 4), (10, 11), (10, 12), (11, 12), (20, 21)],
         ["id_a", "id_b"],
     )
-    comp = {r.id: r.component for r in connected_components(pairs).collect()}
+    comp = _components(pairs)
     assert comp == {
         1: 1, 2: 1, 3: 1, 4: 1,
         10: 10, 11: 10, 12: 10,
@@ -42,7 +45,7 @@ def test_components_converges_on_long_chain(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], ["id_a", "id_b"]
     )
-    comp = {r.id: r.component for r in connected_components(pairs).collect()}
+    comp = _components(pairs)
     assert set(comp.values()) == {0}
     assert len(comp) == 41
 
@@ -66,3 +69,13 @@ def test_survivors_by_quality_keeps_best_per_cluster(spark):
     }
     # best of {1,2,3} is 2; {10,11} ties on score -> min id 10; singleton kept
     assert got == {2: 9.0, 10: 1.0, 99: 0.0}
+
+
+def test_empty_pairs_keep_every_row(spark):
+    docs = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "doc_id long, text string"
+    )
+    pairs = spark.createDataFrame([], "id_a long, id_b long")
+    assert _components(pairs) == {}
+    out = sorted(r.doc_id for r in dedup_survivors(docs, pairs).collect())
+    assert out == [1, 2, 3]

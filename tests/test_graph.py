@@ -27,7 +27,7 @@ def test_pagerank_star_hand_computed(spark):
     # 1->3, 2->3 with one iteration from uniform 1/3:
     #   r(1) = r(2) = 0.15/3                      (no in-edges)
     #   r(3) = 0.15/3 + 0.85*(1/3 + 1/3)
-    r = _ranks(spark, [(1, 3), (2, 3)], iterations=1, checkpoint_every=0)
+    r = _ranks(spark, [(1, 3), (2, 3)], iterations=1)
     assert r[1] == pytest.approx(0.15 / 3, abs=1e-12)
     assert r[2] == pytest.approx(0.15 / 3, abs=1e-12)
     assert r[3] == pytest.approx(0.15 / 3 + 0.85 * (2 / 3), abs=1e-12)
@@ -47,11 +47,29 @@ def test_pagerank_dedupes_and_drops_self_loops(spark):
     assert clean == dirty
 
 
-def test_pagerank_checkpoint_matches_uncheckpointed(spark):
+def _power_iteration(edges, iterations, damping=0.85):
+    """Pure-Python twin of the documented recurrence
+    r(v) = (1-d)/N + d * sum_{u->v} r(u)/outdeg(u), danglers leaking."""
+    nodes = sorted({n for e in edges for n in e})
+    outdeg = {u: sum(1 for s, _ in edges if s == u) for u in nodes}
+    r = {n: 1.0 / len(nodes) for n in nodes}
+    for _ in range(iterations):
+        r = {
+            v: (1 - damping) / len(nodes)
+            + damping * sum(r[u] / outdeg[u] for u, w in edges if w == v)
+            for v in nodes
+        }
+    return r
+
+
+def test_pagerank_checkpointed_matches_power_iteration(spark):
+    # 5 rounds cross both mid-loop lineage cuts (after rounds 2 and 4)
     edges = [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1)]
-    a = _ranks(spark, edges, iterations=5, checkpoint_every=2)
-    b = _ranks(spark, edges, iterations=5, checkpoint_every=0)
-    assert a == b
+    got = _ranks(spark, edges, iterations=5)
+    want = _power_iteration(edges, iterations=5)
+    assert got.keys() == want.keys()
+    for n, pr in want.items():
+        assert got[n] == pytest.approx(pr, abs=1e-12)
 
 
 def test_triangle_count_k4(spark):

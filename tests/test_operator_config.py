@@ -2,6 +2,11 @@
 environment. An env-gated operator arm exists only while its interleaved
 A/B runs (scripts/ab_envtoggle.py); the losing arm is deleted before the
 change merges, so no committed operator reads ``os.environ``/``os.getenv``.
+
+The same holds for parameter-gated arms: a boolean option of an operator
+(or of ``catalog.py``) that the package only ever runs with one value is a
+second code path nothing exercises, so every such option must be run with
+both values by the package's own call sites.
 """
 
 from __future__ import annotations
@@ -12,6 +17,7 @@ from pathlib import Path
 import mongo_iceberg_lakehouse_spark.operators as operators
 
 OPERATORS_DIR = Path(operators.__file__).parent
+PACKAGE_DIR = OPERATORS_DIR.parent
 
 
 def _env_reads(source: str) -> list[int]:
@@ -50,3 +56,103 @@ def test_operators_read_no_env():
         if (lines := _env_reads(p.read_text()))
     }
     assert not found, f"operator env reads (file: lines): {found}"
+
+
+def _bool_options(source: str) -> list[tuple[str, str, int | None, bool]]:
+    """``(function, parameter, positional index or None, default)`` for
+    every parameter whose default is a bool literal."""
+    out = []
+    for node in ast.walk(ast.parse(source)):
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        a = node.args
+        pos = a.posonlyargs + a.args
+        pairs = list(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+        pairs += [(p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d]
+        for p, d in pairs:
+            if isinstance(d, ast.Constant) and isinstance(d.value, bool):
+                idx = pos.index(p) if p in pos else None
+                out.append((node.name, p.arg, idx, d.value))
+    return out
+
+
+def _values_in_use(
+    fn: str, param: str, idx: int | None, default: bool, sources: list[str]
+) -> set[bool]:
+    """Values ``param`` takes across every call of a function named ``fn``:
+    the default where the call omits it, the literal where it passes one,
+    and both where the value is computed or the call unpacks ``*``/``**``."""
+    seen: set[bool] = set()
+    for src in sources:
+        for node in ast.walk(ast.parse(src)):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name != fn:
+                continue
+            if any(isinstance(x, ast.Starred) for x in node.args) or any(
+                k.arg is None for k in node.keywords
+            ):
+                seen |= {True, False}
+                continue
+            vals = [k.value for k in node.keywords if k.arg == param]
+            if idx is not None and idx < len(node.args):
+                vals.append(node.args[idx])
+            if not vals:
+                seen.add(default)
+            for v in vals:
+                if isinstance(v, ast.Constant) and isinstance(v.value, bool):
+                    seen.add(v.value)
+                else:
+                    seen |= {True, False}
+    return seen
+
+
+def _single_value_options(
+    defs: dict[str, str], callers: list[str]
+) -> list[str]:
+    """``file::function(param)`` for each bool option in ``defs`` (file
+    name -> source) that ``callers`` run with fewer than two values."""
+    return [
+        f"{fname}::{fn}({param})"
+        for fname, src in defs.items()
+        for fn, param, idx, default in _bool_options(src)
+        if len(_values_in_use(fn, param, idx, default, callers)) < 2
+    ]
+
+
+def test_detector_finds_single_value_options():
+    defs = {
+        "m.py": (
+            "def f(x, fast=False, *, strict=True):\n"
+            "    return x\n"
+            "def g(x, keep=True):\n"
+            "    return x\n"
+            "def h(x, on=False):\n"
+            "    return x\n"
+            "def unused(x, flag=True):\n"
+            "    return x\n"
+        )
+    }
+    callers = [
+        "f(1)\n"
+        "m.f(2, True)\n"            # fast: both values; strict: default only
+        "g(1, keep=False)\n"        # keep: overridden at every call
+        "h(1, on=cond)\n"           # computed value counts as both
+    ]
+    assert _single_value_options(defs, callers) == [
+        "m.py::f(strict)",
+        "m.py::g(keep)",
+        "m.py::unused(flag)",
+    ]
+
+
+def test_every_bool_option_runs_both_values():
+    defs = {
+        p.name: p.read_text()
+        for p in [*sorted(OPERATORS_DIR.glob("*.py")), PACKAGE_DIR / "catalog.py"]
+    }
+    callers = [p.read_text() for p in sorted(PACKAGE_DIR.rglob("*.py"))]
+    found = _single_value_options(defs, callers)
+    assert not found, f"bool options run with a single value: {found}"

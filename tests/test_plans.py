@@ -146,15 +146,15 @@ def test_dsir_bucket_dict_is_broadcast(spark):
 
 def test_semdedup_assignment_has_no_window_sort(spark):
     # argmax assignment is a max_by partial agg, not a row_number window:
-    # no Window operator may appear anywhere (the assignment subtree sits
-    # behind a lazy localCheckpoint, so probe the operator pre-cut)
+    # no Window operator may appear anywhere (semdedup_prune puts the
+    # assignment behind a lazy localCheckpoint, so probe the step itself)
     from mongo_iceberg_lakehouse_spark.operators.similarity import (
-        semdedup_prune,
+        _semdedup_assign,
     )
 
     e = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     plan = (
-        semdedup_prune(e, k=4, checkpoint_assignment=False)
+        _semdedup_assign(e, 4, "vec_id", "embedding")
         ._jdf.queryExecution()
         .explainString(
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(

@@ -45,17 +45,17 @@ def test_graph_loops_release_caches(spark, edges):
     # additionally leaked the persisted symmetric-edge / node / edge-table
     # caches (LPA +1, pagerank +2, bfs +1 per invocation).
     _clear(spark)
-    label_propagation(edges, iterations=4, checkpoint_every=2).count()
+    label_propagation(edges, iterations=4).count()
     assert _n_persistent(spark) <= 2  # mid ckpt + final ckpt, no nbr
 
     _clear(spark)
-    pagerank(edges, iterations=5, checkpoint_every=2).count()
+    pagerank(edges, iterations=5).count()
     # lazy edge ckpt + 2 mid ckpts + final ckpt, no nodes/ee
     assert _n_persistent(spark) <= 4
 
     _clear(spark)
     seeds = spark.createDataFrame([(1,)], "node long")
-    bfs_levels(edges, seeds, max_hops=4, checkpoint_every=2).count()
+    bfs_levels(edges, seeds, max_hops=4).count()
     assert _n_persistent(spark) <= 3  # mid dist/frontier + final, no e
     _clear(spark)
 
