@@ -3624,9 +3624,7 @@ def streaming_scd2_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .streaming.scd2 import run_scd2_stream_available_now
 
     tune(spark)
-    dim = run_scd2_stream_available_now(
-        spark, sf_dir, n_batches=3, query_name="scd2_stream_q"
-    )
+    dim = run_scd2_stream_available_now(spark, sf_dir, n_batches=3)
     return dim.select(
         F.col("o_custkey").alias("custkey"),
         F.col("o_orderpriority").alias("priority"),
@@ -8591,18 +8589,13 @@ def source_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "connection sink is correct here; corpus-sized JDBC writes would "
     "instead batch per partition (numPartitions on the writer). The "
     "Derby db is shut down and removed before return (tmp-leak "
-    "contract); jar-less images fall back to returning the aggregate "
-    "directly.",
+    "contract).",
 )
 def sink_jdbc_gold_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from .sources.connectors import (
         DERBY_EMBEDDED_DRIVER,
-        derby_embedded_available,
-        derby_shutdown,
         read_jdbc,
+        scratch_derby,
         write_jdbc,
     )
 
@@ -8616,20 +8609,12 @@ def sink_jdbc_gold_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("revenue"),
         )
     )
-    if not derby_embedded_available(spark):  # pragma: no cover
-        return report
-    base = tempfile.mkdtemp(prefix="jdbc_sink_")
-    db = f"{base}/gold"
-    try:
-        url = f"jdbc:derby:{db};create=true"
+    with scratch_derby(spark, "jdbc_sink_") as (url, _):
         write_jdbc(report, url, "gold_report", driver=DERBY_EMBEDDED_DRIVER)
         back = read_jdbc(
             spark, url, "gold_report", driver=DERBY_EMBEDDED_DRIVER
         )
         return back.localCheckpoint(eager=True)
-    finally:
-        derby_shutdown(spark, db)
-        shutil.rmtree(base, ignore_errors=True)
 
 
 @register(

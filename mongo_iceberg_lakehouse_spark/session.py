@@ -124,12 +124,10 @@ def get_spark(
     # below this at runtime, so oversizing is cheap. At big synthetic SFs
     # the engine auto-raises this from the sf_dir's on-disk table bytes
     # (sources.tables.autosize_shuffle_partitions — the round-6 sf100 OOM
-    # class, fixed structurally); SPARK_GRAFT_SHUFFLE_PARTITIONS remains
-    # the explicit override and disables the auto-derivation.
-    shuffle_parts = os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS", str(int(cpus) * 2)
+    # class, fixed structurally).
+    builder = builder.config(
+        "spark.sql.shuffle.partitions", str(int(cpus) * 2)
     )
-    builder = builder.config("spark.sql.shuffle.partitions", shuffle_parts)
     if warehouse_dir:
         builder = builder.config("spark.sql.warehouse.dir", warehouse_dir)
     if extra_confs:

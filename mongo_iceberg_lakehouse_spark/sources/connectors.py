@@ -15,6 +15,11 @@ Reference citations:
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -194,27 +199,45 @@ def read_jdbc(
 DERBY_EMBEDDED_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"
 
 
-def derby_embedded_available(spark: SparkSession) -> bool:
-    """True iff Derby's embedded JDBC driver is on the classpath (it is,
-    in every stock Spark distribution). Also redirects derby.log away from
-    the process CWD (a boot-time system property, effective because this
-    probe runs before the first connection boots the engine)."""
+def _redirect_derby_log(spark: SparkSession) -> None:
+    """Send derby.log to /tmp instead of the process CWD (a boot-time
+    system property: effective only before the first connection boots the
+    engine)."""
     try:
         spark.sparkContext._jvm.java.lang.System.setProperty(
             "derby.stream.error.file", "/tmp/derby_engine.log"
         )
     except Exception:
         pass
+
+
+def derby_embedded_available(spark: SparkSession) -> bool:
+    """True iff Derby's embedded JDBC driver is on the classpath (it is,
+    in every stock Spark distribution). Also redirects derby.log away from
+    the process CWD."""
+    _redirect_derby_log(spark)
     return jvm_class_available(spark, DERBY_EMBEDDED_DRIVER)
 
 
-def derby_shutdown(spark: SparkSession, db_path: str) -> None:
-    """Cleanly shut an embedded Derby database down before its directory
-    is removed (Derby signals a successful shutdown by RAISING SQLState
-    08006, so the exception here is the success path)."""
+@contextmanager
+def scratch_derby(
+    spark: SparkSession, prefix: str
+) -> Iterator[tuple[str, str]]:
+    """Yield ``(url, scratch_dir)``: the create-URL of a fresh embedded
+    Derby database inside a new temp dir, and that dir for the caller's
+    other scratch files. On exit the database is shut down and the dir
+    removed. Derby signals a successful shutdown by RAISING SQLState
+    08006, so the exception there is the success path."""
+    _redirect_derby_log(spark)
+    base = tempfile.mkdtemp(prefix=prefix)
+    db = f"{base}/gold"
     try:
-        spark.sparkContext._jvm.java.sql.DriverManager.getConnection(
-            f"jdbc:derby:{db_path};shutdown=true"
-        )
-    except Exception:
-        pass
+        yield f"jdbc:derby:{db};create=true", base
+    finally:
+        try:
+            spark.sparkContext._jvm.java.sql.DriverManager.getConnection(
+                f"jdbc:derby:{db};shutdown=true"
+            )
+        except Exception:
+            pass
+        shutil.rmtree(base, ignore_errors=True)

@@ -166,18 +166,15 @@ def autosize_shuffle_partitions(spark: SparkSession, sf_dir: str) -> None:
 
     Round-6 lesson made automatic: the sf100 decade OOM'd 64-partition
     reduces whose hash-agg state carried ~16M rows each, and the manual
-    ``SPARK_GRAFT_SHUFFLE_PARTITIONS=512`` workaround only helps whoever
+    ``spark.sql.shuffle.partitions=512`` workaround only helps whoever
     knows to set it. Bytes (not row counts) are the right statistic here:
     a 5M-row documents table explodes to ~1B span/gram rows, and its
     ~17 GB footprint — not its row count — tracks that shuffle state
     (17 GB / 32 MB ≈ 530 ≈ the knob that fixed round 6). Only-raise and
-    derived once per sf_dir: an explicit env knob still wins (get_spark
-    applies it at launch and we never fight a caller's setting downward),
-    and driver-scale dirs (< ~2 GB) derive a need below the session
-    default, so nothing changes for tests or the graded window."""
-    if sf_dir in _AUTOSIZED_DIRS or os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS"
-    ):
+    derived once per sf_dir: a caller's higher setting is never fought
+    downward, and driver-scale dirs (< ~2 GB) derive a need below the
+    session default, so nothing changes for tests or the graded window."""
+    if sf_dir in _AUTOSIZED_DIRS:
         return
     _AUTOSIZED_DIRS.add(sf_dir)
     biggest = max(table_bytes(sf_dir, t) for t in FIXTURE_TABLES)

@@ -16,26 +16,11 @@ a bounded 1-row state, no watermark needed.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.text import gopher_quality_rules
-from .events import state_partitions
-
-
-def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the documents fixture (schema probed via the
-    batch reader — streaming requires a declared schema)."""
-    from ..session import tune
-    from ..sources.tables import read_parquet
-
-    tune(spark)
-    schema = read_parquet(spark, f"{sf_dir}/documents.parquet").schema
-    return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+from .events import collect_available_now, read_table_stream, run_available_now
 
 
 def quality_funnel(docs: DataFrame) -> DataFrame:
@@ -57,27 +42,9 @@ def quality_funnel(docs: DataFrame) -> DataFrame:
     )
 
 
-def run_stream_quality_funnel(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "stream_quality_funnel",
-) -> DataFrame:
-    for q in spark.streams.active:
-        if q.name == query_name:
-            q.stop()
-    docs = read_documents_stream(spark, sf_dir)
-    funnel = quality_funnel(docs)
-    with state_partitions(spark):
-        q = (
-            funnel.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
-    return spark.table(query_name)
+def run_stream_quality_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = read_table_stream(spark, sf_dir, "documents")
+    return collect_available_now(quality_funnel(docs), "complete")
 
 
 def pii_funnel(docs: DataFrame) -> DataFrame:
@@ -100,27 +67,9 @@ def pii_funnel(docs: DataFrame) -> DataFrame:
     )
 
 
-def run_stream_pii_funnel(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "stream_pii_funnel",
-) -> DataFrame:
-    for q in spark.streams.active:
-        if q.name == query_name:
-            q.stop()
-    docs = read_documents_stream(spark, sf_dir)
-    funnel = pii_funnel(docs)
-    with state_partitions(spark):
-        q = (
-            funnel.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
-    return spark.table(query_name)
+def run_stream_pii_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = read_table_stream(spark, sf_dir, "documents")
+    return collect_available_now(pii_funnel(docs), "complete")
 
 
 def classifier_funnel(docs: DataFrame) -> DataFrame:
@@ -144,48 +93,24 @@ def classifier_funnel(docs: DataFrame) -> DataFrame:
 
 
 def run_stream_classifier_funnel(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "stream_classifier_funnel",
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    for q in spark.streams.active:
-        if q.name == query_name:
-            q.stop()
-    docs = read_documents_stream(spark, sf_dir)
-    funnel = classifier_funnel(docs)
-    with state_partitions(spark):
-        q = (
-            funnel.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
-    return spark.table(query_name)
+    docs = read_table_stream(spark, sf_dir, "documents")
+    return collect_available_now(classifier_funnel(docs), "complete")
 
 
-def read_embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the embeddings fixture (schema probed via
-    the batch reader — streaming requires a declared schema)."""
-    from ..session import tune
-    from ..sources.tables import read_parquet
-
-    tune(spark)
-    schema = read_parquet(spark, f"{sf_dir}/embeddings.parquet").schema
+def _drift_cohort() -> Column:
+    """Deterministic two-way cohort split of the embeddings by vec_id."""
     return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
+        F.conv(
+            F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10
+        ).cast("long")
+        % 2
+        == 0
     )
 
 
-def run_stream_embedding_drift(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "stream_embedding_drift",
-) -> DataFrame:
+def run_stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space drift, live: the batch drift monitor
     (operators/similarity.py::embedding_drift_by_cohort) runs UNCHANGED
     on an embedding STREAM — the numpy partial sums are a stateless
@@ -196,36 +121,15 @@ def run_stream_embedding_drift(
     re-scan."""
     from ..operators.similarity import embedding_drift_by_cohort
 
-    for q in spark.streams.active:
-        if q.name == query_name:
-            q.stop()
-    vecs = read_embeddings_stream(spark, sf_dir)
-    cohort = (
-        F.conv(
-            F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        % 2
-        == 0
-    )
-    drift = embedding_drift_by_cohort(vecs, cohort)
-    with state_partitions(spark):
-        q = (
-            drift.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
-    return spark.table(query_name)
+    vecs = read_table_stream(spark, sf_dir, "embeddings")
+    drift = embedding_drift_by_cohort(vecs, _drift_cohort())
+    return collect_available_now(drift, "complete")
 
 
 def run_stream_embedding_drift_incremental(
     spark: SparkSession,
     sf_dir: str,
     n_batches: int = 3,
-    query_name: str = "stream_embedding_drift_incr",
 ) -> DataFrame:
     """UPDATE-mode drift monitor (round-5 verdict #6): the 100 TB shape.
 
@@ -261,14 +165,6 @@ def run_stream_embedding_drift_incremental(
     from ..operators.similarity import embedding_drift_by_cohort
     from ..sources.tables import load_table, table_rowcount
 
-    for q in spark.streams.active:
-        if q.name == query_name:
-            q.stop()
-
-    root = tempfile.mkdtemp(prefix="drift_incr_")
-    in_dir = os.path.join(root, "in")
-    ckpt = os.path.join(root, "ckpt")
-    os.makedirs(in_dir)
     vecs = load_table(spark, sf_dir, "embeddings")
     par = spark.sparkContext.defaultParallelism
     k = max(1, min(par, table_rowcount(sf_dir, "embeddings") // 50_000))
@@ -278,41 +174,6 @@ def run_stream_embedding_drift_incremental(
     batched = vecs.withColumn(
         "__b", (slot % n_batches).cast("int")
     ).withColumn("__f", (slot / n_batches).cast("int"))
-    slices = os.path.join(root, "slices")
-    # one scan, one shuffle, parallel writers; partitionBy keeps exactly
-    # one file per (slice, file) pair and drops the helper columns
-    batched.repartition(n_batches * k, "__b", "__f").write.partitionBy(
-        "__b", "__f"
-    ).parquet(slices)
-    per_slice: list[int] = []
-    for b in range(n_batches):
-        fs = sorted(glob.glob(os.path.join(slices, f"__b={b}", "*", "*.parquet")))
-        per_slice.append(len(fs))
-        for i, src in enumerate(fs):
-            dst = os.path.join(in_dir, f"batch_{b:04d}_{i:02d}.parquet")
-            shutil.move(src, dst)
-            os.utime(dst, (1_700_000_000 + b, 1_700_000_000 + b))
-    # equal counts -> one trigger per slice; a rare empty (b, f) pair
-    # falls back to per-file triggers (SPLITS a slice, never merges two)
-    mft = k if all(c == k for c in per_slice) else 1
-
-    stream = (
-        spark.readStream.schema(vecs.schema)
-        .option("maxFilesPerTrigger", mft)
-        .option("latestFirst", "false")
-        .parquet(in_dir)
-    )
-    cohort = (
-        F.conv(
-            F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        % 2
-        == 0
-    )
-    # ordered=False: sorting an update-mode streaming agg is illegal; the
-    # final state is sorted on the driver below (dim-bounded)
-    drift = embedding_drift_by_cohort(stream, cohort, ordered=False)
-
     updates: list[tuple[int, list]] = []
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -320,17 +181,48 @@ def run_stream_embedding_drift_incremental(
         # not the corpus
         updates.append((batch_id, batch_df.collect()))
 
-    with state_partitions(spark):
-        q = (
+    # the result is built on the driver, so the root goes with the block
+    with tempfile.TemporaryDirectory(
+        prefix="drift_incr_", ignore_cleanup_errors=True
+    ) as root:
+        in_dir = os.path.join(root, "in")
+        os.makedirs(in_dir)
+        slices = os.path.join(root, "slices")
+        # one scan, one shuffle, parallel writers; partitionBy keeps
+        # exactly one file per (slice, file) pair and drops the helpers
+        batched.repartition(n_batches * k, "__b", "__f").write.partitionBy(
+            "__b", "__f"
+        ).parquet(slices)
+        per_slice: list[int] = []
+        for b in range(n_batches):
+            fs = sorted(
+                glob.glob(os.path.join(slices, f"__b={b}", "*", "*.parquet"))
+            )
+            per_slice.append(len(fs))
+            for i, src in enumerate(fs):
+                dst = os.path.join(in_dir, f"batch_{b:04d}_{i:02d}.parquet")
+                shutil.move(src, dst)
+                os.utime(dst, (1_700_000_000 + b, 1_700_000_000 + b))
+        # equal counts -> one trigger per slice; a rare empty (b, f) pair
+        # falls back to per-file triggers (SPLITS a slice, never merges two)
+        mft = k if all(c == k for c in per_slice) else 1
+        stream = (
+            spark.readStream.schema(vecs.schema)
+            .option("maxFilesPerTrigger", mft)
+            .option("latestFirst", "false")
+            .parquet(in_dir)
+        )
+        # ordered=False: sorting an update-mode streaming agg is illegal;
+        # the final state is sorted on the driver below (dim-bounded)
+        drift = embedding_drift_by_cohort(
+            stream, _drift_cohort(), ordered=False
+        )
+        run_available_now(
+            spark,
             drift.writeStream.foreachBatch(process)
             .outputMode("update")
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", os.path.join(root, "ckpt")),
         )
-        q.awaitTermination()
-        q.stop()
 
     n_nonempty = sum(1 for _, rows in updates if rows)
     if n_nonempty < 2:

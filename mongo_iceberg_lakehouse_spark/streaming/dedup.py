@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .events import read_events_stream, state_partitions
+from .events import collect_available_now, read_events_stream
 
 
 def deduped_events_stream(
@@ -32,22 +32,7 @@ def deduped_events_stream(
 
 
 def run_streaming_dedup_available_now(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "events_deduped",
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    for q in spark.streams.active:
-        if q.name == query_name:
-            q.stop()
-    with state_partitions(spark):
-        q = (
-            deduped_events_stream(spark, sf_dir)
-            .writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
-    return spark.table(query_name)
+    stream = deduped_events_stream(spark, sf_dir)
+    return collect_available_now(stream, "append")

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .events import read_events_stream, state_partitions
+from .events import collect_available_now, read_events_stream
 
 
 def view_click_join(
@@ -121,33 +121,17 @@ def run_view_click_join_available_now(
     spark: SparkSession,
     sf_dir: str,
     attribution_window: str = "30 minutes",
-    query_name: str = "view_click_attribution",
 ) -> DataFrame:
     """Materialize the stream-stream join through a memory sink (append
     mode — the only mode stream-stream joins support) and return it."""
-    for q in spark.streams.active:
-        if q.name == query_name:
-            q.stop()
     joined = view_click_join(
         read_events_stream(spark, sf_dir), attribution_window
     )
-    with state_partitions(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
-    return spark.table(query_name)
+    return collect_available_now(joined, "append")
 
 
 def run_stream_static_segment_counts(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "stream_static_segment",
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Stream-static join: the events STREAM enriched against the static
     customer dimension (user_id -> c_custkey), rolled up to per-segment
@@ -163,9 +147,6 @@ def run_stream_static_segment_counts(
 
     from ..sources.tables import read_parquet
 
-    for q in spark.streams.active:
-        if q.name == query_name:
-            q.stop()
     events = read_events_stream(spark, sf_dir)
     customers = read_parquet(spark, f"{sf_dir}/customer.parquet").select(
         "c_custkey", "c_mktsegment"
@@ -177,14 +158,4 @@ def run_stream_static_segment_counts(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("total_value"),
     )
-    with state_partitions(spark):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
-    return spark.table(query_name)
+    return collect_available_now(counts, "complete")

@@ -33,14 +33,11 @@ meaningful.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-from .events import state_partitions
 
 from ..operators.dedup import (
     band_hashes,
@@ -49,6 +46,7 @@ from ..operators.dedup import (
     minhash_signature,
     shingle_hashes,
 )
+from .events import run_available_now, write_batch_files
 
 BATCH_SCHEMA = StructType(
     [
@@ -179,54 +177,41 @@ def run_incremental_neardup_available_now(
     bands: int = 16,
     shingle_n: int = 2,
     jaccard_threshold: float = 0.2,
-    query_name: str = "neardup_incremental",
 ) -> DataFrame:
     """Drive the incremental dedup as a real Structured Streaming query:
     the documents fixture is split into ``n_batches`` files, streamed one
     file per micro-batch (availableNow), each foreachBatch invocation runs
-    ``dedup_batch_against_store``. Returns the full decision log."""
+    ``dedup_batch_against_store``. Returns the full decision log (eagerly
+    checkpointed: the scratch root is removed before return)."""
     from ..sources.tables import load_table
-
-    root = tempfile.mkdtemp(prefix="neardup_stream_")
-    in_dir = os.path.join(root, "in")
-    store_dir = os.path.join(root, "store")
-    out_dir = os.path.join(root, "decisions")
-    ckpt = os.path.join(root, "ckpt")
-    os.makedirs(in_dir)
 
     docs = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "text", F.pmod("doc_id", F.lit(n_batches)).alias("batch"))
     )
-    for b in range(n_batches):
-        part = os.path.join(root, f"part_{b}")
-        docs.filter(F.col("batch") == b).coalesce(1).write.parquet(part)
-        data = [f for f in os.listdir(part) if f.endswith(".parquet")][0]
-        dst = os.path.join(in_dir, f"batch_{b:04d}.parquet")
-        shutil.move(os.path.join(part, data), dst)
-        os.utime(dst, (1_700_000_000 + b, 1_700_000_000 + b))  # file order = batch order
+    with tempfile.TemporaryDirectory(
+        prefix="neardup_stream_", ignore_cleanup_errors=True
+    ) as root:
+        in_dir = write_batch_files(docs, "batch", n_batches, root)
+        store_dir = os.path.join(root, "store")
+        out_dir = os.path.join(root, "decisions")
 
-    def process(batch_df: DataFrame, _batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        dedup_batch_against_store(
-            spark, batch_df, store_dir,
-            num_hashes=num_hashes, bands=bands,
-            shingle_n=shingle_n, jaccard_threshold=jaccard_threshold,
-        ).write.mode("append").parquet(out_dir)
+        def process(batch_df: DataFrame, _batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            dedup_batch_against_store(
+                spark, batch_df, store_dir,
+                num_hashes=num_hashes, bands=bands,
+                shingle_n=shingle_n, jaccard_threshold=jaccard_threshold,
+            ).write.mode("append").parquet(out_dir)
 
-    with state_partitions(spark):
-        q = (
+        run_available_now(
+            spark,
             spark.readStream.schema(BATCH_SCHEMA)
             .option("maxFilesPerTrigger", 1)
             .option("latestFirst", "false")
             .parquet(in_dir)
             .writeStream.foreachBatch(process)
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", os.path.join(root, "ckpt")),
         )
-        q.awaitTermination()
-        q.stop()
-    return spark.read.parquet(out_dir)
+        return spark.read.parquet(out_dir).localCheckpoint(eager=True)

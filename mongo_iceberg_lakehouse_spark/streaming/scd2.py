@@ -30,7 +30,6 @@ dim version per batch, same semantics. Per-batch cost scales with
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -39,7 +38,7 @@ from pyspark.sql.types import LongType, StringType, StructType, TimestampType
 
 from ..operators.relational import scd2_from_changelog
 
-from .events import state_partitions
+from .events import run_available_now, write_batch_files
 
 
 def _latest_dim(store_dir: str) -> str | None:
@@ -90,20 +89,13 @@ def run_scd2_stream_available_now(
     sf_dir: str,
     n_batches: int = 3,
     in_order: bool = True,
-    query_name: str = "scd2_stream",
 ) -> DataFrame:
     """Stream the orders changelog (customer -> order priority) through the
     incremental SCD2 maintainer, one file per micro-batch, and return the
-    final dimension. ``in_order=False`` splits batches by hash instead of by
+    final dimension (eagerly checkpointed: the scratch root is removed
+    before return). ``in_order=False`` splits batches by hash instead of by
     date, exercising the out-of-order exactness claim."""
     from ..sources.tables import load_table
-
-    root = tempfile.mkdtemp(prefix="scd2_stream_")
-    in_dir = os.path.join(root, "in")
-    store_dir = os.path.join(root, "store")
-    ckpt = os.path.join(root, "ckpt")
-    os.makedirs(in_dir)
-    os.makedirs(store_dir)
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderpriority", "o_orderdate", "o_orderkey"
@@ -119,14 +111,8 @@ def run_scd2_stream_available_now(
         batched = orders.withColumn(
             "b", F.pmod(F.xxhash64("o_orderkey"), F.lit(n_batches))
         )
-    for b in range(n_batches):
-        part = os.path.join(root, f"part_{b}")
-        batched.filter(F.col("b") == b).drop("b").coalesce(1).write.parquet(part)
-        data = [f for f in os.listdir(part) if f.endswith(".parquet")][0]
-        dst = os.path.join(in_dir, f"batch_{b:04d}.parquet")
-        shutil.move(os.path.join(part, data), dst)
-        os.utime(dst, (1_700_000_000 + b, 1_700_000_000 + b))
-
+    # the stream reads the declared columns only, so the batch column in
+    # the files stays out of the changelog
     schema = (
         StructType()
         .add("o_custkey", LongType())
@@ -134,31 +120,32 @@ def run_scd2_stream_available_now(
         .add("o_orderdate", TimestampType())
         .add("o_orderkey", LongType())
     )
+    with tempfile.TemporaryDirectory(
+        prefix="scd2_stream_", ignore_cleanup_errors=True
+    ) as root:
+        in_dir = write_batch_files(batched, "b", n_batches, root)
+        store_dir = os.path.join(root, "store")
+        os.makedirs(store_dir)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        apply_scd2_batch(
-            spark, batch_df, store_dir,
-            key="o_custkey", attr="o_orderpriority",
-            ts_col="o_orderdate", tiebreak="o_orderkey",
-            batch_id=batch_id,
-        )
+        def process(batch_df: DataFrame, batch_id: int) -> None:
+            if batch_df.isEmpty():
+                return
+            apply_scd2_batch(
+                spark, batch_df, store_dir,
+                key="o_custkey", attr="o_orderpriority",
+                ts_col="o_orderdate", tiebreak="o_orderkey",
+                batch_id=batch_id,
+            )
 
-    with state_partitions(spark):
-        q = (
+        run_available_now(
+            spark,
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .option("latestFirst", "false")
             .parquet(in_dir)
             .writeStream.foreachBatch(process)
-            .queryName(query_name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", os.path.join(root, "ckpt")),
         )
-        q.awaitTermination()
-        q.stop()
-    latest = _latest_dim(store_dir)
-    assert latest is not None, "stream produced no batches"
-    return spark.read.parquet(latest)
+        latest = _latest_dim(store_dir)
+        assert latest is not None, "stream produced no batches"
+        return spark.read.parquet(latest).localCheckpoint(eager=True)

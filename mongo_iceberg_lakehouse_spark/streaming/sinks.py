@@ -50,75 +50,40 @@ def run_gold_report_to_jdbc(spark, sf_dir: str) -> "object":
     revenue report aggregates in complete mode, and foreachBatch overwrites
     an embedded-Derby table each epoch — the Structured-Streaming form of
     the reference's batch gold-to-Postgres DAG step. Returns the report
-    READ BACK through spark.read.jdbc (eagerly materialized; the Derby db,
-    checkpoint, and store dirs are removed before return)."""
-    import shutil
-    import tempfile
-
+    READ BACK through spark.read.jdbc (eagerly materialized; the Derby db
+    and checkpoint dirs are removed before return)."""
     from pyspark.sql import functions as F
 
     from ..sources.connectors import (
         DERBY_EMBEDDED_DRIVER,
-        derby_embedded_available,
-        derby_shutdown,
         read_jdbc,
+        scratch_derby,
     )
-    from ..sources.tables import read_parquet
+    from .events import read_table_stream, run_available_now
 
-    orders_path = f"{sf_dir}/orders.parquet"
-    schema = read_parquet(spark, orders_path).schema
-    # file-source streams take a DIRECTORY; glob down to the one fixture
-    # file (same pattern as events.read_events_stream)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "orders.parquet")
-        .parquet(sf_dir)
-    )
-    report = stream.groupBy("o_orderstatus").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("revenue"),
-    )
-    if not derby_embedded_available(spark):  # pragma: no cover
-        # jar-less fallback: same values through the batch plan
-        return (
-            read_parquet(spark, orders_path)
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-                .cast("double")
-                .alias("revenue"),
-            )
+    report = (
+        read_table_stream(spark, sf_dir, "orders")
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("revenue"),
         )
-    base = tempfile.mkdtemp(prefix="stream_jdbc_")
-    db = f"{base}/gold"
-    url = f"jdbc:derby:{db};create=true"
-    try:
-        from .events import state_partitions
-
-        with state_partitions(spark):
-            q = (
-                report.writeStream.foreachBatch(
-                    jdbc_report_writer(
-                        url, "gold_report", DERBY_EMBEDDED_DRIVER
-                    )
-                )
-                .outputMode("complete")
-                .option("checkpointLocation", f"{base}/ckpt")
-                .trigger(availableNow=True)
-                .start()
+    )
+    with scratch_derby(spark, "stream_jdbc_") as (url, scratch):
+        run_available_now(
+            spark,
+            report.writeStream.foreachBatch(
+                jdbc_report_writer(url, "gold_report", DERBY_EMBEDDED_DRIVER)
             )
-            q.awaitTermination()
-            q.stop()
+            .outputMode("complete")
+            .option("checkpointLocation", f"{scratch}/ckpt"),
+        )
         back = read_jdbc(
             spark, url, "gold_report", driver=DERBY_EMBEDDED_DRIVER
         )
         return back.localCheckpoint(eager=True)
-    finally:
-        derby_shutdown(spark, db)
-        shutil.rmtree(base, ignore_errors=True)
 
 
 def batch_partitioned_writer(out_dir: str) -> Callable:

@@ -19,10 +19,11 @@ from typing import Any
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .events import read_events_stream, state_partitions
+from .events import collect_available_now, read_events_stream
 
 OUTPUT_SCHEMA = (
     "user_id bigint, n_events bigint, total_value double, last_type string"
@@ -69,31 +70,14 @@ def user_profiles(events: DataFrame) -> DataFrame:
 
 
 def run_user_profiles_available_now(
-    spark: SparkSession,
-    sf_dir: str,
-    query_name: str = "events_user_profiles",
+    spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Run the stateful operator over all available fixture data and return
     the final per-user profiles (update-mode memory sink: last row per user
     wins, deduped by n_events max)."""
-    for q in spark.streams.active:
-        if q.name == query_name:
-            q.stop()
-    stream = user_profiles(read_events_stream(spark, sf_dir))
-    with state_partitions(spark):
-        q = (
-            stream.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
-    from pyspark.sql import functions as F
-    from pyspark.sql import Window
-
-    sink = spark.table(query_name)
+    sink = collect_available_now(
+        user_profiles(read_events_stream(spark, sf_dir)), "update"
+    )
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
         sink.withColumn("__rn", F.row_number().over(w))

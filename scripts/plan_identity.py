@@ -2,10 +2,11 @@
 
 ``dump`` builds every REGISTRY query (no action) and writes its optimized
 logical plan, normalized so two builds of the same code compare equal:
-expression ids (``#123``), ``plan_id=`` tags and ``/tmp`` paths are
-stripped. ``diff`` takes two dumps of the base commit (to find the queries
-whose plans are stable run to run) and one dump of the change, and reports
-every stable query whose plan differs.
+expression ids (``#123``), ``plan_id=`` tags, ``/tmp`` paths and the
+per-call memory-sink names of ``streaming.events.collect_available_now``
+are stripped. ``diff`` takes two dumps of the base commit (to find the
+queries whose plans are stable run to run) and one dump of the change, and
+reports every stable query whose plan differs.
 
 Usage:
   python scripts/plan_identity.py dump OUT.json SF_DIR
@@ -26,6 +27,7 @@ _NORMALIZE = [
     (re.compile(r"#\d+L?"), ""),
     (re.compile(r"plan_id=\d+"), "plan_id="),
     (re.compile(r"/tmp/[^\s,\]\)]+"), "/tmp/*"),
+    (re.compile(r"available_now_[0-9a-f]{32}"), "available_now_*"),
 ]
 
 

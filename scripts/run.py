@@ -140,28 +140,25 @@ SPILL_DIR = "/tmp/duckdb_gate_spill"
 _MAP_COUNT_FLOOR = 1048576
 
 
-def _raise_map_count() -> None:
+def _check_map_count() -> None:
     # DuckDB's out-of-core phase fragments into >64k mmaps on the biggest
     # verification oracles (sf10 span-scrub) and the kernel default
     # vm.max_map_count=65530 turns that into a spurious bad_alloc with
     # 100+ GB free (diagnosed round 5 by watching /proc/self/maps hit the
-    # ceiling). SYSTEM-WIDE SIDE EFFECT (documented in README, Running
-    # section): only raised when the current value is lower, logged when
-    # applied, best-effort (non-root hosts skip silently).
+    # ceiling). The check reads the limit and never writes it: raising a
+    # host-wide kernel setting is the operator's call.
     try:
         with open("/proc/sys/vm/max_map_count") as f:
             current = int(f.read().strip())
-        if current < _MAP_COUNT_FLOOR:
-            with open("/proc/sys/vm/max_map_count", "w") as f:
-                f.write(str(_MAP_COUNT_FLOOR))
-            print(
-                f"# raised vm.max_map_count {current} -> {_MAP_COUNT_FLOOR} "
-                "(system-wide, not restored; DuckDB out-of-core mmap "
-                "headroom)",
-                flush=True,
-            )
     except (OSError, ValueError):
-        pass
+        return
+    if current < _MAP_COUNT_FLOOR:
+        print(
+            f"# vm.max_map_count is {current}: DuckDB's sf10+ out-of-core "
+            f"oracles need {_MAP_COUNT_FLOOR}; raise it before checking at "
+            "that scale",
+            flush=True,
+        )
 
 
 def present_tables(sf_dir: str) -> list[str]:
@@ -328,7 +325,7 @@ def check(
     tables = present_tables(sf_dir)
     names = [n for n in sorted(names) if eligible(n, tables)]
     print(f"# {len(names)} eligible queries over {tables}", flush=True)
-    _raise_map_count()
+    _check_map_count()
     if fresh_jvm and len(names) > 1:
         fails, skips = check_fresh_jvm(sf_dir, names, probes, timeout)
     else:

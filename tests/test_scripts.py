@@ -82,3 +82,82 @@ def test_run_check_fresh_jvm():
     rows_only = [ln for ln in out if ln.startswith("ROWS-ONLY ")]
     assert len(ok) == 1 and "tpch_q1_pricing_summary" in ok[0], out
     assert len(rows_only) == 1 and "dedup_minhash_lsh" in rows_only[0], out
+
+
+_WRITE_MODES = set("wax+")
+
+
+def _proc_sys_writes(source: str) -> list[int]:
+    """Line numbers of ``open(<path>, <write mode>)`` and
+    ``Path(<path>).write_text/write_bytes`` calls whose path is a
+    ``/proc/sys`` literal (plain, f-string prefix, or a name bound to one)."""
+    tree = ast.parse(source)
+
+    def literal(node) -> str | None:
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            return node.value
+        if isinstance(node, ast.JoinedStr) and node.values:
+            return literal(node.values[0])
+        return None
+
+    bound = {
+        t.id
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Assign)
+        and (literal(node.value) or "").startswith("/proc/sys")
+        for t in node.targets
+        if isinstance(t, ast.Name)
+    }
+
+    def is_proc_sys(node) -> bool:
+        if isinstance(node, ast.Name):
+            return node.id in bound
+        if isinstance(node, ast.Call) and node.args:  # Path("/proc/sys/...")
+            return is_proc_sys(node.args[0])
+        return (literal(node) or "").startswith("/proc/sys")
+
+    lines = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        func = ast.unparse(node.func)
+        if func in ("open", "io.open") and node.args:
+            mode = node.args[1] if len(node.args) > 1 else next(
+                (k.value for k in node.keywords if k.arg == "mode"), None
+            )
+            writes = _WRITE_MODES & set(literal(mode) or "")
+            if writes and is_proc_sys(node.args[0]):
+                lines.append(node.lineno)
+        elif (
+            isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("write_text", "write_bytes")
+            and is_proc_sys(node.func.value)
+        ):
+            lines.append(node.lineno)
+    return sorted(lines)
+
+
+def test_detector_finds_proc_sys_writes():
+    src = (
+        "from pathlib import Path\n"
+        "open('/proc/sys/vm/max_map_count', 'w').write('1')\n"
+        "LIMIT = '/proc/sys/fs/file-max'\n"
+        "open(LIMIT, mode='a')\n"
+        "Path(f'/proc/sys/vm/{name}').write_text('1')\n"
+        "open('/proc/sys/vm/max_map_count').read()\n"
+        "open('/proc/self/maps').read()\n"
+        "open('/tmp/x', 'w')\n"
+    )
+    assert _proc_sys_writes(src) == [2, 4, 5]
+
+
+def test_no_code_writes_kernel_settings():
+    # a check or a query must leave the host as it found it: reading a
+    # kernel limit to warn about it is fine, writing one is not
+    found = {
+        str(p.relative_to(REPO)): lines
+        for d in ("scripts", "mongo_iceberg_lakehouse_spark")
+        for p in sorted((REPO / d).rglob("*.py"))
+        if (lines := _proc_sys_writes(p.read_text()))
+    }
+    assert not found, f"/proc/sys writes (file: lines): {found}"

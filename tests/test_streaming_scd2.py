@@ -28,8 +28,7 @@ def _batch_expected(spark):
 def test_streaming_scd2_equals_batch_rebuild(spark, in_order):
     expected = _batch_expected(spark)
     got = run_scd2_stream_available_now(
-        spark, SF, n_batches=3, in_order=in_order,
-        query_name=f"scd2_stream_{in_order}",
+        spark, SF, n_batches=3, in_order=in_order
     )
     assert {tuple(r) for r in got.select(*COLS).collect()} == expected
     assert len(expected) > 0

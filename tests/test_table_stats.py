@@ -65,10 +65,9 @@ def test_sizing_runs_no_count_job(spark, monkeypatch):
 def test_autosize_shuffle_partitions_only_raises(spark, monkeypatch):
     # Round-7: shuffle partitions derive from the sf_dir's on-disk bytes
     # (round-6 sf100 OOM class, fixed structurally). Only-raise, capped,
-    # once per dir, disabled by the explicit env knob.
+    # once per dir.
     from mongo_iceberg_lakehouse_spark.sources import tables as T
 
-    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
     before = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         # driver-scale dir: need << current -> unchanged
@@ -91,15 +90,6 @@ def test_autosize_shuffle_partitions_only_raises(spark, monkeypatch):
         T._AUTOSIZED_DIRS.discard("/fake/sf1000")
         T.autosize_shuffle_partitions(spark, "/fake/sf1000")
         assert spark.conf.get("spark.sql.shuffle.partitions") == "2048"
-
-        # explicit env knob disables derivation entirely
-        T._AUTOSIZED_DIRS.discard("/fake/sf100b")
-        monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "96")
-        spark.conf.set("spark.sql.shuffle.partitions", "96")
-        T.autosize_shuffle_partitions(spark, "/fake/sf100b")
-        assert spark.conf.get("spark.sql.shuffle.partitions") == "96"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
-        T._AUTOSIZED_DIRS.difference_update(
-            {"/fake/sf100", "/fake/sf1000", "/fake/sf100b"}
-        )
+        T._AUTOSIZED_DIRS.difference_update({"/fake/sf100", "/fake/sf1000"})
