@@ -43,7 +43,7 @@ import os
 import sys
 import time
 
-from mongo_iceberg_lakehouse_spark.queries import REGISTRY
+from mongo_iceberg_lakehouse_spark.queries import REGISTRY, tagged
 from mongo_iceberg_lakehouse_spark.session import get_spark
 
 # The designated drift anchor (PERF_NOTES §11): plan + code unchanged since
@@ -51,96 +51,6 @@ from mongo_iceberg_lakehouse_spark.session import get_spark
 # (BENCH_r01.json) — in-suite vs in-suite is the apples-to-apples pair.
 ANCHOR = "tpch_q1_pricing_summary"
 ANCHOR_BASELINE_SEC = 0.51
-
-HEADLINE = [
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "tpch_q6_forecast_revenue",
-    "tpch_q12_shipmode",
-    "join_broadcast_region_revenue",
-    "join_customer_orders",
-    "asof_join_purchase_view",
-    "agg_rollup",
-    "window_dedup_latest",
-    "window_running_sum",
-    "session_window_counts",
-    "pivot_event_values",
-    "explode_word_counts",
-    "scalar_json_extract",
-    "dedup_exact_hash",
-    "dedup_minhash_lsh",
-    "text_quality_scores",
-    "ann_topk_blocked",
-    "embedding_neardup_blocked",
-    "join_interval_events",
-    "text_tfidf_top_terms",
-    "scd2_customer_priority",
-    "ann_topk_int8",
-    # round-4 additions: the LLM-pipeline tail (VERDICT r3 #3) + the
-    # emission-bounded near-dup production path + the cross-corpus
-    # decontamination join and bigram-LM scorer. Totals are NOT comparable
-    # with BENCH_r03 and earlier without subtracting these 10 queries —
-    # see the baseline note in BASELINE.md.
-    "dedup_span_scrub",
-    "dsir_importance_weights",
-    "semdedup_embedding_prune",
-    "dedup_jaccard_exact_pairs",
-    "tokenizer_bpe_pair_counts",
-    "quality_gopher_rules",
-    "embedding_neardup_topk",
-    "multimodal_png_pixels",
-    "dedup_cross_corpus_jaccard",
-    "text_bigram_perplexity",
-    # fourth-session additions (see BASELINE.md comparability note)
-    "quality_repetition_signals",
-    "text_collocations_lift",
-    # round-5 additions: the URL/domain curation stage + the image-text
-    # alignment proxy (see BASELINE.md comparability note; raw totals
-    # before/after this growth are not comparable — use
-    # subtotal_r1_shared / the anchor-normalized fields)
-    "curation_domain_blocklist",
-    "dedup_url_canonical",
-    "curation_domain_cap",
-    "multimodal_image_text_alignment",
-    # round-6 additions: the composed web funnel (blocklist -> URL dedup
-    # -> domain cap -> quality -> lang -> exact -> near dedup in one
-    # lineage pass) and the ANN strategy dispatcher (exact tier at this
-    # corpus size). Same comparability note as above.
-    "web_curation_pipeline",
-    "ann_topk_auto",
-    # round-7 additions: the repaired scalar-schema queries (array output
-    # rendered as joined strings — retrieval assembly, inverted index,
-    # sequence-example builder) plus the first-graded iterative graph
-    # operator. Same comparability note as above.
-    "rag_context_assembly",
-    "text_inverted_index",
-    "seq_training_examples",
-    "graph_label_propagation",
-    # round-8 additions: the first-graded compute queries of this round's
-    # window rotation (iterative components, rollup+tail rewrite, TWAP,
-    # binned drift, skyline dominance). Same comparability note as above.
-    "graph_connected_components_dupes",
-    "hypertable_rollup_tail",
-    "timeseries_twap_user",
-    "drift_psi_order_price",
-    "skyline_parts",
-    # round-10 additions: the first-graded compute queries of this
-    # round's window rotation (the composed medallion pipeline, TPC-H
-    # Q18, n-gram train/test decontamination, cogroup event pairing,
-    # token-batch packing, the composite DQ report). Same comparability
-    # note as above.
-    "medallion_orders_pipeline",
-    "tpch_q18_large_orders",
-    "decontaminate_ngram_overlap",
-    "cogroup_view_click_pairs",
-    "pack_token_batches",
-    "dq_orders_report",
-]
-
-# The original round-1 set: BASELINE.md's within-2x budget is stated against
-# the sum over these 23 (later rounds grew the suite, so raw totals across
-# rounds are not comparable — subtotal_r1_shared is).
-R1_SHARED = HEADLINE[:23]
 
 
 def _drop_checkpoint_blocks(spark) -> None:
@@ -218,14 +128,15 @@ def main() -> None:
     # r11: blocks are dropped after EVERY warm-up query (not once after the
     # loop) so the warm-up's peak resident footprint no longer grows with
     # every suite addition — the r10 verdict's leading session-poison suspect.
-    for name in HEADLINE:
+    headline = tagged("bench")
+    for name in headline:
         time_noop(spark, REGISTRY[name].fn, sf_dir, reps=1)
 
     timings: dict[str, float] = {}
     anchor_mid: float | None = None
-    mid_idx = len(HEADLINE) // 2
+    mid_idx = len(headline) // 2
     anchor_fn = REGISTRY[ANCHOR].fn
-    for qi, name in enumerate(HEADLINE):
+    for qi, name in enumerate(headline):
         timings[name] = time_noop(spark, REGISTRY[name].fn, sf_dir)
         print(f"# {name}: {timings[name]}s", file=sys.stderr, flush=True)
         if qi + 1 == mid_idx:
@@ -240,8 +151,11 @@ def main() -> None:
         round(anchor_sec / ANCHOR_BASELINE_SEC, 3) if anchor_sec else None
     )
     normalized = round(total / drift, 3) if drift else None
+    # the round-1 set: BASELINE.md's within-2x budget is stated against the
+    # sum over these 23 (later rounds grew the suite, so raw totals across
+    # rounds are not comparable; subtotal_r1_shared is)
     subtotal_shared = round(
-        sum(timings[n] for n in R1_SHARED if n in timings), 3
+        sum(timings[n] for n in tagged("r1") if n in timings), 3
     )
     print(
         json.dumps(

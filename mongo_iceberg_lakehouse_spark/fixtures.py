@@ -12,7 +12,9 @@ notebooks (BASELINE.md): bronze count 6; silver struct
 
 from __future__ import annotations
 
+import hashlib
 import json
+import os
 import tempfile
 
 
@@ -60,15 +62,19 @@ SEED_ORDERS = [
 ]
 
 
-def write_seed_json(path: str | None = None) -> str:
-    """Write the seed documents as a JSON array file; returns the path."""
-    if path is None:
-        fh = tempfile.NamedTemporaryFile(
-            "w", suffix="_orders.json", delete=False
-        )
-        with fh:
-            json.dump(SEED_ORDERS, fh, indent=2)
-        return fh.name
-    with open(path, "w") as out:
-        json.dump(SEED_ORDERS, out, indent=2)
+def write_seed_json() -> str:
+    """Write the seed documents as a JSON array file; returns the path.
+
+    The file is named by a hash of its content under the temp dir and
+    written only when absent, so repeated calls share one file. Concurrent
+    first calls each write a unique name and ``os.replace`` it onto that
+    name: a reader never sees a partly written file."""
+    text = json.dumps(SEED_ORDERS, indent=2)
+    digest = hashlib.sha256(text.encode()).hexdigest()[:16]
+    path = os.path.join(tempfile.gettempdir(), f"seed_{digest}_orders.json")
+    if not os.path.exists(path):
+        fd, tmp = tempfile.mkstemp(suffix=".part", dir=os.path.dirname(path))
+        with os.fdopen(fd, "w") as out:
+            out.write(text)
+        os.replace(tmp, path)
     return path

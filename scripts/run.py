@@ -11,9 +11,10 @@ Modes (exactly one):
             oracle is deliberately quadratic are value-checked on a
             deterministic md5-anchored slice whose oracle is linear in n.
             --fresh-jvm gives every query its own JVM (see check_fresh_jvm).
-  --time    Min-of-N noop-sink timings of the scaling-curve set, one JSON line
-            per scale dir plus a per-query ratio table between consecutive
-            dirs — super-linear steps are the thing to investigate.
+  --time    Min-of-N noop-sink timings of the scaling-curve set (the queries
+            registered with the "curve" tag), one JSON line per scale dir
+            plus a per-query ratio table between consecutive dirs —
+            super-linear steps are the thing to investigate.
   --stress  Knife-edge sweep of every oracle, then the order-dependence stress
             of each flagged query (see sweep and stress).
   --driver  The driver's own usage of __spark_entry__: a vanilla SparkSession
@@ -53,6 +54,7 @@ from bench import _drop_checkpoint_blocks, time_noop  # noqa: E402
 from mongo_iceberg_lakehouse_spark.queries import (  # noqa: E402
     REGISTRY,
     SCALE_PROBES,
+    tagged,
 )
 from mongo_iceberg_lakehouse_spark.session import get_spark, scoped_conf  # noqa: E402
 from mongo_iceberg_lakehouse_spark.sources.tables import FIXTURE_TABLES  # noqa: E402
@@ -72,55 +74,6 @@ DEFAULT_SF = {
     "stress": [f"{TESTDATA}/sf0.001", f"{TESTDATA}/sf0.01"],
     "driver": [E.SMOKE_SF_DIR],
 }
-
-# The scale-critical set: the default of --time, selected by --curve in the
-# other modes.
-CURVE = [
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "ann_topk_blocked",
-    "embedding_neardup_blocked",
-    "embedding_neardup_topk",
-    "embedding_neardup_topk_ivf",
-    "dedup_containment_pairs",
-    "dedup_jaccard_exact_pairs",
-    "semdedup_embedding_prune",
-    "tokenizer_bpe_pair_counts",
-    "dedup_span_scrub",
-    "dsir_importance_weights",
-    "dedup_cross_corpus_jaccard",
-    "text_bigram_perplexity",
-    "quality_repetition_signals",
-    "text_collocations_lift",
-    "text_chunk_sliding",
-    "quality_fasttext_classifier",
-    "embedding_outlier_filter",
-    # events decade (gen_scale_data.gen_events): sessionization, as-of,
-    # streaming windows, sliding top-k — the stateful/temporal families
-    "sessionize_events",
-    "asof_join_purchase_view",
-    "streaming_window_counts",
-    "trending_topk_sliding",
-    # relational decade (gen_scale_data.gen_tpch): the TPC-H/window/join/
-    # SCD2 core had never run above sf0.1 before round 4
-    "tpch_q1_pricing_summary",
-    "tpch_q3_shipping_priority",
-    "tpch_q18_large_orders",
-    "window_running_sum",
-    "join_customer_orders",
-    "scd2_customer_priority",
-    # round-5 additions: URL/domain curation stage, image-text alignment,
-    # update-mode incremental drift, FFD packing contract
-    "curation_domain_blocklist",
-    "dedup_url_canonical",
-    "curation_domain_cap",
-    "multimodal_image_text_alignment",
-    "streaming_embedding_drift_incremental",
-    "pack_token_batches",
-    # round-6 additions: composed web funnel + ANN strategy dispatcher
-    "web_curation_pipeline",
-    "ann_topk_auto",
-]
 
 # One flavour each of relational, streaming, LLM and multimodal queries,
 # spot-run by --driver under the driver's vanilla session.
@@ -663,7 +616,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.only:
         names = args.only
     elif args.curve or args.mode == "time":
-        names = CURVE
+        names = tagged("curve")
     else:
         names = list(SPOT) if args.mode == "driver" else sorted(REGISTRY)
     if args.mode == "time":

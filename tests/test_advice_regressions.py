@@ -13,9 +13,10 @@
    last(ignorenulls): a NULL field in the winning right row silently
    backfilled from an OLDER right row, stitching together a row that
    never existed.
-6. PRIORITY held duplicate names (round-3 tail re-added first-50
-   entries), so _ordered_names() disagreed in length with the dict
-   consumers that silently deduped.
+6. The hand-kept PRIORITY list held duplicate names (round-3 tail
+   re-added first-50 entries), so the ordered query names disagreed in
+   length with the dict consumers that silently deduped. Query sets are
+   now declared by register(..., tags=...) alone.
 """
 
 from __future__ import annotations
@@ -141,16 +142,21 @@ def test_asof_join_picks_winning_right_row_atomically(spark):
     assert out2[0]["rid"] == 4 and out2[0]["v"] is None
 
 
-def test_priority_has_no_duplicates():
+def test_register_tags_and_query_order():
     from mongo_iceberg_lakehouse_spark.queries import (
-        PRIORITY,
-        _ordered_names,
+        REGISTRY,
         queries,
+        register,
+        tagged,
     )
 
-    assert len(PRIORITY) == len(set(PRIORITY))
-    names = _ordered_names()
-    assert len(names) == len(set(names)) == len(queries())
+    with pytest.raises(ValueError, match="unknown query tags"):
+        register("never_registered", None, tags=("graded", "bnech"))
+    assert "never_registered" not in REGISTRY
+    assert len(tagged("graded")) == 50
+    names = list(queries())
+    assert names[:50] == tagged("graded")
+    assert len(names) == len(set(names)) and set(names) == set(REGISTRY)
 
 
 def test_dedup_survivors_by_quality_id_col_named_id(spark):

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 
@@ -47,7 +46,7 @@ def test_zorder_key_locality(spark):
     assert (box["hi"] - box["lo"]) < (full["hi"] - full["lo"]) / 16
 
 
-def test_zorder_prunes_rowgroups_vs_linear(spark):
+def test_zorder_prunes_rowgroups_vs_linear(spark, tmp_path):
     li = spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_quantity"
     )
@@ -59,7 +58,7 @@ def test_zorder_prunes_rowgroups_vs_linear(spark):
         "l_partkey": (0.0, bounds["hp"] / 8),
         "l_suppkey": (0.0, bounds["hs"] / 8),
     }
-    root = tempfile.mkdtemp(prefix="layout_")
+    root = str(tmp_path)
     z_path = os.path.join(root, "zorder")
     lin_path = os.path.join(root, "linear")
     cluster_by_zorder(li, ["l_partkey", "l_suppkey"], num_files=16, path=z_path)

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -91,6 +94,24 @@ def test_items_explode_normalization(spark):
     amounts = {(r.order_id, r.product_id): r.line_amount for r in rows}
     assert amounts[("ORD-2024-001", "P001")] == 1200.50
     assert amounts[("ORD-2024-005", "P009")] == 50.0
+
+
+def test_seed_json_written_once(tmp_path, monkeypatch):
+    # the medallion queries call write_seed_json() on every build, so
+    # repeated calls must share one file
+    import tempfile
+
+    from mongo_iceberg_lakehouse_spark.fixtures import (
+        SEED_ORDERS,
+        write_seed_json,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    first = write_seed_json()
+    before = sorted(tmp_path.glob("*_orders.json"))
+    assert [write_seed_json(), write_seed_json()] == [first, first]
+    assert sorted(tmp_path.glob("*_orders.json")) == before == [Path(first)]
+    assert json.loads(Path(first).read_text()) == SEED_ORDERS
 
 
 def test_empty_source_guard(spark, tmp_path):

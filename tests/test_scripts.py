@@ -161,3 +161,58 @@ def test_no_code_writes_kernel_settings():
         if (lines := _proc_sys_writes(p.read_text()))
     }
     assert not found, f"/proc/sys writes (file: lines): {found}"
+
+
+def _name_lists(source: str, names: set[str]) -> list[int]:
+    """Line numbers of literal lists, tuples and sets holding >= 5 of
+    ``names`` outside ``register(...)`` calls: a hand-kept copy of a query
+    set that ``register(..., tags=...)`` declares."""
+    tree = ast.parse(source)
+    in_register = {
+        id(sub)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call) and ast.unparse(node.func) == "register"
+        for sub in ast.walk(node)
+    }
+    return sorted(
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.List, ast.Tuple, ast.Set))
+        and id(node) not in in_register
+        and sum(
+            isinstance(e, ast.Constant) and e.value in names
+            for e in node.elts
+        ) >= 5
+    )
+
+
+def test_detector_finds_query_name_lists():
+    names = {"a", "b", "c", "d", "e"}
+    src = (
+        "HEADLINE = ['a', 'b', 'c', 'd', 'e']\n"
+        "CURVE = ('a', 'b',\n 'c', 'd', 'e', 'f')\n"
+        "SKIP = {'a', 'b', 'c', 'd', 'x'}\n"
+        "@register('a', None, tags=('a', 'b', 'c', 'd', 'e'))\n"
+        "def a(spark, sf_dir): ...\n"
+        "NESTED = [['a', 'b', 'c', 'd', 'e']]\n"
+    )
+    assert _name_lists(src, names) == [1, 2, 7]
+
+
+def test_query_sets_declared_only_at_register():
+    # which set a query is in (graded, bench, r1, curve) is a tag on its
+    # register(...) call; consumers read queries.tagged(tag). perfbench/
+    # pins its own pools and tests may name queries freely.
+    from mongo_iceberg_lakehouse_spark.queries import REGISTRY
+
+    files = [
+        REPO / "bench.py",
+        *sorted((REPO / "scripts").glob("*.py")),
+        *sorted((REPO / "mongo_iceberg_lakehouse_spark").rglob("*.py")),
+    ]
+    found = {
+        str(p.relative_to(REPO)): lines
+        for p in files
+        if (lines := _name_lists(p.read_text(), set(REGISTRY)))
+    }
+    assert not found, f"hand-kept query-name lists (file: lines): {found}"

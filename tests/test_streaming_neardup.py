@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 
@@ -29,8 +28,8 @@ def _batch(spark, rows, batch_no):
     )
 
 
-def test_incremental_dedup_across_batches(spark):
-    store = tempfile.mkdtemp(prefix="neardup_store_")
+def test_incremental_dedup_across_batches(spark, tmp_path):
+    store = str(tmp_path)
     # batch 0: DOC and OTHER — within-batch dup (ids 1,2 same text) drops 2
     d0 = dedup_batch_against_store(
         spark,
