@@ -5,7 +5,7 @@ distinct token — at 100 TB with an open vocabulary that shuffle is the
 bottleneck (and the driver can't hold the result). The classic sketch answer
 is a three-phase pipeline where no phase's state grows with vocabulary size:
 
-1. **Misra-Gries per partition** (``mapInPandas``, zero shuffle): each
+1. **Misra-Gries per partition** (``mapInArrow``, zero shuffle): each
    partition keeps at most ``k`` counters. The merged-summary guarantee
    [Misra & Gries 1982; Agarwal et al., "Mergeable Summaries", PODS'12] is
    that any token dropped from ALL partitions has true global count
@@ -31,7 +31,8 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -45,22 +46,26 @@ def misra_gries_candidates(df: DataFrame, col: str, k: int) -> DataFrame:
     only movement of data is the final union of <= k rows per partition.
     """
 
-    def mg(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def mg(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         counts: dict = {}
-        for pdf in batches:
-            for tok, c in pdf["token"].value_counts().items():
-                counts[tok] = counts.get(tok, 0) + int(c)
+        for batch in batches:
+            # a NULL token is never a candidate (the exact pass drops it too)
+            vc = pc.value_counts(batch.column(0).drop_null())
+            for tok, c in zip(
+                vc.field("values").to_pylist(), vc.field("counts").to_pylist()
+            ):
+                counts[tok] = counts.get(tok, 0) + c
             if len(counts) > k:
                 vals = sorted(counts.values(), reverse=True)
                 d = vals[k]  # (k+1)-th largest: batch Misra-Gries decrement
                 counts = {t: c - d for t, c in counts.items() if c - d > 0}
         if counts:
-            yield pd.DataFrame(
-                {"token": list(counts.keys()), "lb": list(counts.values())}
+            yield pa.record_batch(
+                [list(counts), list(counts.values())], names=["token", "lb"]
             )
 
-    out = df.select(F.col(col).alias("token")).mapInPandas(
-        mg, schema="token string, lb long"
+    out = df.select(F.col(col).alias("token")).mapInArrow(
+        mg, "token string, lb long"
     )
     return out.groupBy("token").agg(F.sum("lb").alias("lb"))
 

@@ -2,15 +2,15 @@
 
 Charter extension (SURVEY.md §2.11): image/audio/video travel through the
 lake as ``binary`` columns with a metadata struct; decode / feature-extract /
-resize / frame-sample run as Arrow-batched pandas functions over
-``mapInPandas``. PNG and WAV are decoded for REAL — stdlib-only codecs
+resize / frame-sample run as Arrow-batched row functions
+(``functions.batches.map_rows``). PNG and WAV are decoded for REAL — stdlib-only codecs
 (``zlib`` inflate + PNG scanline de-filtering, RIFF walk + PCM
 ``struct.unpack``), no PIL/ffmpeg needed; ``decode_payload`` dispatches on
 modality and raises ``ValueError`` only for formats that genuinely need an
 external library (JPEG, MP3, ...).
 
 Scale notes: binary payloads dominate row size, so (1) feature extraction is
-``mapInPandas`` — one Arrow batch in, one out, no shuffle; (2) select away the
+a narrow Arrow map — one batch in, one out, no shuffle; (2) select away the
 payload column as early as possible after feature extraction so downstream
 stages move only features; (3) partition count should target
 ~128 MB of payload per task (`spark.sql.files.maxPartitionBytes`). Within a
@@ -23,15 +23,14 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 from typing import Any
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.batches import map_rows
 from ..session import spread
 
 FEATURE_SCHEMA = (
@@ -89,21 +88,12 @@ def extract_features(df: DataFrame) -> DataFrame:
     (see module scale notes). Real decoding is :func:`decode_payload`.
     """
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload, meta in zip(
-                pdf["doc_id"], pdf["payload"], pdf["meta"]
-            ):
-                modality = meta["modality"] if isinstance(meta, dict) else meta.modality
-                n_bytes, byte_sum, head_hex = _fake_features(bytes(payload))
-                rows.append((int(doc_id), str(modality), n_bytes, byte_sum, head_hex))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "modality", "n_bytes", "byte_sum", "head_hex"],
-            )
+    def features(doc_id, payload, meta):
+        yield (doc_id, meta["modality"], *_fake_features(payload))
 
-    return df.mapInPandas(batches, schema=FEATURE_SCHEMA)
+    return map_rows(
+        df.select("doc_id", "payload", "meta"), features, FEATURE_SCHEMA
+    )
 
 
 PNG_SIGNATURE = bytes.fromhex("89504e470d0a1a0a")
@@ -143,33 +133,20 @@ def synth_png_payload(
 
 def decode_png_meta(df: DataFrame) -> DataFrame:
     """REAL byte-level image-metadata decode (no codec library needed):
-    Arrow-batched ``mapInPandas`` that validates the 8-byte PNG signature and
+    Arrow-batched row function that validates the 8-byte PNG signature and
     parses width/height/bit-depth/color-type out of the IHDR chunk with
     ``struct.unpack`` — the exact plumbing a PIL-backed decoder would use
     (swap the parser body for ``Image.open`` when codecs exist; schema,
     batching, and payload-dropping stay identical)."""
-    import struct
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                ok = len(b) >= 26 and b[:8] == PNG_SIGNATURE and b[12:16] == b"IHDR"
-                if ok:
-                    w, h = struct.unpack(">II", b[16:24])
-                    rows.append((int(doc_id), w, h, b[24], b[25], True))
-                else:
-                    rows.append((int(doc_id), None, None, None, None, False))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "bit_depth", "color_type",
-                    "is_png",
-                ],
-            )
+    def meta(doc_id, b):
+        if len(b) >= 26 and b[:8] == PNG_SIGNATURE and b[12:16] == b"IHDR":
+            w, h = struct.unpack(">II", b[16:24])
+            yield (doc_id, w, h, b[24], b[25], True)
+        else:
+            yield (doc_id, None, None, None, None, False)
 
-    return df.mapInPandas(batches, schema=PNG_META_SCHEMA)
+    return map_rows(df.select("doc_id", "payload"), meta, PNG_META_SCHEMA)
 
 
 WAV_META_SCHEMA = (
@@ -214,37 +191,24 @@ def synth_wav_payload(
 
 def decode_wav_meta(df: DataFrame) -> DataFrame:
     """REAL audio-metadata decode: parse the RIFF/WAVE fmt chunk with
-    struct.unpack inside Arrow-batched mapInPandas — same plumbing a
+    struct.unpack inside an Arrow-batched row function — same plumbing a
     soundfile-backed decoder would use (swap the body when codecs exist)."""
-    import struct
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                b = bytes(payload)
-                ok = (
-                    len(b) >= 44
-                    and b[:4] == b"RIFF"
-                    and b[8:12] == b"WAVE"
-                    and b[12:16] == b"fmt "
-                )
-                if ok:
-                    channels, rate = struct.unpack("<HI", b[22:28])
-                    bits = struct.unpack("<H", b[34:36])[0]
-                    ndata = struct.unpack("<I", b[40:44])[0]
-                    rows.append((int(doc_id), rate, channels, bits, ndata, True))
-                else:
-                    rows.append((int(doc_id), None, None, None, None, False))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "channels", "bits_per_sample",
-                    "n_data_bytes", "is_wav",
-                ],
-            )
+    def meta(doc_id, b):
+        if (
+            len(b) >= 44
+            and b[:4] == b"RIFF"
+            and b[8:12] == b"WAVE"
+            and b[12:16] == b"fmt "
+        ):
+            channels, rate = struct.unpack("<HI", b[22:28])
+            bits = struct.unpack("<H", b[34:36])[0]
+            ndata = struct.unpack("<I", b[40:44])[0]
+            yield (doc_id, rate, channels, bits, ndata, True)
+        else:
+            yield (doc_id, None, None, None, None, False)
 
-    return df.mapInPandas(batches, schema=WAV_META_SCHEMA)
+    return map_rows(df.select("doc_id", "payload"), meta, WAV_META_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -401,27 +365,22 @@ PNG_PIXEL_SCHEMA = (
 
 def synth_png_image(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Synthesize a COMPLETE valid PNG per row (real zlib IDAT, real CRCs,
-    every scanline filter type in rotation) inside Arrow-batched
-    ``mapInPandas``. Pixels are a pure function of the id —
+    every scanline filter type in rotation) inside an Arrow-batched row
+    function. Pixels are a pure function of the id —
     ``px(r, c, ch) = (id*31 + r*7 + c*3 + ch*11) % 256``, dims
     ``(4 + id%13) x (4 + (id*7)%11)`` — so an SQL oracle can reconstruct
     every per-channel statistic arithmetically without parsing bytes."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                w, h = 4 + i % 13, 4 + (i * 7) % 11
-                r = np.arange(h).reshape(h, 1, 1) * 7
-                c = np.arange(w).reshape(1, w, 1) * 3
-                k = np.arange(3).reshape(1, 1, 3) * 11
-                px = ((i * 31 + r + c + k) % 256).astype(np.uint8)
-                rows.append((i, png_encode(px)))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+    def image(i):
+        w, h = 4 + i % 13, 4 + (i * 7) % 11
+        r = np.arange(h).reshape(h, 1, 1) * 7
+        c = np.arange(w).reshape(1, w, 1) * 3
+        k = np.arange(3).reshape(1, 1, 3) * 11
+        px = ((i * 31 + r + c + k) % 256).astype(np.uint8)
+        yield (i, png_encode(px))
 
-    return spread(df.select(id_col)).mapInPandas(
-        batches, schema="doc_id bigint, payload binary"
+    return map_rows(
+        spread(df.select(id_col)), image, "doc_id bigint, payload binary"
     )
 
 
@@ -431,30 +390,22 @@ def decode_png_pixels(df: DataFrame) -> DataFrame:
     keep the oracle comparison knife-edge-free; payload is dropped here so
     downstream moves only stats."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    w, h, ch, px = png_decode(bytes(payload))
-                    p = px.astype(np.int64)
-                    sums = [int(p[:, :, min(k, ch - 1)].sum()) for k in range(3)]
-                    rows.append(
-                        (int(doc_id), w, h, w * h, *sums, True)
-                    )
-                except ValueError:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_pixels",
-                    "sum_r", "sum_g", "sum_b", "is_png",
-                ],
-            )
+    def pixels(doc_id, payload):
+        try:
+            w, h, ch, px = png_decode(payload)
+        except ValueError:
+            yield (doc_id, None, None, None, None, None, None, False)
+            return
+        yield (doc_id, w, h, w * h, *_channel_sums(px, ch), True)
 
-    return df.mapInPandas(batches, schema=PNG_PIXEL_SCHEMA)
+    return map_rows(df.select("doc_id", "payload"), pixels, PNG_PIXEL_SCHEMA)
+
+
+def _channel_sums(px: np.ndarray, ch: int) -> list[int]:
+    """Exact per-channel (r, g, b) pixel sums; a gray image repeats its one
+    channel."""
+    p = px.astype(np.int64)
+    return [int(p[:, :, min(k, ch - 1)].sum()) for k in range(3)]
 
 
 def resize_nearest(px: np.ndarray, factor: int) -> np.ndarray:
@@ -473,34 +424,18 @@ def resize_png_pixels(df: DataFrame, factor: int = 2) -> DataFrame:
     runs; schema matches decode_png_pixels so the same oracle idiom
     applies to the subsampled grid."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    _w, _h, _ch, px = png_decode(bytes(payload))
-                    small = resize_nearest(px, factor)
-                    # re-encode + re-decode: a defect in either codec
-                    # direction corrupts the stats
-                    w2, h2, ch2, out = png_decode(png_encode(small))
-                    p = out.astype(np.int64)
-                    sums = [
-                        int(p[:, :, min(k, ch2 - 1)].sum()) for k in range(3)
-                    ]
-                    rows.append((int(doc_id), w2, h2, w2 * h2, *sums, True))
-                except ValueError:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "n_pixels",
-                    "sum_r", "sum_g", "sum_b", "is_png",
-                ],
-            )
+    def resized(doc_id, payload):
+        try:
+            _w, _h, _ch, px = png_decode(payload)
+            # re-encode + re-decode: a defect in either codec direction
+            # corrupts the stats
+            w2, h2, ch2, out = png_decode(png_encode(resize_nearest(px, factor)))
+        except ValueError:
+            yield (doc_id, None, None, None, None, None, None, False)
+            return
+        yield (doc_id, w2, h2, w2 * h2, *_channel_sums(out, ch2), True)
 
-    return df.mapInPandas(batches, schema=PNG_PIXEL_SCHEMA)
+    return map_rows(df.select("doc_id", "payload"), resized, PNG_PIXEL_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -514,37 +449,32 @@ WAV_SAMPLE_SCHEMA = (
 
 
 def synth_wav_audio(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Synthesize a complete 16-bit PCM WAV per row in Arrow-batched
-    ``mapInPandas``. Samples are a pure function of the id —
+    """Synthesize a complete 16-bit PCM WAV per row in an Arrow-batched row
+    function. Samples are a pure function of the id —
     ``s(i, ch) = (id*13 + i*7 + ch*5) % 65536 - 32768`` over
     ``32 + id%97`` frames, ``1 + id%2`` channels, rate
     ``8000 + (id%8)*4000`` — so the SQL oracle reconstructs the sample
     statistics arithmetically."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id in pdf[id_col]:
-                i = int(doc_id)
-                n, nch = 32 + i % 97, 1 + i % 2
-                rate = 8000 + (i % 8) * 4000
-                fr = np.arange(n).reshape(n, 1) * 7
-                k = np.arange(nch).reshape(1, nch) * 5
-                samples = ((i * 13 + fr + k) % 65536 - 32768).astype("<i2")
-                data = samples.tobytes()
-                block = nch * 2
-                hdr = (
-                    b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-                    + b"fmt " + struct.pack(
-                        "<IHHIIHH", 16, 1, nch, rate, rate * block, block, 16
-                    )
-                    + b"data" + struct.pack("<I", len(data))
-                )
-                rows.append((i, hdr + data))
-            yield pd.DataFrame(rows, columns=["doc_id", "payload"])
+    def audio(i):
+        n, nch = 32 + i % 97, 1 + i % 2
+        rate = 8000 + (i % 8) * 4000
+        fr = np.arange(n).reshape(n, 1) * 7
+        k = np.arange(nch).reshape(1, nch) * 5
+        samples = ((i * 13 + fr + k) % 65536 - 32768).astype("<i2")
+        data = samples.tobytes()
+        block = nch * 2
+        hdr = (
+            b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
+            + b"fmt " + struct.pack(
+                "<IHHIIHH", 16, 1, nch, rate, rate * block, block, 16
+            )
+            + b"data" + struct.pack("<I", len(data))
+        )
+        yield (i, hdr + data)
 
-    return spread(df.select(id_col)).mapInPandas(
-        batches, schema="doc_id bigint, payload binary"
+    return map_rows(
+        spread(df.select(id_col)), audio, "doc_id bigint, payload binary"
     )
 
 
@@ -575,30 +505,18 @@ def decode_wav_samples(df: DataFrame) -> DataFrame:
     """REAL sample-level audio decode: RIFF walk + PCM unpack, exact
     BIGINT sample statistics out, payload dropped."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    rate, nch, _bits, s = wav_decode(bytes(payload))
-                    rows.append((
-                        int(doc_id), rate, nch, s.shape[0],
-                        int(s.astype(np.int64).sum()),
-                        int(s.min()), int(s.max()), True,
-                    ))
-                except ValueError:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, None, False)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "channels", "n_frames",
-                    "sum_samples", "min_sample", "max_sample", "is_wav",
-                ],
-            )
+    def samples(doc_id, payload):
+        try:
+            rate, nch, _bits, s = wav_decode(payload)
+        except ValueError:
+            yield (doc_id, None, None, None, None, None, None, False)
+            return
+        yield (
+            doc_id, rate, nch, s.shape[0], int(s.astype(np.int64).sum()),
+            int(s.min()), int(s.max()), True,
+        )
 
-    return df.mapInPandas(batches, schema=WAV_SAMPLE_SCHEMA)
+    return map_rows(df.select("doc_id", "payload"), samples, WAV_SAMPLE_SCHEMA)
 
 
 WAV_FEATURE_SCHEMA = (
@@ -615,26 +533,19 @@ def wav_window_features(df: DataFrame, win: int = 16) -> DataFrame:
     output row per (doc, window): the fan-out shape of any spectral
     feature pipeline, with the payload dropped at decode."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _rate, _nch, _bits, s = wav_decode(bytes(payload))
-                s64 = s.astype(np.int64)
-                for w0 in range(0, s.shape[0], win):
-                    blk = s64[w0:w0 + win]
-                    rows.append((
-                        int(doc_id), w0 // win, blk.shape[0],
-                        int(blk.sum()), int((blk * blk).sum()),
-                    ))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "win_no", "n_in_win", "sum_win", "sumsq_win",
-                ],
+    def windows(doc_id, payload):
+        _rate, _nch, _bits, s = wav_decode(payload)
+        s64 = s.astype(np.int64)
+        for w0 in range(0, s64.shape[0], win):
+            blk = s64[w0:w0 + win]
+            yield (
+                doc_id, w0 // win, blk.shape[0],
+                int(blk.sum()), int((blk * blk).sum()),
             )
 
-    return df.mapInPandas(batches, schema=WAV_FEATURE_SCHEMA)
+    return map_rows(
+        df.select("doc_id", "payload"), windows, WAV_FEATURE_SCHEMA
+    )
 
 
 def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
@@ -664,30 +575,21 @@ def ahash_png(df: DataFrame) -> DataFrame:
     makes threshold-vs-mean hashes find re-encoded/re-exposed
     duplicates that byte-level hashing misses.
 
-    Arrow-batched ``mapInPandas`` over the payload column (the codec is
+    Arrow-batched row function over the payload column (the codec is
     the same stdlib ``png_decode`` the pixel-stats queries exercise);
     emits only (id, dims, hash), so downstream dedup moves ~50 bytes per
     image regardless of payload size.
     """
     import hashlib
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                w, h, ch, px = png_decode(bytes(payload))
-                g = px.astype(np.int64).sum(axis=2)
-                total = int(g.sum())
-                bits = (g * (w * h) >= total).astype(np.uint8)
-                bs = "".join("1" if b else "0" for b in bits.flatten())
-                rows.append(
-                    (int(doc_id), w, h, hashlib.md5(bs.encode()).hexdigest())
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "width", "height", "ahash"]
-            )
+    def ahash(doc_id, payload):
+        w, h, _ch, px = png_decode(payload)
+        g = px.astype(np.int64).sum(axis=2)
+        bits = (g * (w * h) >= int(g.sum())).astype(np.uint8)
+        bs = "".join("1" if b else "0" for b in bits.flatten())
+        yield (doc_id, w, h, hashlib.md5(bs.encode()).hexdigest())
 
-    return df.mapInPandas(batches, schema=AHASH_SCHEMA)
+    return map_rows(df.select("doc_id", "payload"), ahash, AHASH_SCHEMA)
 
 
 def _alignment_weights(

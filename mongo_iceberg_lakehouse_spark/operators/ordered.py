@@ -1,22 +1,23 @@
 """Grouped-ordered streaming consumers (the secondary-sort pattern).
 
-``applyInPandas`` materializes each group as one pandas DataFrame — fine for
-bounded groups, fatal when one key holds millions of rows. The classic
+A grouped map (``applyInArrow``) materializes each group in memory — fine
+for bounded groups, fatal when one key holds millions of rows. The classic
 MapReduce answer is secondary sort: partition by key, sort each partition by
 (key, order), and stream the partition once, carrying per-key state across
 record batches. Spark-side that is::
 
-    df.repartition(key).sortWithinPartitions(key, *order)  -> mapInPandas
+    df.repartition(key).sortWithinPartitions(key, *order)  -> mapInArrow
 
-``mapInPandas`` hands each partition to Python as an *iterator* of Arrow
+``mapInArrow`` hands each partition to Python as an *iterator* of Arrow
 batches, so a consumer that carries state across batches processes a key of
 any size in O(batch) memory. Rows of one key never span partitions
 (hash-partitioned), so per-partition carry is exact.
 
-The concrete operator here — longest run of equal consecutive values per key
-(gaps-and-islands) — is order-dependent, vectorized within each batch
-(numpy boundary masks + pandas groupby, no Python row loop), and has an
-exact SQL formulation for the oracle gate.
+:func:`grouped_ordered_fold` owns that machinery; the concrete operators
+here — record highs (a running max) and the longest run of equal
+consecutive values per key (gaps-and-islands) — are init/step/finish folds
+over it, vectorized within each slice, each with an exact SQL formulation
+for the oracle gate.
 
 Reference parity: the reference has no ordered-stream operator (its jobs are
 scan->project->agg, spark_jobs/*.ipynb); this is charter phase-F scale
@@ -25,13 +26,14 @@ infrastructure for per-entity sequence features at 100 TB.
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Callable, Iterator, Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def cogrouped_interval_match(
@@ -54,16 +56,13 @@ def cogrouped_interval_match(
     keys) measured the applyInPandas form at 4.6 s with a TRIVIAL kernel
     vs 0.6 s for the identical applyInArrow form (guide §4: control how
     the batch crosses the boundary, the kernel math is unchanged).
-    Unlike the mapInPandas secondary-sort consumer above, cogroup
+    Unlike the secondary-sort consumer below, cogroup
     MATERIALIZES each key's two groups in memory — right for bounded
     per-entity histories (user timelines), wrong for unbounded keys; the
     equivalent declarative form is the watermarked stream-stream interval
     join (streaming/join.py), and the two are cross-checked in the oracle
     gate.
     """
-    import numpy as np
-    import pyarrow as pa
-
     win_us = window_seconds * 1_000_000
     empty = pa.table(
         {"key": pa.array([], pa.int64()), "n_pairs": pa.array([], pa.int64())}
@@ -114,9 +113,9 @@ def grouped_ordered_fold(
     order: Sequence[str],
     cols: Sequence[str],
     *,
-    init: "Callable[[], object]",
-    step: "Callable[[object, pd.DataFrame], object]",
-    finish: "Callable[[object], tuple]",
+    init: Callable[[], object],
+    step: Callable[[object, pa.RecordBatch], object],
+    finish: Callable[[object], tuple],
     out_fields: Sequence[T.StructField],
     num_partitions: int | None = None,
 ) -> DataFrame:
@@ -125,13 +124,13 @@ def grouped_ordered_fold(
 
     The machinery owns the scale mechanics — one hash shuffle on ``key``,
     per-partition sort on (key, *order), Arrow-batch streaming, and key
-    boundary detection across batches — so ``step`` only ever sees a pandas
-    slice of ONE key's consecutive rows (still vectorizable) plus the state
-    carried from that key's earlier slices. Memory stays O(Arrow batch) no
-    matter how many rows the hottest key has, which is what makes this the
-    100 TB-safe alternative to ``applyInPandas`` (which materializes whole
-    groups). ``longest_run_per_key`` above predates this API and keeps its
-    fused batch-at-a-time kernel; new ordered consumers should start here.
+    boundary detection across batches — so ``step`` only ever sees a
+    ``pyarrow.RecordBatch`` slice (columns key, *order, *cols) of ONE
+    key's consecutive rows (still vectorizable) plus the state carried
+    from that key's earlier slices. Memory stays O(Arrow batch) no matter
+    how many rows the hottest key has, which is what makes this the
+    100 TB-safe alternative to a grouped map (which materializes whole
+    groups).
 
     ``out_fields`` are the non-key output columns; the result schema is
     (key, *out_fields) and ``finish`` must return a matching tuple.
@@ -139,19 +138,19 @@ def grouped_ordered_fold(
     schema = T.StructType(
         [T.StructField(key, df.schema[key].dataType, True), *out_fields]
     )
-    out_names = [key] + [f.name for f in out_fields]
+    out = to_arrow_schema(schema)
 
-    def consume(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def consume(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         have = False
         cur_key = None
         state = None
         rows: list[tuple] = []
 
-        for pdf in batches:
-            n = len(pdf)
+        for batch in batches:
+            n = batch.num_rows
             if n == 0:
                 continue
-            k = pdf[key].to_numpy()
+            k = batch.column(0).to_numpy(zero_copy_only=False)
             # start indices of each key slice in this batch
             starts = np.flatnonzero(
                 np.concatenate(([True], k[1:] != k[:-1]))
@@ -159,18 +158,17 @@ def grouped_ordered_fold(
             bounds = np.append(starts, n)
             for i, s in enumerate(starts):
                 kk = k[s]
-                if have and kk != cur_key:
-                    rows.append((cur_key, *finish(state)))
-                    state = init()
-                elif not have:
+                if not have or kk != cur_key:
+                    if have:
+                        rows.append((cur_key, *finish(state)))
                     state = init()
                 have, cur_key = True, kk
-                state = step(state, pdf.iloc[s : bounds[i + 1]])
+                state = step(state, batch.slice(s, bounds[i + 1] - s))
 
         if have:
             rows.append((cur_key, *finish(state)))
         if rows:
-            yield pd.DataFrame(rows, columns=out_names)
+            yield pa.record_batch(list(zip(*rows)), schema=out)
 
     part = (
         df.repartition(num_partitions, key)
@@ -178,7 +176,7 @@ def grouped_ordered_fold(
         else df.repartition(key)
     )
     ordered = part.sortWithinPartitions(key, *order).select(key, *order, *cols)
-    return ordered.mapInPandas(consume, schema=schema)
+    return ordered.mapInArrow(consume, schema)
 
 
 def record_highs_per_key(
@@ -200,9 +198,10 @@ def record_highs_per_key(
     def init():
         return (-np.inf, 0)
 
-    def step(state, pdf):
+    def step(state, rows):
         cur_max, cnt = state
-        v = pdf[value].to_numpy(dtype="float64")
+        # as float64 a NULL reads as NaN, which never sets a high
+        v = rows.column(value).to_numpy(zero_copy_only=False).astype(np.float64)
         run = np.maximum.accumulate(v)
         prev = np.empty_like(v)
         prev[0] = cur_max
@@ -236,95 +235,48 @@ def longest_run_per_key(
     """(key, streak_len, streak_val): the longest run of equal consecutive
     ``value`` per key under ``order``; ties broken by earliest run.
 
-    One shuffle (hash on key) + per-partition sort; the consumer streams
-    Arrow batches with carry state, so memory is O(batch size) regardless of
-    how many events the hottest key has.
+    A :func:`grouped_ordered_fold` whose state is (best run so far, run in
+    progress) as ``(best_len, best_val, run_len, run_val)``: each slice's
+    run boundaries come from one numpy mask, and a slice whose first run
+    continues the carried one extends it. Memory is O(batch size)
+    regardless of how many events the hottest key has.
     """
-    schema = T.StructType(
-        [
-            T.StructField(key, df.schema[key].dataType, True),
+
+    def init():
+        return (0, None, 0, None)
+
+    def step(state, rows):
+        best_len, best_val, run_len, run_val = state
+        v = rows.column(value).to_numpy(zero_copy_only=False)
+        starts = np.flatnonzero(np.concatenate(([True], v[1:] != v[:-1])))
+        lens = np.diff(np.append(starts, len(v)))
+        for s, ln in zip(starts, lens):
+            if run_len and s == 0 and v[0] == run_val:
+                run_len += int(ln)  # the carried run continues
+                continue
+            if run_len > best_len:  # strict: the earliest longest run wins
+                best_len, best_val = run_len, run_val
+            run_len, run_val = int(ln), v[s]
+        return (best_len, best_val, run_len, run_val)
+
+    def finish(state):
+        best_len, best_val, run_len, run_val = state
+        return (run_len, run_val) if run_len > best_len else (best_len, best_val)
+
+    return grouped_ordered_fold(
+        df,
+        key,
+        order,
+        [value],
+        init=init,
+        step=step,
+        finish=finish,
+        out_fields=[
             T.StructField("streak_len", T.LongType(), True),
             T.StructField("streak_val", df.schema[value].dataType, True),
-        ]
+        ],
+        num_partitions=num_partitions,
     )
-
-    def consume(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        have = False
-        cur_key = None  # key currently being scanned
-        run_val = None  # value of the run in progress
-        run_len = 0  # length of the run in progress
-        best_len = 0  # best closed-or-open run for cur_key so far
-        best_val = None
-
-        out_keys: list = []
-        out_lens: list = []
-        out_vals: list = []
-
-        def close_key() -> None:
-            nonlocal best_len, best_val, run_len
-            # trailing run may be the best (earliest-max wins: strict >)
-            if run_len > best_len:
-                out_lens.append(run_len)
-                out_vals.append(run_val)
-            else:
-                out_lens.append(best_len)
-                out_vals.append(best_val)
-            out_keys.append(cur_key)
-
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            k = pdf[key].to_numpy()
-            v = pdf[value].to_numpy()
-
-            new_key = np.empty(n, dtype=bool)
-            new_key[0] = (not have) or k[0] != cur_key
-            new_key[1:] = k[1:] != k[:-1]
-            run_break = np.empty(n, dtype=bool)
-            run_break[0] = new_key[0] or v[0] != run_val
-            run_break[1:] = new_key[1:] | (v[1:] != v[:-1])
-
-            # run ids; id 0 (only if run_break[0] is False) continues the
-            # carried run from the previous batch
-            rid = np.cumsum(run_break)
-            g = pd.DataFrame({"k": k, "v": v, "rid": rid})
-            runs = g.groupby("rid", sort=True).agg(
-                k=("k", "first"), v=("v", "first"), ln=("v", "size")
-            )
-            r_k = runs["k"].to_numpy()
-            r_v = runs["v"].to_numpy()
-            r_ln = runs["ln"].to_numpy().astype("int64")
-            if not run_break[0]:
-                r_ln[0] += run_len  # extend the carried run
-
-            for i in range(len(runs)):
-                if have and r_k[i] != cur_key:
-                    close_key()
-                    best_len, best_val = 0, None
-                elif i > 0 or run_break[0]:
-                    # same key, previous run closed: fold it into best
-                    if run_len > best_len:
-                        best_len, best_val = run_len, run_val
-                have = True
-                cur_key = r_k[i]
-                run_val = r_v[i]
-                run_len = int(r_ln[i])
-
-        if have:
-            close_key()
-        if out_keys:
-            yield pd.DataFrame(
-                {key: out_keys, "streak_len": out_lens, "streak_val": out_vals}
-            )
-
-    part = (
-        df.repartition(num_partitions, key)
-        if num_partitions
-        else df.repartition(key)
-    )
-    ordered = part.sortWithinPartitions(key, *order).select(key, *order, value)
-    return ordered.mapInPandas(consume, schema=schema)
 
 
 def distributed_rank(

@@ -8,29 +8,37 @@ Charter extension (SURVEY.md §2.11). Two tiers:
   per-query top-k, which shuffles only (query_id, sim, id) triples, not
   vectors. This is the correctness baseline and is also the right plan at
   100 TB when |queries| is small.
-- ``lsh_bucket_candidates`` / ``ann_topk_lsh``: random-hyperplane LSH. Each
+- ``lsh_signature`` / ``ann_topk_lsh``: random-hyperplane LSH. Each
   vector gets a b-bit signature (signs of dot products with fixed
   pseudo-random planes); candidates share a signature bucket. Bucketing turns
   the all-pairs problem into an equi-join on the bucket key — the scale path
   for neighbor search over the full corpus.
 
-All dot products/norms run JVM-side via higher-order functions
-(functions.vectors); the LSH planes are folded in as literal arrays so
-signature computation also stays in codegen — no Python in the hot path.
+The expression tiers run every dot product/norm JVM-side via higher-order
+functions (functions.vectors); the LSH planes are folded in as literal
+arrays so signature computation also stays in codegen. The BLAS tiers
+(``ann_topk_blocked``, the blocked and IVF near-dup searches, PQ encoding)
+are Arrow-batched Python stages: each batch becomes one float64 matrix of
+unit rows (functions.batches.unit_vectors) and one matmul.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.batches import unit_vectors
 from ..functions.vectors import cosine_similarity, l2_norm
 from ..session import spread
+
+_TOPK_SCHEMA = "doc_id bigint, neighbor_id bigint, sim_micro bigint"
 
 
 def ann_topk_bruteforce(
@@ -129,35 +137,28 @@ def ann_topk_blocked(
     the inner loop is numpy matmul instead of per-row expression evaluation,
     and the shuffle carries only ~(partitions * k) rows per query.
     """
-    import numpy as np
+    q = queries.select(id_col, vec_col).toArrow()  # small, intentional
+    q_ids = q.column(0).to_numpy()
+    Qn = unit_vectors(q.column(1))
 
-    qrows = queries.select(id_col, vec_col).collect()  # small, intentional
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            if batch.num_rows == 0:
                 continue
-            E = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            En = E / np.maximum(np.linalg.norm(E, axis=1, keepdims=True), 1e-12)
-            sims = En @ Qn.T  # (batch, n_queries)
-            ids = pdf[id_col].to_numpy()
+            sims = unit_vectors(batch.column(1)) @ Qn.T  # (batch, n_queries)
+            ids = batch.column(0).to_numpy(zero_copy_only=False)
             out = []
             for j, qid in enumerate(q_ids):
-                col = sims[:, j]
-                mask = ids != qid
-                cand_idx = np.nonzero(mask)[0]
-                if len(cand_idx) == 0:
-                    continue
-                top = cand_idx[np.argsort(-col[cand_idx], kind="stable")[:k]]
-                for i in top:
-                    out.append((int(qid), int(ids[i]), float(col[i])))
-            yield pd.DataFrame(out, columns=["query_id", "neighbor_id", "sim"])
+                cand = np.flatnonzero(ids != qid)
+                top = cand[np.argsort(-sims[cand, j], kind="stable")[:k]]
+                out += [(int(qid), int(ids[i]), float(sims[i, j])) for i in top]
+            if out:
+                yield pa.record_batch(
+                    list(zip(*out)), names=["query_id", "neighbor_id", "sim"]
+                )
 
-    partials = embeddings.select(id_col, vec_col).mapInPandas(
-        batches, schema="query_id bigint, neighbor_id bigint, sim double"
+    partials = embeddings.select(id_col, vec_col).mapInArrow(
+        batches, "query_id bigint, neighbor_id bigint, sim double"
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id").asc()
@@ -196,36 +197,18 @@ def cosine_neardup_blocked(
     ``n_rows`` statistic (parquet footer sum / Iceberg manifest count) —
     to skip the count job entirely.
     """
-    import numpy as np
-
-    if num_blocks is None:
-        n = n_rows if n_rows is not None else embeddings.count()
-        num_blocks = max(2, min(1024, math.ceil(n / target_rows_per_block)))
-
-    blocked = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(num_blocks)).alias("block"),
+    pairs = _block_pairs(
+        embeddings, id_col, vec_col, num_blocks, target_rows_per_block, n_rows
     )
-    grouped = blocked.groupBy("block").agg(
-        F.collect_list(F.struct("id", "vec")).alias("rows")
-    )
-    a = grouped.select(F.col("block").alias("ba"), F.col("rows").alias("rows_a"))
-    b = grouped.select(F.col("block").alias("bb"), F.col("rows").alias("rows_b"))
-    pairs = a.join(b, F.col("ba") <= F.col("bb"))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            for _, row in pdf.iterrows():
-                ra, rb = row["rows_a"], row["rows_b"]
-                ia = np.array([r["id"] for r in ra], dtype=np.int64)
-                ib = np.array([r["id"] for r in rb], dtype=np.int64)
-                A = np.array([list(r["vec"]) for r in ra], dtype=np.float64)
-                B = np.array([list(r["vec"]) for r in rb], dtype=np.float64)
-                An = A / np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-12)
-                Bn = B / np.maximum(np.linalg.norm(B, axis=1, keepdims=True), 1e-12)
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            ba, ra, bb, rb = batch.columns
+            for r, same in enumerate(pc.equal(ba, bb).to_pylist()):
+                ia, An = _block(ra, r)
+                ib, Bn = _block(rb, r)
                 sims = An @ Bn.T
-                if row["ba"] == row["bb"]:
+                if same:
                     # same block on both sides: ia < ib halves the square
                     ii, jj = np.nonzero(
                         (sims >= threshold) & (ia[:, None] < ib[None, :])
@@ -238,9 +221,70 @@ def cosine_neardup_blocked(
                     ii, jj = np.nonzero(sims >= threshold)
                     lo = np.minimum(ia[ii], ib[jj])
                     hi = np.maximum(ia[ii], ib[jj])
-                yield pd.DataFrame({"id_a": lo, "id_b": hi, "sim": sims[ii, jj]})
+                yield pa.record_batch(
+                    [lo, hi, sims[ii, jj]], names=["id_a", "id_b", "sim"]
+                )
 
-    return pairs.mapInPandas(batches, schema="id_a bigint, id_b bigint, sim double")
+    return pairs.mapInArrow(batches, "id_a bigint, id_b bigint, sim double")
+
+
+def _block_pairs(
+    embeddings: DataFrame,
+    id_col: str,
+    vec_col: str,
+    num_blocks: int | None,
+    target_rows_per_block: int,
+    n_rows: int | None,
+) -> DataFrame:
+    """The block-nested-loop input shared by the blocked near-dup searches:
+    one row ``(ba, rows_a, bb, rows_b)`` per hash-block pair ``ba <= bb``,
+    each side the block's collected ``(id, vec)`` structs. A ``num_blocks``
+    of None becomes ceil(n / target_rows_per_block) clamped to [2, 1024],
+    with n from ``n_rows`` or else a count of the input."""
+    if num_blocks is None:
+        n = n_rows if n_rows is not None else embeddings.count()
+        num_blocks = max(2, min(1024, math.ceil(n / target_rows_per_block)))
+    blocked = embeddings.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias("vec"),
+        F.pmod(F.xxhash64(F.col(id_col)), F.lit(num_blocks)).alias("block"),
+    )
+    grouped = blocked.groupBy("block").agg(
+        F.collect_list(F.struct("id", "vec")).alias("rows")
+    )
+    a = grouped.select(F.col("block").alias("ba"), F.col("rows").alias("rows_a"))
+    b = grouped.select(F.col("block").alias("bb"), F.col("rows").alias("rows_b"))
+    return a.join(b, F.col("ba") <= F.col("bb"))
+
+
+def _block(col: pa.Array, i: int) -> tuple[np.ndarray, np.ndarray]:
+    """Row ``i`` of a collected ``array<struct<id, vec>>`` column as
+    (ids, unit-row vector matrix)."""
+    rows = col[i].values
+    return (
+        rows.field("id").to_numpy(zero_copy_only=False),
+        unit_vectors(rows.field("vec")),
+    )
+
+
+def _local_topk(
+    ids_l: np.ndarray, ids_r: np.ndarray, sm: np.ndarray, thr_micro: int, k: int
+) -> Iterable[tuple[int, int, int]]:
+    """Per left row of the micro-unit similarity matrix ``sm``: its right
+    neighbors with ``sm >= thr_micro``, self excluded, ordered by
+    (sim_micro desc, neighbor_id asc), first ``k``, as
+    (doc_id, neighbor_id, sim_micro)."""
+    for i in range(sm.shape[0]):
+        row = sm[i]
+        cand = np.flatnonzero((row >= thr_micro) & (ids_r != ids_l[i]))
+        for j in cand[np.lexsort((ids_r[cand], -row[cand]))][:k]:
+            yield (int(ids_l[i]), int(ids_r[j]), int(row[j]))
+
+
+def _topk_batch(out: list[tuple[int, int, int]]) -> pa.RecordBatch:
+    return pa.record_batch(
+        list(zip(*out)), names=["doc_id", "neighbor_id", "sim_micro"]
+    )
 
 
 def cosine_neardup_topk(
@@ -282,59 +326,26 @@ def cosine_neardup_topk(
     discipline; only a sim within an ulp of a micro boundary could flip,
     which the fixture sweep checks).
     """
-    import numpy as np
-
-    if num_blocks is None:
-        n = n_rows if n_rows is not None else embeddings.count()
-        num_blocks = max(2, min(1024, math.ceil(n / target_rows_per_block)))
+    pairs = _block_pairs(
+        embeddings, id_col, vec_col, num_blocks, target_rows_per_block, n_rows
+    )
     thr_micro = int(math.floor(threshold * 1e6))
 
-    blocked = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(num_blocks)).alias("block"),
-    )
-    grouped = blocked.groupBy("block").agg(
-        F.collect_list(F.struct("id", "vec")).alias("rows")
-    )
-    a = grouped.select(F.col("block").alias("ba"), F.col("rows").alias("rows_a"))
-    b = grouped.select(F.col("block").alias("bb"), F.col("rows").alias("rows_b"))
-    pairs = a.join(b, F.col("ba") <= F.col("bb"))
-
-    def _local_topk(ids_l, ids_r, sm, out):
-        # per left row: candidates >= threshold, excluding self, ordered
-        # by (sim_micro desc, neighbor_id asc), first k
-        for i in range(sm.shape[0]):
-            row = sm[i]
-            cand = np.nonzero((row >= thr_micro) & (ids_r != ids_l[i]))[0]
-            if len(cand) == 0:
-                continue
-            order = cand[np.lexsort((ids_r[cand], -row[cand]))][:k]
-            for j in order:
-                out.append((int(ids_l[i]), int(ids_r[j]), int(row[j])))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            ba, ra, bb, rb = batch.columns
             out: list[tuple[int, int, int]] = []
-            for _, row in pdf.iterrows():
-                ra, rb = row["rows_a"], row["rows_b"]
-                ia = np.array([r["id"] for r in ra], dtype=np.int64)
-                ib = np.array([r["id"] for r in rb], dtype=np.int64)
-                A = np.array([list(r["vec"]) for r in ra], dtype=np.float64)
-                B = np.array([list(r["vec"]) for r in rb], dtype=np.float64)
-                An = A / np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-12)
-                Bn = B / np.maximum(np.linalg.norm(B, axis=1, keepdims=True), 1e-12)
+            for r, same in enumerate(pc.equal(ba, bb).to_pylist()):
+                ia, An = _block(ra, r)
+                ib, Bn = _block(rb, r)
                 sm = np.floor((An @ Bn.T) * 1e6).astype(np.int64)
-                _local_topk(ia, ib, sm, out)
-                if row["ba"] != row["bb"]:
-                    _local_topk(ib, ia, sm.T, out)
-            yield pd.DataFrame(
-                out, columns=["doc_id", "neighbor_id", "sim_micro"]
-            )
+                out += _local_topk(ia, ib, sm, thr_micro, k)
+                if not same:
+                    out += _local_topk(ib, ia, sm.T, thr_micro, k)
+            if out:
+                yield _topk_batch(out)
 
-    cand = pairs.mapInPandas(
-        batches, schema="doc_id bigint, neighbor_id bigint, sim_micro bigint"
-    )
+    cand = pairs.mapInArrow(batches, _TOPK_SCHEMA)
     w = Window.partitionBy("doc_id").orderBy(
         F.col("sim_micro").desc(), F.col("neighbor_id").asc()
     )
@@ -379,54 +390,15 @@ def cosine_neardup_topk_ivf(
     ranking uses the same floor(sim*1e6)+id-tiebreak total order as
     ``cosine_neardup_topk``.
     """
-    import numpy as np
-
     if n_centroids is None:
         n = n_rows if n_rows is not None else embeddings.count()
         n_centroids = max(32, math.ceil(math.sqrt(n / 2)))
-    if centroids is not None:
-        C = np.array(centroids, dtype=np.float64)
-    else:
-        cent_rows = (
-            embeddings.select(id_col, vec_col)
-            .orderBy(F.col(id_col))
-            .limit(n_centroids)
-            .collect()
-        )
-        C = np.array([list(r[1]) for r in cent_rows], dtype=np.float64)
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+    Cn = _ivf_centroids(embeddings, n_centroids, id_col, vec_col, centroids)
     thr_micro = int(math.floor(threshold * 1e6))
 
-    def assign(probe: int):
-        def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                E = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                En = E / np.maximum(
-                    np.linalg.norm(E, axis=1, keepdims=True), 1e-12
-                )
-                sims = En @ Cn.T
-                order = np.argsort(-sims, axis=1, kind="stable")[:, :probe]
-                yield pd.DataFrame(
-                    {
-                        "id": np.repeat(pdf[id_col].to_numpy(), probe),
-                        "vec": [
-                            v for v in pdf[vec_col] for _ in range(probe)
-                        ],
-                        "list_id": order.reshape(-1),
-                    }
-                )
-
-        return batches
-
     src = embeddings.select(id_col, vec_col)
-    members = src.mapInPandas(
-        assign(1), schema="id bigint, vec array<float>, list_id int"
-    )
-    probers = src.mapInPandas(
-        assign(n_probe), schema="id bigint, vec array<float>, list_id int"
-    )
+    members = _ivf_assign(src, Cn, 1)
+    probers = _ivf_assign(src, Cn, n_probe)
     gm = members.groupBy("list_id").agg(
         F.collect_list(F.struct("id", "vec")).alias("mem")
     )
@@ -435,37 +407,19 @@ def cosine_neardup_topk_ivf(
     )
     joined = gm.join(gp, "list_id")
 
-    def score(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
+    def score(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            _, mem, prb = batch.columns
             out: list[tuple[int, int, int]] = []
-            for _, row in pdf.iterrows():
-                mem, prb = row["mem"], row["prb"]
-                im = np.array([r["id"] for r in mem], dtype=np.int64)
-                ip = np.array([r["id"] for r in prb], dtype=np.int64)
-                M = np.array([list(r["vec"]) for r in mem], dtype=np.float64)
-                P = np.array([list(r["vec"]) for r in prb], dtype=np.float64)
-                Mn = M / np.maximum(
-                    np.linalg.norm(M, axis=1, keepdims=True), 1e-12
-                )
-                Pn = P / np.maximum(
-                    np.linalg.norm(P, axis=1, keepdims=True), 1e-12
-                )
+            for r in range(batch.num_rows):
+                im, Mn = _block(mem, r)
+                ip, Pn = _block(prb, r)
                 sm = np.floor((Pn @ Mn.T) * 1e6).astype(np.int64)
-                for i in range(sm.shape[0]):
-                    r_ = sm[i]
-                    cand = np.nonzero((r_ >= thr_micro) & (im != ip[i]))[0]
-                    if len(cand) == 0:
-                        continue
-                    order = cand[np.lexsort((im[cand], -r_[cand]))][:k]
-                    for j in order:
-                        out.append((int(ip[i]), int(im[j]), int(r_[j])))
-            yield pd.DataFrame(
-                out, columns=["doc_id", "neighbor_id", "sim_micro"]
-            )
+                out += _local_topk(ip, im, sm, thr_micro, k)
+            if out:
+                yield _topk_batch(out)
 
-    cand = joined.mapInPandas(
-        score, schema="doc_id bigint, neighbor_id bigint, sim_micro bigint"
-    )
+    cand = joined.mapInArrow(score, _TOPK_SCHEMA)
     w = Window.partitionBy("doc_id").orderBy(
         F.col("sim_micro").desc(), F.col("neighbor_id").asc()
     )
@@ -701,46 +655,9 @@ def ann_topk_ivf(
     probe join is an equi-join on the list id, and exact ranking runs only
     within probed lists. Corpus scanned once; no cross join.
     """
-    import numpy as np
-
-    if centroids is not None:
-        C = np.array(centroids, dtype=np.float64)
-    else:
-        cent_rows = (
-            embeddings.select(id_col, vec_col)
-            .orderBy(F.col(id_col))
-            .limit(n_centroids)
-            .collect()
-        )
-        C = np.array([list(r[1]) for r in cent_rows], dtype=np.float64)
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-
-    def assign(probe: int):
-        def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                if len(pdf) == 0:
-                    continue
-                E = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                En = E / np.maximum(np.linalg.norm(E, axis=1, keepdims=True), 1e-12)
-                sims = En @ Cn.T
-                order = np.argsort(-sims, axis=1, kind="stable")[:, :probe]
-                n = len(pdf)
-                yield pd.DataFrame(
-                    {
-                        "id": np.repeat(pdf[id_col].to_numpy(), probe),
-                        "vec": [v for v in pdf[vec_col] for _ in range(probe)],
-                        "list_id": order.reshape(-1),
-                    }
-                )
-
-        return batches
-
-    corpus = embeddings.select(id_col, vec_col).mapInPandas(
-        assign(1), schema=f"id bigint, vec array<float>, list_id int"
-    )
-    probes = queries.select(id_col, vec_col).mapInPandas(
-        assign(n_probe), schema=f"id bigint, vec array<float>, list_id int"
-    )
+    Cn = _ivf_centroids(embeddings, n_centroids, id_col, vec_col, centroids)
+    corpus = _ivf_assign(embeddings.select(id_col, vec_col), Cn, 1)
+    probes = _ivf_assign(queries.select(id_col, vec_col), Cn, n_probe)
     cand = corpus.join(
         F.broadcast(
             probes.select(
@@ -764,6 +681,52 @@ def ann_topk_ivf(
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", "sim")
     )
+
+
+def _ivf_centroids(
+    embeddings: DataFrame,
+    n_centroids: int,
+    id_col: str,
+    vec_col: str,
+    centroids: list[list[float]] | None,
+) -> np.ndarray:
+    """The IVF coarse quantizer as unit rows: ``centroids`` when given,
+    else the first ``n_centroids`` corpus vectors by id."""
+    if centroids is not None:
+        return unit_vectors(pa.array(centroids, pa.list_(pa.float64())))
+    first = (
+        embeddings.select(id_col, vec_col)
+        .orderBy(F.col(id_col))
+        .limit(n_centroids)
+        .toArrow()
+    )
+    return unit_vectors(first.column(1))
+
+
+def _ivf_assign(src: DataFrame, Cn: np.ndarray, probe: int) -> DataFrame:
+    """``(id, vec, list_id)``: each ``(id, vec)`` row of ``src`` once per
+    one of its ``probe`` most-cosine-similar centroids (stable argsort, so
+    ties go to the lower list id)."""
+
+    def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            if batch.num_rows == 0:
+                continue
+            sims = unit_vectors(batch.column(1)) @ Cn.T
+            order = np.argsort(-sims, axis=1, kind="stable")[:, :probe]
+            rows = batch.take(
+                np.repeat(np.arange(batch.num_rows), order.shape[1])
+            )
+            yield pa.record_batch(
+                [
+                    rows.column(0),
+                    rows.column(1),
+                    pa.array(order.reshape(-1), pa.int32()),
+                ],
+                names=["id", "vec", "list_id"],
+            )
+
+    return src.mapInArrow(batches, "id bigint, vec array<float>, list_id int")
 
 
 def _hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:
@@ -914,8 +877,6 @@ def pq_codebooks(
     regardless of corpus size — at 100 TB you still collect only
     ``sample_n`` rows; codebook quality converges long before full
     coverage (same posture as ``kmeans_centroids``)."""
-    import numpy as np
-
     rows = (
         embeddings.select(id_col, vec_col).orderBy(id_col).limit(sample_n).collect()
     )
@@ -947,28 +908,36 @@ def pq_encode(
 ) -> DataFrame:
     """Encode each vector as ``m`` uint8-sized centroid ids (64 dims of
     float32 -> 8 bytes: a 32x compression of the candidate-scan state).
-    Arrow-batched ``mapInPandas``; the argmin per subspace is one BLAS
+    Arrow-batched Python stage; the argmin per subspace is one numpy
     broadcast per batch — no per-row Python."""
-    import numpy as np
-
     m = len(codebooks)
     sub = len(codebooks[0][0])
     Cs = [np.array(b, dtype=np.float64) for b in codebooks]
 
-    def enc(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
+    def enc(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            n = batch.num_rows
+            if n == 0:
                 continue
-            E = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            codes = np.empty((len(E), m), dtype=np.int32)
+            # raw (not unit) vectors: codebooks live in the input space
+            E = batch.column(1).flatten().to_numpy(zero_copy_only=False)
+            E = E.astype(np.float64).reshape(n, -1)
+            codes = np.empty((n, m), dtype=np.int32)
             for i in range(m):
                 Ssub = E[:, i * sub : (i + 1) * sub]
                 d2 = ((Ssub[:, None, :] - Cs[i][None, :, :]) ** 2).sum(-1)
                 codes[:, i] = d2.argmin(1)
-            yield pd.DataFrame({id_col: pdf[id_col], "codes": codes.tolist()})
+            offsets = pa.array(np.arange(0, n * m + 1, m, dtype=np.int32))
+            yield pa.record_batch(
+                [
+                    batch.column(0),
+                    pa.ListArray.from_arrays(offsets, codes.reshape(-1)),
+                ],
+                names=[id_col, "codes"],
+            )
 
-    return embeddings.select(id_col, vec_col).mapInPandas(
-        enc, schema=f"{id_col} long, codes array<int>"
+    return embeddings.select(id_col, vec_col).mapInArrow(
+        enc, f"{id_col} long, codes array<int>"
     )
 
 
@@ -994,8 +963,6 @@ def ann_topk_pq(
     by ADC then rerank exactly with cosine on the shortlist only (the
     ``ann_topk_int8`` two-stage pattern; PQ compresses 4x harder).
     """
-    import numpy as np
-
     if codebooks is None:
         codebooks = pq_codebooks(embeddings, m=m, k=n_centroids,
                                  id_col=id_col, vec_col=vec_col)
@@ -1527,9 +1494,6 @@ def embedding_drift_by_cohort(
 
     Returns (dim, n_a, n_b, mean_a, mean_b, shift) ordered by dim.
     """
-    import numpy as np
-    import pandas as pd
-
     # NULL embeddings would crash the numpy partial (None is not a code
     # array) — a drift monitor must survive the ingestion bugs it
     # exists to detect, so drop them up front (oracle mirrors). Vectors
@@ -1546,23 +1510,26 @@ def embedding_drift_by_cohort(
         cohort.alias("__a"), F.col("codes").alias("__codes")
     )
 
-    def partials(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
+    def partials(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            n = batch.num_rows
+            if n == 0:
                 continue
-            A = np.array(pdf["__codes"].tolist(), dtype=np.int64)
-            a = pdf["__a"].to_numpy(dtype=bool)
-            out = []
-            for flag, mask in ((True, a), (False, ~a)):
-                if mask.any():
-                    out.append(
-                        (flag, int(mask.sum()), A[mask].sum(axis=0).tolist())
-                    )
-            if out:
-                yield pd.DataFrame(out, columns=["__a", "__n", "__sums"])
+            # a NULL cohort flag counts as cohort B
+            a = pc.fill_null(batch.column(0), False).to_numpy(zero_copy_only=False)
+            A = batch.column(1).flatten().to_numpy(zero_copy_only=False)
+            A = A.astype(np.int64).reshape(n, -1)
+            out = [
+                (flag, int(mask.sum()), A[mask].sum(axis=0).tolist())
+                for flag, mask in ((True, a), (False, ~a))
+                if mask.any()
+            ]
+            yield pa.record_batch(
+                list(zip(*out)), names=["__a", "__n", "__sums"]
+            )
 
-    partial = z.mapInPandas(
-        partials, schema="__a boolean, __n bigint, __sums array<bigint>"
+    partial = z.mapInArrow(
+        partials, "__a boolean, __n bigint, __sums array<bigint>"
     )
     rows = (
         partial.select(

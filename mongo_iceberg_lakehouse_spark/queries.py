@@ -2321,7 +2321,7 @@ def ann_lsh_recall_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Exact blocked-BLAS top-k (same result as the brute-force oracle: "
     "local per-batch top-k + global (sim desc, neighbor_id) rank merge; "
-    "Arrow-batched mapInPandas matmul, the throughput form of "
+    "Arrow-batched mapInArrow matmul, the throughput form of "
     "ann_cosine_topk).",
     tags=("bench", "r1", "curve"),
 )
@@ -2343,7 +2343,7 @@ def ann_topk_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE sim >= 0.4
     """,
     doc="All-pairs cosine >= 0.4 via block-nested-loop BLAS "
-    "(collect_list blocks + mapInPandas float64 matmul); exact, so the "
+    "(collect_list blocks + mapInArrow float64 matmul); exact, so the "
     "all-pairs SQL is a valid oracle (sims agree to ~15 digits; the "
     "compare normalizes doubles to 6 significant digits).",
     tags=("bench", "r1", "curve"),
@@ -2519,7 +2519,7 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     """,
     doc="Multimodal plumbing: binary payload column + metadata struct + "
-    "Arrow-batched mapInPandas feature extraction (byte stats).",
+    "Arrow-batched mapInArrow feature extraction (byte stats).",
 )
 def multimodal_payload_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -3238,7 +3238,7 @@ def feature_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tk
     """,
     doc="Sequence packing for LLM training: sharded first-fit-decreasing "
-    "into 512-token batches (deterministic hash shards -> applyInPandas "
+    "into 512-token batches (deterministic hash shards -> applyInArrow "
     "FFD per shard -> namespaced batch ids). The greedy packing itself "
     "is algorithmic, so the query emits its CONTRACT in the agg_approx "
     "idiom (round-4 verdict #3): the oracle value-checks the exact side "
@@ -4312,10 +4312,11 @@ def layout_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Longest run of equal consecutive event_type per user (ties -> "
     "earliest run), via the secondary-sort streaming consumer: "
-    "repartition(user_id) + sortWithinPartitions + mapInPandas with "
-    "cross-Arrow-batch carry state. One shuffle, O(batch) memory per "
-    "partition even if one user has millions of events — the shape "
-    "applyInPandas (whole-group materialization) can't survive at 100 TB. "
+    "repartition(user_id) + sortWithinPartitions + mapInArrow with "
+    "cross-Arrow-batch carry state (grouped_ordered_fold). One shuffle, "
+    "O(batch) memory per partition even if one user has millions of "
+    "events — the shape a grouped map (whole-group materialization) "
+    "can't survive at 100 TB. "
     "Oracle is the gaps-and-islands SQL formulation.",
 )
 def user_longest_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4869,7 +4870,7 @@ def timeseries_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
          <= CAST(v.ts AS TIMESTAMP) + INTERVAL 30 MINUTE
     GROUP BY v.user_id
     """,
-    doc="cogroup().applyInPandas two-sided grouped map: per-user view/click "
+    doc="cogroup().applyInArrow two-sided grouped map: per-user view/click "
     "interval-pair counts via sorted binary search inside each cogroup "
     "(O((n+m) log m) per key, never the n*m product). Same semantics as "
     "the watermarked stream-stream join and the SQL interval join — three "
@@ -4913,7 +4914,7 @@ def cogroup_view_click_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Generic grouped-ordered fold API (operators/ordered.py::"
     "grouped_ordered_fold): per-customer count of strict running-max "
     "records over date-ordered order prices. User code supplies only "
-    "init/step/finish over single-key pandas slices; the API owns the "
+    "init/step/finish over single-key Arrow slices; the API owns the "
     "shuffle, per-partition sort, Arrow streaming, and cross-batch key "
     "carry, keeping memory O(batch) for arbitrarily hot keys. Comparison-"
     "only kernel, so exact vs the SQL window oracle.",
@@ -8514,7 +8515,7 @@ def join_lateral_topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     "spec-valid PNG signature+IHDR bytes are synthesized JVM-side per doc "
     "(operators/multimodal.py::synth_png_payload, dims a pure function of "
     "doc_id), then parsed back byte-for-byte with struct.unpack inside an "
-    "Arrow-batched mapInPandas (decode_png_meta). The oracle reconstructs "
+    "Arrow-batched mapInArrow (decode_png_meta). The oracle reconstructs "
     "the dims arithmetically, so a wrong build OR a wrong parse "
     "mismatches. Payload is dropped at decode: downstream moves only "
     "metadata.",
@@ -8554,7 +8555,7 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "spec-valid PNG (zlib IDAT split across chunks, CRC'd, every scanline "
     "filter type 0-4 in rotation) is synthesized per doc, then decoded "
     "back — chunk walk, inflate, scanline reconstruction — inside Arrow-"
-    "batched mapInPandas (operators/multimodal.py::png_decode). Pixels "
+    "batched mapInArrow (operators/multimodal.py::png_decode). Pixels "
     "are a pure function of doc_id, so the oracle recomputes the exact "
     "per-channel BIGINT pixel sums arithmetically: a defect in EITHER the "
     "encoder's filtering or the decoder's reconstruction mismatches. "
@@ -8933,7 +8934,7 @@ def multimodal_png_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="REAL sample-level audio decode: complete 16-bit PCM WAVs "
     "(RIFF/fmt/data, little-endian frames) synthesized per doc and decoded "
     "back via a generic RIFF sub-chunk walk + vectorized PCM unpack in "
-    "Arrow-batched mapInPandas (operators/multimodal.py::wav_decode). "
+    "Arrow-batched mapInArrow (operators/multimodal.py::wav_decode). "
     "Samples are a pure function of doc_id; the oracle recomputes exact "
     "BIGINT sum/min/max per doc. Retires the round-3 codec stub.",
 )
@@ -9245,7 +9246,7 @@ def spatial_radius_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="REAL audio-metadata decode round-trip (codec-free): spec-valid "
     "RIFF/WAVE headers (little-endian words via hex byte-swap) built "
     "JVM-side per doc, parsed back with struct.unpack in Arrow-batched "
-    "mapInPandas. Oracle reconstructs the params arithmetically — a wrong "
+    "mapInArrow. Oracle reconstructs the params arithmetically — a wrong "
     "build OR parse mismatches. Together with multimodal_png_decode this "
     "covers image+audio byte-level decode plumbing. "
     "operators/multimodal.py::synth_wav_payload/decode_wav_meta.",

@@ -9,8 +9,9 @@
   declarative DataFrame code, so the same plan re-partitions transparently.
 - Session timezone pinned to UTC so timestamp semantics are identical on the
   driver, the executors, and the DuckDB correctness oracle.
-- Arrow enabled for the few pandas-UDF operators (vector similarity fallback,
-  multimodal feature extraction); everything else stays JVM-side inside
+- Arrow enabled for driver-side conversions; the Python stages (codecs,
+  BLAS similarity kernels, ordered folds) exchange Arrow batches with the
+  JVM (functions/batches.py); everything else stays JVM-side inside
   whole-stage codegen.
 - ``spark.sql.legacy.parquet.nanosAsLong``: the events fixture carries
   TIMESTAMP(NANOS) which Spark's vectorized reader rejects; we read it as a
@@ -20,6 +21,8 @@
 from __future__ import annotations
 
 import os
+import threading
+import weakref
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -69,26 +72,51 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+# Per session, per key: [open scopes, value before the first of them].
+_scopes: weakref.WeakKeyDictionary[SparkSession, dict[str, list]] = (
+    weakref.WeakKeyDictionary()
+)
+_scopes_lock = threading.Lock()
+
+
 @contextmanager
 def scoped_conf(spark: SparkSession, confs: dict[str, str]):
     """Apply runtime ``confs`` for the duration of the block, then restore
     each key's prior value (or unset it if it had none), so a caller-owned
-    session leaves the block as it entered."""
-    old = {}
-    for k, v in confs.items():
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-        spark.conf.set(k, v)
+    session leaves the block as it entered.
+
+    Scopes may overlap on one session (two threads each running a streaming
+    query): each key is reference-counted, the first scope to enter saves
+    the prior value and the last to exit restores it; in between the key
+    holds the value the latest entrant set. The lock covers only the
+    bookkeeping, never the caller's block, because a ``foreachBatch``
+    callback inside it runs on another thread."""
+    taken = []
     try:
+        with _scopes_lock:
+            held = _scopes.setdefault(spark, {})
+            for k, v in confs.items():
+                if k not in held:
+                    try:
+                        prior = spark.conf.get(k)
+                    except Exception:
+                        prior = None
+                    held[k] = [0, prior]
+                held[k][0] += 1
+                taken.append(k)
+                spark.conf.set(k, v)
         yield
     finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+        with _scopes_lock:
+            held = _scopes[spark]
+            for k in taken:
+                held[k][0] -= 1
+                if held[k][0] == 0:
+                    prior = held.pop(k)[1]
+                    if prior is None:
+                        spark.conf.unset(k)
+                    else:
+                        spark.conf.set(k, prior)
 
 
 def spread(df: DataFrame) -> DataFrame:

@@ -7,6 +7,12 @@ The same holds for parameter-gated arms: a boolean option of an operator
 (or of ``catalog.py``) that the package only ever runs with one value is a
 second code path nothing exercises, so every such option must be run with
 both values by the package's own call sites.
+
+Python stages have one idiom: Arrow batches (``mapInArrow`` /
+``applyInArrow``, through ``functions/batches.py``). No pandas UDF surface
+and no pandas import appears in the package, except the streaming-state
+operator (``streaming/stateful.py``), whose ``applyInPandasWithState`` has
+no Arrow counterpart short of a ``transformWithState`` migration.
 """
 
 from __future__ import annotations
@@ -156,3 +162,65 @@ def test_every_bool_option_runs_both_values():
     callers = [p.read_text() for p in sorted(PACKAGE_DIR.rglob("*.py"))]
     found = _single_value_options(defs, callers)
     assert not found, f"bool options run with a single value: {found}"
+
+
+PANDAS_STAGES = ("mapInPandas", "applyInPandas", "pandas_udf")
+
+
+def _pandas_sites(source: str) -> list[tuple[int, str]]:
+    """``(line, what)`` for every reference to a pandas Python-stage surface
+    (``mapInPandas``, ``applyInPandas``, ``pandas_udf``) and every import of
+    pandas."""
+    out = []
+    for node in ast.walk(ast.parse(source)):
+        name = (
+            node.attr if isinstance(node, ast.Attribute)
+            else node.id if isinstance(node, ast.Name)
+            else None
+        )
+        if name in PANDAS_STAGES:
+            out.append((node.lineno, name))
+        elif isinstance(node, ast.Import):
+            if any(a.name.split(".")[0] == "pandas" for a in node.names):
+                out.append((node.lineno, "import pandas"))
+        elif isinstance(node, ast.ImportFrom):
+            if (node.module or "").split(".")[0] == "pandas":
+                out.append((node.lineno, "import pandas"))
+            elif any(a.name in PANDAS_STAGES for a in node.names):
+                out.append((node.lineno, "import pandas_udf"))
+    return sorted(out)
+
+
+def test_detector_finds_pandas_stages():
+    src = (
+        "import pandas as pd\n"
+        "from pyspark.sql.functions import pandas_udf\n"
+        "from pyspark.sql.pandas.types import to_arrow_schema\n"
+        "def f(df):\n"
+        "    'a docstring naming mapInPandas is no call'\n"
+        "    import pandas.api.types\n"
+        "    a = df.mapInPandas(g, 'x long')\n"
+        "    b = df.groupBy('k').applyInPandas(g, 'x long')\n"
+        "    c = df.mapInArrow(g, 'x long')\n"
+        "    d = df.groupBy('k').applyInArrow(g, 'x long')\n"
+        "    e = df.groupBy('k').applyInPandasWithState(g, 'x long')\n"
+        "    return pandas_udf('long')(g)\n"
+    )
+    assert _pandas_sites(src) == [
+        (1, "import pandas"),
+        (2, "import pandas_udf"),
+        (6, "import pandas"),
+        (7, "mapInPandas"),
+        (8, "applyInPandas"),
+        (12, "pandas_udf"),
+    ]
+
+
+def test_python_stages_are_arrow_only():
+    exempt = PACKAGE_DIR / "streaming" / "stateful.py"
+    found = {
+        str(p.relative_to(PACKAGE_DIR)): sites
+        for p in sorted(PACKAGE_DIR.rglob("*.py"))
+        if p != exempt and (sites := _pandas_sites(p.read_text()))
+    }
+    assert not found, f"pandas Python stages (file: [(line, what)]): {found}"

@@ -182,7 +182,7 @@ def test_pii_redaction_is_zero_shuffle(spark):
     # Python evaluation anywhere in the plan.
     plan = _plan(spark, "text_pii_redaction", mode="simple")
     assert "Exchange" not in plan
-    assert "Python" not in plan and "MapInPandas" not in plan
+    assert not any(s in plan for s in ("Python", "InPandas", "InArrow"))
     # the '*' prefix marks whole-stage-codegen'd nodes in formatted plans
     assert "* Project" in _plan(spark, "text_pii_redaction")
 
@@ -190,10 +190,10 @@ def test_pii_redaction_is_zero_shuffle(spark):
 def test_codec_stage_spread_across_cores(spark):
     # The Python codec pipelines must not inherit the source file's 1-2
     # input splits (PERF_NOTES §8): a round-robin repartition sits below
-    # the synth mapInPandas.
+    # the synth mapInArrow.
     plan = _plan(spark, "multimodal_png_pixels", mode="simple")
     assert "Exchange RoundRobinPartitioning" in plan
-    assert plan.count("MapInPandas") == 2  # synth + decode, nothing more
+    assert plan.count("MapInArrow") == 2  # synth + decode, nothing more
 
 
 def test_fasttext_classifier_is_pure_narrow_map(spark):
@@ -203,7 +203,7 @@ def test_fasttext_classifier_is_pure_narrow_map(spark):
     plan = _plan(spark, "quality_fasttext_classifier", mode="simple")
     assert "Exchange" not in plan
     assert "Generate" not in plan  # no explode
-    assert "Python" not in plan and "MapInPandas" not in plan
+    assert not any(s in plan for s in ("Python", "InPandas", "InArrow"))
 
 
 def test_embedding_outlier_no_corpus_window_or_cartesian(spark):
