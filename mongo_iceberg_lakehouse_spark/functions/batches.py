@@ -5,17 +5,22 @@ Every Python stage of the package crosses the JVM boundary as Arrow
 in or out: the one measured pandas-vs-Arrow pair, the cogroup interval
 match, ran 4.6 s as ``applyInPandas`` against 0.6 s as ``applyInArrow``
 with the same kernel (PERF_NOTES §15). Two helpers cover the two stage
-shapes:
+shapes, and two more own the conversions both shapes share:
 
 - :func:`map_rows` for row-at-a-time stages (codecs, parsers, synthesizers):
   the row function sees plain Python values and yields output tuples; the
   batch it returns to Spark is built against the declared schema.
 - :func:`unit_vectors` for BLAS stages: an Arrow ``list<float>`` column as
   one float64 matrix of L2-normalized rows.
+- :func:`vectors` reads such a column raw (codebook distances, integer
+  sums), with the same NULL and ragged-row check.
+- :func:`rows_batch` turns Python row tuples into an Arrow batch in the
+  declared Spark types; it is how :func:`map_rows`, the ordered fold and
+  the per-batch top-k / partial-sum stages return rows.
 
-Stages that emit whole numpy columns or per-batch summaries (the
-similarity kernels, the ordered fold, Misra-Gries, packing) build their
-output with ``pa.record_batch`` / ``pa.table`` in the declared types.
+Stages that emit whole numpy columns (the blocked all-pairs search, the
+IVF assignment, PQ codes, Misra-Gries, packing) build their output with
+``pa.record_batch`` / ``pa.table`` directly.
 """
 
 from __future__ import annotations
@@ -43,7 +48,6 @@ def map_rows(
     no row sends none.
     """
     struct = StructType.fromDDL(schema)
-    out = to_arrow_schema(struct)
 
     def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
@@ -53,15 +57,22 @@ def map_rows(
                 for t in fn(*row)
             ]
             if rows:
-                yield pa.record_batch(list(zip(*rows)), schema=out)
+                yield rows_batch(rows, struct)
 
     return df.mapInArrow(batches, struct)
 
 
-def unit_vectors(col: pa.Array | pa.ChunkedArray) -> np.ndarray:
-    """An Arrow ``list<float>`` column as a float64 ``(n, dim)`` matrix whose
-    rows are L2-normalized (norms floored at 1e-12, so a zero vector stays
-    zero). Raises ``ValueError`` on a null or ragged vector."""
+def rows_batch(rows: list[tuple], schema: StructType) -> pa.RecordBatch:
+    """Non-empty Python row tuples (values in ``schema`` order, ``None`` for
+    null) as one Arrow batch typed by the Spark ``schema``, not by pyarrow's
+    inference."""
+    return pa.record_batch(list(zip(*rows)), schema=to_arrow_schema(schema))
+
+
+def vectors(col: pa.Array | pa.ChunkedArray) -> np.ndarray:
+    """An Arrow ``list<number>`` column as a float64 ``(n, dim)`` matrix, one
+    row per vector. Raises ``ValueError`` on a null or ragged vector: a
+    flattened column drops them, so the rows would silently misalign."""
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
     n = len(col)
@@ -70,5 +81,11 @@ def unit_vectors(col: pa.Array | pa.ChunkedArray) -> np.ndarray:
         raise ValueError("vectors must be non-null and share one dimension")
     dim = int(lengths[0]) if n else 0
     X = col.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-    X = X.reshape(n, dim)
+    return X.reshape(n, dim)
+
+
+def unit_vectors(col: pa.Array | pa.ChunkedArray) -> np.ndarray:
+    """:func:`vectors` with each row L2-normalized (norms floored at 1e-12,
+    so a zero vector stays zero)."""
+    X = vectors(col)
     return X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)

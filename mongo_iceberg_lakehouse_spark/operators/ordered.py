@@ -33,7 +33,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
+
+from ..functions.batches import rows_batch
 
 
 def cogrouped_interval_match(
@@ -138,7 +139,6 @@ def grouped_ordered_fold(
     schema = T.StructType(
         [T.StructField(key, df.schema[key].dataType, True), *out_fields]
     )
-    out = to_arrow_schema(schema)
 
     def consume(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         have = False
@@ -147,28 +147,22 @@ def grouped_ordered_fold(
         rows: list[tuple] = []
 
         for batch in batches:
-            n = batch.num_rows
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
             k = batch.column(0).to_numpy(zero_copy_only=False)
-            # start indices of each key slice in this batch
-            starts = np.flatnonzero(
-                np.concatenate(([True], k[1:] != k[:-1]))
-            )
-            bounds = np.append(starts, n)
-            for i, s in enumerate(starts):
+            for s, e in _runs(k):  # one key slice each
                 kk = k[s]
                 if not have or kk != cur_key:
                     if have:
                         rows.append((cur_key, *finish(state)))
                     state = init()
                 have, cur_key = True, kk
-                state = step(state, batch.slice(s, bounds[i + 1] - s))
+                state = step(state, batch.slice(s, e - s))
 
         if have:
             rows.append((cur_key, *finish(state)))
         if rows:
-            yield pa.record_batch(list(zip(*rows)), schema=out)
+            yield rows_batch(rows, schema)
 
     part = (
         df.repartition(num_partitions, key)
@@ -177,6 +171,13 @@ def grouped_ordered_fold(
     )
     ordered = part.sortWithinPartitions(key, *order).select(key, *order, *cols)
     return ordered.mapInArrow(consume, schema)
+
+
+def _runs(v: np.ndarray) -> list[tuple[int, int]]:
+    """``(start, end)`` of each run of equal consecutive values of a
+    non-empty ``v``, from one numpy mask."""
+    cuts = (np.flatnonzero(v[1:] != v[:-1]) + 1).tolist()
+    return list(zip([0, *cuts], [*cuts, len(v)]))
 
 
 def record_highs_per_key(
@@ -248,15 +249,13 @@ def longest_run_per_key(
     def step(state, rows):
         best_len, best_val, run_len, run_val = state
         v = rows.column(value).to_numpy(zero_copy_only=False)
-        starts = np.flatnonzero(np.concatenate(([True], v[1:] != v[:-1])))
-        lens = np.diff(np.append(starts, len(v)))
-        for s, ln in zip(starts, lens):
+        for s, e in _runs(v):
             if run_len and s == 0 and v[0] == run_val:
-                run_len += int(ln)  # the carried run continues
+                run_len += e  # the carried run continues
                 continue
             if run_len > best_len:  # strict: the earliest longest run wins
                 best_len, best_val = run_len, run_val
-            run_len, run_val = int(ln), v[s]
+            run_len, run_val = e - s, v[s]
         return (best_len, best_val, run_len, run_val)
 
     def finish(state):

@@ -33,8 +33,9 @@ import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from ..functions.batches import unit_vectors
+from ..functions.batches import rows_batch, unit_vectors, vectors
 from ..functions.vectors import cosine_similarity, l2_norm
 from ..session import spread
 
@@ -140,6 +141,7 @@ def ann_topk_blocked(
     q = queries.select(id_col, vec_col).toArrow()  # small, intentional
     q_ids = q.column(0).to_numpy()
     Qn = unit_vectors(q.column(1))
+    schema = StructType.fromDDL("query_id bigint, neighbor_id bigint, sim double")
 
     def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
@@ -153,13 +155,9 @@ def ann_topk_blocked(
                 top = cand[np.argsort(-sims[cand, j], kind="stable")[:k]]
                 out += [(int(qid), int(ids[i]), float(sims[i, j])) for i in top]
             if out:
-                yield pa.record_batch(
-                    list(zip(*out)), names=["query_id", "neighbor_id", "sim"]
-                )
+                yield rows_batch(out, schema)
 
-    partials = embeddings.select(id_col, vec_col).mapInArrow(
-        batches, "query_id bigint, neighbor_id bigint, sim double"
-    )
+    partials = embeddings.select(id_col, vec_col).mapInArrow(batches, schema)
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id").asc()
     )
@@ -281,12 +279,6 @@ def _local_topk(
             yield (int(ids_l[i]), int(ids_r[j]), int(row[j]))
 
 
-def _topk_batch(out: list[tuple[int, int, int]]) -> pa.RecordBatch:
-    return pa.record_batch(
-        list(zip(*out)), names=["doc_id", "neighbor_id", "sim_micro"]
-    )
-
-
 def cosine_neardup_topk(
     embeddings: DataFrame,
     threshold: float,
@@ -330,6 +322,7 @@ def cosine_neardup_topk(
         embeddings, id_col, vec_col, num_blocks, target_rows_per_block, n_rows
     )
     thr_micro = int(math.floor(threshold * 1e6))
+    topk = StructType.fromDDL(_TOPK_SCHEMA)
 
     def batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
@@ -343,9 +336,9 @@ def cosine_neardup_topk(
                 if not same:
                     out += _local_topk(ib, ia, sm.T, thr_micro, k)
             if out:
-                yield _topk_batch(out)
+                yield rows_batch(out, topk)
 
-    cand = pairs.mapInArrow(batches, _TOPK_SCHEMA)
+    cand = pairs.mapInArrow(batches, topk)
     w = Window.partitionBy("doc_id").orderBy(
         F.col("sim_micro").desc(), F.col("neighbor_id").asc()
     )
@@ -395,6 +388,7 @@ def cosine_neardup_topk_ivf(
         n_centroids = max(32, math.ceil(math.sqrt(n / 2)))
     Cn = _ivf_centroids(embeddings, n_centroids, id_col, vec_col, centroids)
     thr_micro = int(math.floor(threshold * 1e6))
+    topk = StructType.fromDDL(_TOPK_SCHEMA)
 
     src = embeddings.select(id_col, vec_col)
     members = _ivf_assign(src, Cn, 1)
@@ -417,9 +411,9 @@ def cosine_neardup_topk_ivf(
                 sm = np.floor((Pn @ Mn.T) * 1e6).astype(np.int64)
                 out += _local_topk(ip, im, sm, thr_micro, k)
             if out:
-                yield _topk_batch(out)
+                yield rows_batch(out, topk)
 
-    cand = joined.mapInArrow(score, _TOPK_SCHEMA)
+    cand = joined.mapInArrow(score, topk)
     w = Window.partitionBy("doc_id").orderBy(
         F.col("sim_micro").desc(), F.col("neighbor_id").asc()
     )
@@ -920,8 +914,7 @@ def pq_encode(
             if n == 0:
                 continue
             # raw (not unit) vectors: codebooks live in the input space
-            E = batch.column(1).flatten().to_numpy(zero_copy_only=False)
-            E = E.astype(np.float64).reshape(n, -1)
+            E = vectors(batch.column(1))
             codes = np.empty((n, m), dtype=np.int32)
             for i in range(m):
                 Ssub = E[:, i * sub : (i + 1) * sub]
@@ -1510,27 +1503,23 @@ def embedding_drift_by_cohort(
         cohort.alias("__a"), F.col("codes").alias("__codes")
     )
 
+    sums = StructType.fromDDL("__a boolean, __n bigint, __sums array<bigint>")
+
     def partials(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
-            n = batch.num_rows
-            if n == 0:
+            if batch.num_rows == 0:
                 continue
             # a NULL cohort flag counts as cohort B
             a = pc.fill_null(batch.column(0), False).to_numpy(zero_copy_only=False)
-            A = batch.column(1).flatten().to_numpy(zero_copy_only=False)
-            A = A.astype(np.int64).reshape(n, -1)
+            A = vectors(batch.column(1)).astype(np.int64)
             out = [
                 (flag, int(mask.sum()), A[mask].sum(axis=0).tolist())
                 for flag, mask in ((True, a), (False, ~a))
                 if mask.any()
             ]
-            yield pa.record_batch(
-                list(zip(*out)), names=["__a", "__n", "__sums"]
-            )
+            yield rows_batch(out, sums)
 
-    partial = z.mapInArrow(
-        partials, "__a boolean, __n bigint, __sums array<bigint>"
-    )
+    partial = z.mapInArrow(partials, sums)
     rows = (
         partial.select(
             "__a", "__n", F.posexplode("__sums").alias("dim", "__s")

@@ -72,7 +72,8 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
-# Per session, per key: [open scopes, value before the first of them].
+# Per session, per key: [value before the first open scope, open scopes as
+# [(scope token, value it set), ...] in entry order].
 _scopes: weakref.WeakKeyDictionary[SparkSession, dict[str, list]] = (
     weakref.WeakKeyDictionary()
 )
@@ -85,12 +86,15 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
     each key's prior value (or unset it if it had none), so a caller-owned
     session leaves the block as it entered.
 
-    Scopes may overlap on one session (two threads each running a streaming
-    query): each key is reference-counted, the first scope to enter saves
-    the prior value and the last to exit restores it; in between the key
-    holds the value the latest entrant set. The lock covers only the
-    bookkeeping, never the caller's block, because a ``foreachBatch``
-    callback inside it runs on another thread."""
+    Scopes may nest (a sweep scoping a key around a query that scopes it
+    again) or overlap on one session (two threads each running a
+    streaming query). Per key the value before the first open scope is
+    saved; a scope that exits drops its own entry and the key returns to
+    the value of the latest scope still open, or to the saved value when
+    none is. The lock covers only the bookkeeping, never the caller's
+    block, because a ``foreachBatch`` callback inside it runs on another
+    thread."""
+    token = object()
     taken = []
     try:
         with _scopes_lock:
@@ -101,8 +105,8 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
                         prior = spark.conf.get(k)
                     except Exception:
                         prior = None
-                    held[k] = [0, prior]
-                held[k][0] += 1
+                    held[k] = [prior, []]
+                held[k][1].append((token, v))
                 taken.append(k)
                 spark.conf.set(k, v)
         yield
@@ -110,13 +114,16 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
         with _scopes_lock:
             held = _scopes[spark]
             for k in taken:
-                held[k][0] -= 1
-                if held[k][0] == 0:
-                    prior = held.pop(k)[1]
-                    if prior is None:
-                        spark.conf.unset(k)
-                    else:
-                        spark.conf.set(k, prior)
+                prior, open_ = held[k]
+                open_[:] = [e for e in open_ if e[0] is not token]
+                if open_:
+                    spark.conf.set(k, open_[-1][1])
+                    continue
+                del held[k]
+                if prior is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, prior)
 
 
 def spread(df: DataFrame) -> DataFrame:

@@ -1,5 +1,5 @@
 """Session hygiene: ``scoped_conf`` leaves a shared session as it found it,
-also when two threads' scopes on one session overlap."""
+also when scopes on one session nest or two threads' scopes overlap."""
 
 from __future__ import annotations
 
@@ -48,4 +48,18 @@ def test_overlapping_scopes_restore_prior_value(spark):  # noqa: F811
     assert not any(t.is_alive() for t in threads)
     if errors:
         raise errors[0]
+    assert spark.conf.get(key) == prior
+
+
+def test_nested_scopes_restore_outer_value(spark):  # noqa: F811
+    """An inner scope on the same key (a partition sweep around a query
+    that scopes the key again) hands the outer block back its own value,
+    and the outer exit restores the prior one."""
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    outer = str(int(prior) + 3)
+    with scoped_conf(spark, {key: outer}):
+        with scoped_conf(spark, {key: "8"}):
+            assert spark.conf.get(key) == "8"
+        assert spark.conf.get(key) == outer
     assert spark.conf.get(key) == prior
