@@ -17,9 +17,9 @@ aggregation — which is exactly the split this module uses:
   count desc, then pair lexicographic).
 - The winning pair is folded into the vocab symbol arrays with a
   left-to-right greedy ``F.aggregate`` (non-overlapping, leftmost-first —
-  matching the reference algorithm), and the vocab is
-  ``localCheckpoint``-ed so lineage doesn't grow with merge rounds
-  (same discipline as operators/graph.py's iterative ops).
+  matching the reference algorithm), and the vocab is cut with a lazy
+  ``localCheckpoint`` (materialized by the next round's argmax collect) so
+  lineage doesn't grow with merge rounds.
 
 No Python touches per-row data; the driver sees only (pair, count)
 singletons and the merge table itself.
@@ -117,7 +117,7 @@ def bpe_train(
         vocab_counts(df, text_col)
         .withColumn("syms", initial_symbols("w"))
         .select("cnt", "syms")
-        .localCheckpoint()
+        .localCheckpoint(eager=False)  # every round's pair count reads it
     )
     merges: list[tuple[int, str, str, int]] = []
     for r in range(n_merges):
@@ -135,7 +135,7 @@ def bpe_train(
         merges.append((r + 1, a, b, int(cnt)))
         vocab = vocab.withColumn(
             "syms", merge_pair("syms", a, b)
-        ).localCheckpoint()
+        ).localCheckpoint(eager=False)
     return spark.createDataFrame(
         merges, "rank int, left string, right string, pair_cnt bigint"
     )

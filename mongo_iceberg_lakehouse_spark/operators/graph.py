@@ -17,8 +17,9 @@ Scale posture (the part naive DataFrame loops get wrong):
   the ranks and cuts the plan back to a leaf — plan size and recompute
   cost stay O(CHECKPOINT_EVERY).
 - **One shuffle per iteration.** Contributions are keyed by ``dst``; the
-  join of ranks onto edges reuses the edge cache (edges + out-degrees are
-  computed once and persisted, not re-derived per iteration).
+  join of ranks onto edges reads the stored edge table (edges +
+  out-degrees are computed once and cut with a lazy ``localCheckpoint``,
+  not re-derived per iteration).
 - **No driver-side graph.** Only the node count crosses to the driver
   (one scalar); ranks/edges stay distributed end to end, so the same loop
   runs on a 10^9-edge graph given executors.
@@ -42,9 +43,10 @@ def _symmetric_edges(
     edges: DataFrame, *, src: str = "src", dst: str = "dst",
     part_key: str = "dst",
 ) -> DataFrame:
-    """Distinct symmetric (src, dst) neighbor list, persisted and HASH-
-    PARTITIONED on ``part_key`` (r10 opt round). Two structural wins over
-    the previous ``und.union(und.flipped).distinct()``:
+    """Distinct symmetric (src, dst) neighbor list, cut with a lazy
+    ``localCheckpoint`` and HASH-PARTITIONED on ``part_key`` (r10 opt
+    round). Two structural wins over the previous
+    ``und.union(und.flipped).distinct()``:
 
     - ONE pass over the edge construction: both directions come from a
       2-element explode of each input edge, so an expensive upstream edge
@@ -52,10 +54,11 @@ def _symmetric_edges(
       build) is not executed twice for the two union branches (Catalyst
       does not dedupe the repeated subtree — PERF_NOTES §7).
     - The iteration loops join this frame on ``part_key`` EVERY round:
-      ``repartition(part_key)`` before the dedup means the cached frame's
-      outputPartitioning already satisfies the join (and, because
-      hash(dst) clusters (src, dst), the dropDuplicates too — one
-      exchange total), so no round re-shuffles the edge list.
+      ``repartition(part_key)`` before the dedup means the stored frame's
+      outputPartitioning (a checkpoint keeps it) already satisfies the
+      join (and, because hash(dst) clusters (src, dst), the
+      dropDuplicates too — one exchange total), so no round re-shuffles
+      the edge list.
 
     explode_outer: plain explode would trigger InferFiltersFromGenerate
     and re-inline the pair array into a size()>0 predicate (PERF_NOTES
@@ -74,7 +77,18 @@ def _symmetric_edges(
         .select(F.col("p.s").alias("src"), F.col("p.d").alias("dst"))
         .repartition(part_key)
         .dropDuplicates(["src", "dst"])
-        .persist()
+        .localCheckpoint(eager=False)
+    )
+
+
+def _directed_edges(edges: DataFrame) -> DataFrame:
+    """Distinct (src, dst) edges without self-loops, cut with a lazy
+    ``localCheckpoint`` because the loops below read them every round."""
+    return (
+        edges.select("src", "dst")
+        .where(F.col("src") != F.col("dst"))
+        .distinct()
+        .localCheckpoint(eager=False)
     )
 
 
@@ -93,27 +107,20 @@ def pagerank(
     # e feeds FOUR consumers (both node-set branches, the out-degree agg,
     # and the edge table) — without a cut the upstream edge construction
     # (often lag windows over a joined fact table) executes four times per
-    # warm-up action (PERF_NOTES §7); the lazy checkpoint stores the slim
-    # distinct (src, dst) rows once.
-    e = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    # action (PERF_NOTES §7); the lazy checkpoint stores the slim distinct
+    # (src, dst) rows once, and `nodes` re-derives from them each use.
+    e = _directed_edges(edges)
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
     )
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    # pre-partition the per-round join side on its key: the cached frame's
+    # pre-partition the per-round join side on its key: the stored frame's
     # outputPartitioning then satisfies every iteration's ranks join, so
     # no round re-shuffles the edge table (same idiom as _symmetric_edges)
-    ee = e.join(outdeg, "src").repartition("src").persist()
-    n = nodes.count()  # single scalar to the driver; also warms the cache
-    ee.count()
+    ee = e.join(outdeg, "src").repartition("src").localCheckpoint(eager=False)
+    n = nodes.count()  # single scalar to the driver
     base = (1.0 - damping) / n
 
     ranks = nodes.select("node", F.lit(1.0 / n).alias("pr"))
@@ -143,17 +150,9 @@ def pagerank(
             )
         )
         if (i + 1) % CHECKPOINT_EVERY == 0 and i + 1 < iterations:
-            # Truncate lineage: plan stays O(CHECKPOINT_EVERY) deep.
+            # eager: loop lineage bound (the next use is a join, not an
+            # action); the caller's action runs the remaining tail rounds
             ranks = ranks.localCheckpoint(eager=True)
-    # Eager-checkpoint the final ranks so the loop-local caches can be
-    # released before return (r11 opt round, memory hygiene — guide §5): a
-    # long-lived session composing many graph queries must not accumulate
-    # pinned edge/node blocks on the executors. The tail rounds execute
-    # exactly once either way (here instead of at the caller's first
-    # action); the checkpointed result no longer references nodes/ee.
-    ranks = ranks.localCheckpoint(eager=True)
-    nodes.unpersist()
-    ee.unpersist()
     return ranks
 
 
@@ -197,7 +196,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
             F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
             F.when(lower_first, F.col("deg_b")).otherwise(F.col("deg_a")).alias("deg_v"),
         )
-    ).persist()
+    ).localCheckpoint(eager=False)  # three consumers: both wedge sides + closing
     e1, e2 = oriented.alias("e1"), oriented.alias("e2")
     ahead = (F.col("e1.deg_v") < F.col("e2.deg_v")) | (
         (F.col("e1.deg_v") == F.col("e2.deg_v")) & (F.col("e1.v") < F.col("e2.v"))
@@ -226,7 +225,7 @@ def label_propagation(
     label — fully deterministic, so the result is engine-independent and
     SQL-mirrorable (unrolled CTEs, same posture as :func:`pagerank`).
 
-    Scale shape: the symmetric neighbor list is built once and persisted;
+    Scale shape: the symmetric neighbor list is built once and stored;
     each round is ONE shuffle (neighbor-label counts keyed by node) plus a
     per-node top-1 window over the per-(node,label) partial counts — the
     count aggregation is map-side combined, so hub nodes ship one row per
@@ -235,7 +234,6 @@ def label_propagation(
     growing self-referential plan exactly as in :func:`pagerank`.
     """
     nbr = _symmetric_edges(edges, part_key="dst")
-    nbr.count()  # warm the cache before the iteration loop
     labels = nbr.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -261,12 +259,8 @@ def label_propagation(
             ).alias("label")
         )
         if (i + 1) % CHECKPOINT_EVERY == 0 and i + 1 < iterations:
+            # eager: loop lineage bound, as in pagerank
             labels = labels.localCheckpoint(eager=True)
-    # Final eager checkpoint + unpersist: same memory hygiene as pagerank
-    # (the r10 advice item — connected_components already released sym;
-    # this releases nbr once the tail rounds are materialized).
-    labels = labels.localCheckpoint(eager=True)
-    nbr.unpersist()
     return labels.select("node", F.col("label").alias("community"))
 
 
@@ -300,7 +294,6 @@ def connected_components(
     exactly as in :func:`pagerank` / :func:`label_propagation`.
     """
     sym = _symmetric_edges(edges, src=src, dst=dst, part_key="dst")
-    sym.count()
     p = (
         sym.groupBy(F.col("src").alias("node"))
         .agg(F.min("dst").alias("mn"))
@@ -333,7 +326,6 @@ def connected_components(
         if s == prev_sum:
             break
         prev_sum = s
-    sym.unpersist()
     return p
 
 
@@ -357,8 +349,7 @@ def bfs_levels(
     side of the anti-join. ``localCheckpoint`` bounds the union-grown
     plan depth, as in :func:`pagerank`.
     """
-    e = edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct().persist()
-    e.count()
+    e = _directed_edges(edges)
     dist = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct().select(
         "node", F.lit(0).alias("dist")
     )
@@ -376,10 +367,7 @@ def bfs_levels(
         dist = dist.unionByName(new)
         frontier = new.select("node")
         if i % CHECKPOINT_EVERY == 0 and i < max_hops:
+            # eager: loop lineage bound, as in pagerank
             dist = dist.localCheckpoint(eager=True)
             frontier = frontier.localCheckpoint(eager=True)
-    # Same memory hygiene as pagerank/label_propagation: materialize the
-    # tail rounds once, then release the cached edge list.
-    dist = dist.localCheckpoint(eager=True)
-    e.unpersist()
     return dist

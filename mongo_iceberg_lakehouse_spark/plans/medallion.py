@@ -15,8 +15,8 @@ Reference behavior being reproduced (SURVEY.md §0, §2):
 Every step is a lazy DataFrame transform; Catalyst prunes untouched columns
 and pushes the aggregation partial/final. At 100 TB the only materialization
 points are the table writes, which should be partitioned (catalog.py note);
-we also ``cache()`` between count-guard and write so the source isn't scanned
-twice (the reference re-scans — SURVEY.md §4 "caching: missing").
+``run_pipeline``'s lazy ``localCheckpoint`` of bronze scans the source once
+for its four consumers (the reference re-scans — SURVEY.md §4).
 """
 
 from __future__ import annotations
@@ -38,8 +38,7 @@ def bronze_ingest(spark: SparkSession, json_path: str) -> DataFrame:
     raw = ingest_json(spark, json_path)
     if not raw.columns or raw.isEmpty():
         raise EmptySourceError(f"no documents found at {json_path}")
-    df = with_object_id(raw)
-    return df.cache()  # guard + downstream write: scan once
+    return with_object_id(raw)
 
 
 def silver_transform(
@@ -92,7 +91,8 @@ def run_pipeline(
     verified by COUNT(*) re-read, matching the reference's post-write checks
     (mongo_to_iceberg.py:144-146).
     """
-    bronze = bronze_ingest(spark, json_path)
+    # four consumers: the bronze write, its count check, silver, gold
+    bronze = bronze_ingest(spark, json_path).localCheckpoint(eager=False)
     silver = silver_transform(bronze)
     gold = gold_city_sales_report(silver)
     if persist_tables:

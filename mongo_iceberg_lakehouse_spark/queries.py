@@ -5141,8 +5141,9 @@ def _pagerank_handoff_oracle(iterations: int = 5) -> str:
     "'handoff' graph: an edge u->v when v's order immediately follows u's "
     "within the same nation OR the same market segment (lag over two "
     "orderings, union, distinct). Covers the iterative-algorithm class: "
-    "operators/graph.py caches edges once, shuffles once per iteration "
-    "(contributions keyed by dst), and localCheckpoints ranks every 2 "
+    "operators/graph.py stores edges once (lazy localCheckpoint), "
+    "shuffles once per iteration (contributions keyed by dst), and "
+    "localCheckpoints ranks every 2 "
     "rounds so plan depth and recompute stay bounded — the standard "
     "failure mode of naive DataFrame loops. Oracle = the identical "
     "recurrence unrolled into per-iteration CTEs.",
@@ -8693,6 +8694,7 @@ def sink_jdbc_gold_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         back = read_jdbc(
             spark, url, "gold_report", driver=DERBY_EMBEDDED_DRIVER
         )
+        # eager: the scratch database is removed before return
         return back.localCheckpoint(eager=True)
 
 
@@ -9899,10 +9901,10 @@ def maintenance_compact_small_files(
         # checkpointed blocks.
         before = read_snapshot(
             spark, base, "orders_c", stats["src_version"]
-        ).localCheckpoint()
+        ).localCheckpoint(eager=True)
         after = read_snapshot(
             spark, base, "orders_c", stats["new_version"]
-        ).localCheckpoint()
+        ).localCheckpoint(eager=True)
         parity = (
             before.exceptAll(after)
             .agg(F.count(F.lit(1)).alias("__d_ab"))
@@ -11382,7 +11384,7 @@ def tokenizer_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample = (
         d.orderBy(F.md5(F.col("doc_id").cast("string")), F.col("doc_id"))
         .limit(200)
-        .localCheckpoint()
+        .localCheckpoint(eager=False)  # two consumers: train + reference vocab
     )
     got = [
         (r["rank"], r["left"], r["right"], int(r["pair_cnt"]))
@@ -11450,7 +11452,7 @@ def tokenizer_bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         bpe.vocab_counts(d)
         .withColumn("syms", bpe.initial_symbols("w"))
         .select("w", "cnt", "syms")
-        .localCheckpoint()  # two consumers: corpus encode + anchor slice
+        .localCheckpoint(eager=False)  # two consumers: corpus encode + anchor slice
     )
     encoded = bpe.apply_merges(vocab, merges).select(
         "w", F.size("syms").alias("__n_sub")

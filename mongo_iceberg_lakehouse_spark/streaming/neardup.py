@@ -97,7 +97,8 @@ def dedup_batch_against_store(
     sig_dir = os.path.join(store_dir, "sigs")
     band_dir = os.path.join(store_dir, "bands")
 
-    sigs = _signatures(batch, num_hashes, shingle_n).localCheckpoint()
+    # shared by the band join, the store verify and the survivor append
+    sigs = _signatures(batch, num_hashes, shingle_n).localCheckpoint(eager=False)
     # posexplode_outer: plain explode's inferred size()>0 filter would
     # re-evaluate band_hashes per row (always `bands` elements, so outer
     # semantics are identical)
@@ -153,7 +154,8 @@ def dedup_batch_against_store(
             "doc_id", "batch",
             F.coalesce(~F.col("__dup"), F.lit(True)).alias("survived"),
         )
-        .localCheckpoint()  # decide BEFORE the store append below mutates state
+        # eager: decided BEFORE the store append below mutates state
+        .localCheckpoint(eager=True)
     )
 
     survivor_sigs = sigs.join(
@@ -214,4 +216,5 @@ def run_incremental_neardup_available_now(
             .writeStream.foreachBatch(process)
             .option("checkpointLocation", os.path.join(root, "ckpt")),
         )
+        # eager: the scratch root is removed before return
         return spark.read.parquet(out_dir).localCheckpoint(eager=True)

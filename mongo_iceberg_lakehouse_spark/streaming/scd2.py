@@ -148,4 +148,5 @@ def run_scd2_stream_available_now(
         )
         latest = _latest_dim(store_dir)
         assert latest is not None, "stream produced no batches"
+        # eager: the scratch root is removed before return
         return spark.read.parquet(latest).localCheckpoint(eager=True)

@@ -83,6 +83,7 @@ def run_gold_report_to_jdbc(spark, sf_dir: str) -> "object":
         back = read_jdbc(
             spark, url, "gold_report", driver=DERBY_EMBEDDED_DRIVER
         )
+        # eager: the scratch database is removed before return
         return back.localCheckpoint(eager=True)
 
 

@@ -13,6 +13,11 @@ Python stages have one idiom: Arrow batches (``mapInArrow`` /
 and no pandas import appears in the package, except the streaming-state
 operator (``streaming/stateful.py``), whose ``applyInPandasWithState`` has
 no Arrow counterpart short of a ``transformWithState`` migration.
+
+A frame with several consumers is shared one way: ``localCheckpoint`` with
+an explicit ``eager=`` (lazy unless a temp root, a loop's lineage bound or a
+side effect forces the frame to be decided first). No ``persist``, ``cache``,
+``unpersist`` or reliable ``checkpoint`` call appears in the package.
 """
 
 from __future__ import annotations
@@ -224,3 +229,56 @@ def test_python_stages_are_arrow_only():
         if p != exempt and (sites := _pandas_sites(p.read_text()))
     }
     assert not found, f"pandas Python stages (file: [(line, what)]): {found}"
+
+
+SHARE_CALLS = ("persist", "cache", "unpersist", "checkpoint")
+
+
+def _share_sites(source: str) -> list[tuple[int, str]]:
+    """``(line, what)`` for every ``.persist(`` / ``.cache(`` /
+    ``.unpersist(`` / ``.checkpoint(`` call and every ``localCheckpoint``
+    call that does not spell out ``eager=``."""
+    out = []
+    for node in ast.walk(ast.parse(source)):
+        if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+            continue
+        name = node.func.attr
+        if name in SHARE_CALLS:
+            out.append((node.lineno, name))
+        elif name == "localCheckpoint" and not any(
+            k.arg == "eager" for k in node.keywords
+        ):
+            out.append((node.lineno, "localCheckpoint without eager="))
+    return sorted(out)
+
+
+def test_detector_finds_share_sites():
+    src = (
+        "def f(df):\n"
+        "    'a docstring naming df.persist() is no call'\n"
+        "    a = df.persist()\n"
+        "    b = df.cache()\n"
+        "    a.unpersist()\n"
+        "    c = df.checkpoint(eager=False)\n"
+        "    d = df.localCheckpoint()\n"
+        "    e = df.localCheckpoint(True)\n"
+        "    g = df.localCheckpoint(eager=False)\n"
+        "    return spark.catalog.isCached('t')\n"
+    )
+    assert _share_sites(src) == [
+        (3, "persist"),
+        (4, "cache"),
+        (5, "unpersist"),
+        (6, "checkpoint"),
+        (7, "localCheckpoint without eager="),
+        (8, "localCheckpoint without eager="),
+    ]
+
+
+def test_frames_are_shared_by_local_checkpoint_only():
+    found = {
+        str(p.relative_to(PACKAGE_DIR)): sites
+        for p in sorted(PACKAGE_DIR.rglob("*.py"))
+        if (sites := _share_sites(p.read_text()))
+    }
+    assert not found, f"other frame-sharing calls (file: [(line, what)]): {found}"

@@ -1,8 +1,9 @@
 """Focused regression tests for the round-11 optimization changes.
 
-1. Iterative graph loops release their loop-local caches before return
-   (VERDICT r10 item 7 / ADVICE r10): only the per-run localCheckpoint
-   blocks may remain pinned; the persisted edge/node frames must not.
+1. Iterative graph loops pin a bounded number of blocks per run
+   (VERDICT r10 item 7 / ADVICE r10): only their localCheckpoint frames
+   (the stored edge tables and the mid-loop lineage cuts) may remain, and
+   no operator leaves an entry in the session's cache manager.
 2. _pair_value_join's broadcast path reunites on the SAME exchange it
    spreads on (hash(id_a,id_b), not round-robin + second shuffle).
 3. The ann/maintenance parity booleans compute inside the returned plan
@@ -17,8 +18,14 @@ from pyspark.sql import functions as F
 from mongo_iceberg_lakehouse_spark.operators.dedup import _pair_value_join
 from mongo_iceberg_lakehouse_spark.operators.graph import (
     bfs_levels,
+    connected_components,
     label_propagation,
     pagerank,
+    triangle_count,
+)
+from mongo_iceberg_lakehouse_spark.plans.medallion import (
+    bronze_ingest,
+    run_pipeline,
 )
 
 
@@ -58,6 +65,25 @@ def test_graph_loops_release_caches(spark, edges):
     bfs_levels(edges, seeds, max_hops=4).count()
     assert _n_persistent(spark) <= 3  # mid dist/frontier + final, no e
     _clear(spark)
+
+
+def test_shared_frames_leave_no_cache_entries(spark, edges, orders_json_path):
+    # A frame is shared by localCheckpoint, never by persist/cache, so no
+    # operator leaves a CacheManager entry behind in the caller's session.
+    spark.catalog.clearCache()
+    seeds = spark.createDataFrame([(1,)], "node long")
+    runs = [
+        pagerank(edges, iterations=3),
+        triangle_count(edges),
+        label_propagation(edges, iterations=3),
+        connected_components(edges),
+        bfs_levels(edges, seeds, max_hops=3),
+        bronze_ingest(spark, orders_json_path),
+        *run_pipeline(spark, orders_json_path).values(),
+    ]
+    for df in runs:
+        df.count()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_pair_value_join_reunites_on_spread_exchange(spark):

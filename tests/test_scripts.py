@@ -216,3 +216,30 @@ def test_query_sets_declared_only_at_register():
         if (lines := _name_lists(p.read_text(), set(REGISTRY)))
     }
     assert not found, f"hand-kept query-name lists (file: lines): {found}"
+
+
+def test_plan_identity_ignores_expand_group_order():
+    from scripts.plan_identity import normalize
+
+    # two JVM runs of one multi-DISTINCT aggregate: same Expand groups,
+    # listed and numbered in a different order
+    run1 = (
+        "Aggregate [count(pri) FILTER (WHERE (gid = 1)) AS a, "
+        "count(seg) FILTER (WHERE (gid = 2)) AS b, "
+        "first(n, true) FILTER (WHERE (gid = 0)) AS c]\n"
+        "+- Expand [[null, null, 0, n#12], [pri#3, null, 1, null], "
+        "[null, seg#4, 2, null]], [pri#5, seg#6, gid#7, n#8]\n"
+    )
+    run2 = (
+        "Aggregate [count(pri) FILTER (WHERE (gid = 2)) AS a, "
+        "count(seg) FILTER (WHERE (gid = 1)) AS b, "
+        "first(n, true) FILTER (WHERE (gid = 0)) AS c]\n"
+        "+- Expand [[null, null, 0, n#22], [null, seg#24, 1, null], "
+        "[pri#23, null, 2, null]], [pri#25, seg#26, gid#27, n#28]\n"
+    )
+    assert normalize(run1) == normalize(run2)
+    # a real change (another aggregate, or a group read by the wrong
+    # filter) still differs
+    assert normalize(run1.replace("count(seg)", "sum(seg)")) != normalize(run2)
+    swapped = run1.replace("(gid = 1)) AS a", "(gid = 2)) AS a")
+    assert normalize(swapped) != normalize(run2)
